@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, collect_list, sort_array, struct}
 import graft.operators.{CoOccurrence, CrystalBall}
 import graft.sources.{BasketSource, GoldenSink}
 
@@ -39,10 +38,9 @@ object CrystalBallApp {
     // compute the normalized relation ONCE; the three writes reuse it
     // (no per-write recomputation of the scan + window + aggregation)
     val probs = CrystalBall.normalize(CoOccurrence.counts(baskets)).persist()
-    val stripes = probs
-      .groupBy(col("product"))
-      .agg(sort_array(collect_list(struct(col("neighbor"), col("prob"))))
-        .as("stripe"))
+    // stripeShape's global sort is dropped by the optimizer under the
+    // fixed-cut layout below, which re-sorts within each partition
+    val stripes = CrystalBall.stripeShape(probs)
     // range-partition to the reference file layout, sort within each
     // partition (the reference's in-file order), then format
     def layout(df: DataFrame, n: Int) =

@@ -52,36 +52,22 @@ object GoldenSink {
     })
 
   /** Exact fixed-cut range layout: row goes to partition i iff its numeric
-    * product id is < cuts(i) (last partition takes the rest). A custom RDD
-    * `Partitioner` is the one place sampling-free fixed cuts are
-    * expressible — a justified RDD seam for a test/compat-only sink.
-    * Non-numeric ids go to partition 0 instead of crashing (the
-    * reference's `Integer.parseInt` would throw, SURVEY.md §7 phase 1).
+    * product id is < cuts(i) (last partition takes the rest). The bucket is
+    * one Catalyst expression and `repartitionById` ships each row to it —
+    * no sampling (unlike `repartitionByRange`), and the rows stay in the
+    * UnsafeRow shuffle. Ids are read as `trim(cast(product AS STRING))`
+    * parsed to int, so an int or bigint column partitions by its value;
+    * non-numeric, out-of-int-range and null ids go to partition 0 instead
+    * of crashing (the reference's `Integer.parseInt` would throw, SURVEY.md
+    * §7 phase 1). Unlike `Integer.parseInt`, only ASCII digits parse.
     */
   def rangePartitionedAt(pairs: DataFrame, cuts: Seq[Int]): DataFrame = {
-    val spark = pairs.sparkSession
-    val schema = pairs.schema
-    val idx = schema.fieldIndex("product")
-    val sortedCuts = cuts.sorted.toArray
-    val nParts = sortedCuts.length + 1
-    val rdd = pairs.rdd
-      .map { r =>
-        // String.valueOf(r.get(idx)) rather than getString: a numeric-typed
-        // product column must range-partition by its value, not throw a
-        // ClassCastException that Try would silently turn into partition 0
-        val p = scala.util.Try(String.valueOf(r.get(idx)).trim.toInt)
-          .getOrElse(Int.MinValue)
-        val b = sortedCuts.indexWhere(p < _) match {
-          case -1 => nParts - 1
-          case i  => i
-        }
-        (b, r)
-      }
-      .partitionBy(new org.apache.spark.Partitioner {
-        override def numPartitions: Int = nParts
-        override def getPartition(key: Any): Int = key.asInstanceOf[Int]
-      })
-      .values
-    spark.createDataFrame(rdd, schema)
+    val id = coalesce(
+      trim(col("product").cast("string")).try_cast("int"), lit(Int.MinValue))
+    val sortedCuts = cuts.sorted
+    val bucket = sortedCuts.zipWithIndex.foldRight(lit(sortedCuts.size)) {
+      case ((cut, i), rest) => when(id < cut, i).otherwise(rest)
+    }
+    pairs.repartitionById(sortedCuts.size + 1, bucket)
   }
 }

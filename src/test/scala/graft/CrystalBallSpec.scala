@@ -6,45 +6,15 @@ import graft.sources.BasketSource
 import graft.operators.{CoOccurrence, CrystalBall}
 
 /** Golden-parity + edge-case suite for the flagship crystal-ball semantics
-  * (SURVEY.md §5): results must equal the reference's committed outputs
-  * under /root/reference/output/, parsed (never byte-compared — stripe map
-  * order in the reference is Java HashMap order).
+  * (SURVEY.md §5): results must equal the recorded expectations for the
+  * reference fixture ([[Golden]]), parsed (never byte-compared — stripe
+  * map order in the reference is Java HashMap order).
   */
 class CrystalBallSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = Specs.spark
-  import java.nio.file.{Files, Paths}
-  import scala.jdk.CollectionConverters._
 
-  private val fixtureLines = Seq(
-    "Mary 34 56 29 12 34 56 92 29 34 12",
-    "Kelly 92 29 12 34 79 29 56 12 34 18")
-
-  /** Parse `[a, b]\tprob` lines from the Pairs golden output. */
-  private def goldenPairs: Map[(String, String), Double] = {
-    val dir = Paths.get("/root/reference/output/CrystalBallPair")
-    val re = """\[(\S+), (\S+)\]\t(\S+)""".r
-    Files.list(dir).iterator().asScala
-      .filter(_.getFileName.toString.startsWith("part-"))
-      .flatMap(p => Files.readAllLines(p).asScala)
-      .collect { case re(a, b, pr) => (a, b) -> pr.toDouble }
-      .toMap
-  }
-
-  /** Parse `a\t{(b, prob), …, }` stripe lines (Stripes + Hybrid goldens). */
-  private def goldenStripes(variant: String): Map[String, Map[String, Double]] = {
-    val dir = Paths.get(s"/root/reference/output/$variant")
-    val entryRe = """\((\S+), ([0-9.Ee+-]+)\)""".r
-    Files.list(dir).iterator().asScala
-      .filter(_.getFileName.toString.startsWith("part-"))
-      .flatMap(p => Files.readAllLines(p).asScala)
-      .filter(_.contains("\t"))
-      .map { line =>
-        val Array(k, rest) = line.split("\t", 2)
-        k -> entryRe.findAllMatchIn(rest)
-          .map(m => m.group(1) -> m.group(2).toDouble).toMap
-      }.toMap
-  }
+  private val fixtureLines = Golden.input
 
   private def computedPairs: Map[(String, String), Double] =
     CrystalBall.pairProbabilities(BasketSource.fromLines(spark, fixtureLines))
@@ -53,12 +23,23 @@ class CrystalBallSpec extends AnyFunSuite {
       .toMap
 
   test("pair probabilities exactly match CrystalBallPair goldens") {
-    val golden = goldenPairs
+    val golden = Golden.pairs
     val got = computedPairs
-    assert(golden.nonEmpty && golden.size == 34, s"golden size ${golden.size}")
+    assert(golden.size == 34, s"golden size ${golden.size}")
+    assert(golden.keySet.flatMap { case (a, b) => Set(a, b) }.size == 7)
+    // the recorded fractions are self-consistent: each product's numerators
+    // add up to its denominator, and the printed double is the fraction
+    golden.groupBy(_._1._1).foreach { case (p, row) =>
+      assert(row.values.map(_.den).toSet.size == 1, s"product $p denominators")
+      assert(row.values.map(_.num).sum == row.values.head.den, s"product $p numerators")
+    }
+    golden.foreach { case (k, v) =>
+      assert(v.printed.toDouble == v.num.toDouble / v.den, s"pair $k fraction")
+    }
     assert(got.keySet == golden.keySet)
     golden.foreach { case (k, v) =>
-      assert(got(k) == v, s"pair $k: got ${got(k)}, golden $v") // exact doubles
+      assert(got(k) == v.num.toDouble / v.den, // exact doubles
+        s"pair $k: got ${got(k)}, golden ${v.num}/${v.den}")
     }
   }
 
@@ -70,8 +51,11 @@ class CrystalBallSpec extends AnyFunSuite {
         r.getSeq[org.apache.spark.sql.Row](1)
           .map(e => e.getString(0) -> e.getDouble(1)).toMap)
       .toMap
+    val fromPairs = Golden.pairs.groupBy(_._1._1).map { case (p, row) =>
+      p -> row.map { case ((_, b), v) => b -> v.num.toDouble / v.den } }
     for (variant <- Seq("CrystalBallStripe", "CrystalBallHybrid")) {
-      val golden = goldenStripes(variant)
+      val golden = Golden.stripes(variant)
+      assert(golden == fromPairs, s"$variant goldens disagree with pairs.tsv")
       assert(golden.keySet == got.keySet, s"$variant products differ")
       golden.foreach { case (p, stripe) =>
         assert(got(p) == stripe, s"$variant stripe for $p differs")
