@@ -11,32 +11,41 @@ object Bench {
     if (root.exists()) size(root) / (1024L * 1024L) else 0L
   }
 
-  /** The r12 shuffle-partition rule: one shuffle partition per ~45 MB
-    * of SOURCE parquet, floored at the core count and capped at 1024 —
-    * partition count is a cluster config that scales with data, not a
-    * plan property, and this makes the scaling a default instead of an
-    * audit-only knob. The constant is CALIBRATED BY EXPERIMENT, not by
-    * the r11 single-query extrapolation (full receipts in BENCH_NOTES
-    * r12): at the 17 MB bench corpus a static 128 regressed
-    * ngram_jaccard 4×; at the 1.4 GB x100 corpus an 11 MB/partition
-    * rule (131 partitions) was a NET LOSS across the 6-query head set —
-    * entity_clusters 24 → 68 s, dedup_clusters 19 → 54 s, page_rank
-    * 50 → 57 s, cooccur_counts unchanged — because iterative and
-    * bounded-intermediate operators shuffle far less than the corpus
-    * and pay per-partition overhead every round. 45 MB/partition keeps
-    * the floor through the largest corpus this host can audit and
-    * engages beyond it; on a real cluster the finer mechanism is AQE
-    * (high initialPartitionNum + advisory size + the
-    * canChangeCachedPlanOutputPartitioning flag set below) rather than
-    * static counts. SPARK_GRAFT_SHUFFLE overrides for experiments.
+  /** The shuffle-partition rule: one partition per ~45 MB of source
+    * parquet, floored at `floor` and capped at 1024, so the partition
+    * count scales with data. 45 MB is calibrated by experiment on the
+    * bench corpus and the x100 audit corpus (BENCH_NOTES r12): finer
+    * rules lost on iterative operators, which shuffle far less than the
+    * corpus and pay per-partition overhead every round. On a real
+    * cluster AQE (with the cached-plan flag set below) is the finer
+    * mechanism.
     */
-  private[graft] def scaledShufflePartitions(dir: String, cpus: Int): Int =
-    math.max(cpus, math.min(1024L, dirMB(dir) / 45L).toInt)
+  private[graft] def partitionsForMB(mb: Long, floor: Int): Int =
+    math.max(floor, math.min(1024L, mb / 45L).toInt)
 
-  /** The ONE engine session posture, shared by every main (Bench,
-    * Verify, Soak, ScaleAudit) so a config fix can never miss a caller:
+  /** [[partitionsForMB]] of a corpus directory, floored at the core count. */
+  private[graft] def scaledShufflePartitions(dir: String, cpus: Int): Int =
+    partitionsForMB(dirMB(dir), cpus)
+
+  /** A failure's report for stderr: the exception's class and message,
+    * its root cause's class and message, and the root cause's top 5
+    * frames. */
+  private[graft] def describeFailure(e: Throwable): String = {
+    def line(t: Throwable) = s"${t.getClass.getName}: ${t.getMessage}"
+    // bounded: a cause chain may loop back on itself
+    val root = Iterator.iterate(e)(_.getCause)
+      .takeWhile(_ != null).take(64).toSeq.last
+    (Seq(line(e), s"root cause ${line(root)}") ++
+      root.getStackTrace.take(5).map(f => s"  at $f")).mkString("\n")
+  }
+
+  /** The ONE engine session posture: every SparkSession the project
+    * configures is built here, so a config fix can never miss a caller.
+    * Callers: the mains Bench, Verify, Soak, ScaleAudit, Explain and
+    * CrystalBallApp, the test suite's `Specs`, and perfbench.
     *  - `shufflePartitions`: the sf-proportional default (callers pass
-    *    [[scaledShufflePartitions]] or the SPARK_GRAFT_SHUFFLE pin);
+    *    [[scaledShufflePartitions]], the SPARK_GRAFT_SHUFFLE pin, or
+    *    the core count);
     *  - cached-plan AQE re-partitioning ON: iterative operators cache
     *    relations whose per-round shuffles are far smaller than the
     *    corpus, and without the flag the cache pins an oversized
@@ -136,7 +145,7 @@ object Bench {
       val ok =
         try { fn(spark, sfDir).count(); true }
         catch { case e: Throwable =>
-          System.err.println(s"[bench] $name FAILED: ${e.getMessage}"); false
+          System.err.println(s"[bench] $name FAILED: ${describeFailure(e)}"); false
         }
       // measure before cache teardown so clearCache cost isn't charged
       // to the query

@@ -27,13 +27,21 @@ object CrystalBallApp {
       sys.exit(2)
     }
     val Array(input, output) = args
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]"))
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val spark = Bench.sessionBuilder(
+        sys.env.getOrElse("SPARK_MASTER", s"local[$cpus]"), cpus)
       .appName("crystal-ball")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    try run(spark, input, output)
+    finally spark.stop()
+  }
+
+  /** Read the basket text at `input` and write the three reference
+    * outputs under `output`: `CrystalBallPair` (3 part files),
+    * `CrystalBallStripe` (3) and `CrystalBallHybrid` (2).
+    */
+  def run(spark: SparkSession, input: String, output: String): Unit = {
     val baskets = BasketSource.fromText(spark, input)
     // compute the normalized relation ONCE; the three writes reuse it
     // (no per-write recomputation of the scan + window + aggregation)
@@ -55,6 +63,5 @@ object CrystalBallApp {
     GoldenSink.writeText(GoldenSink.stripeLines(layout(stripes, 2)),
       s"$output/CrystalBallHybrid")
     probs.unpersist()
-    spark.stop()
   }
 }

@@ -79,12 +79,12 @@ object ScaleAudit {
     if (args.headOption.contains("dupheavy")) {
       val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
       // the replicated corpus is DupReplicas× the sf0.01 parquet —
-      // apply the default 45MB-per-partition rule to its LOGICAL volume
+      // apply the default partition rule to its LOGICAL volume
       val spark = Bench.sessionBuilder(s"local[$cpus]",
           sys.env.getOrElse("SPARK_GRAFT_SHUFFLE",
-            math.max(cpus.toInt, math.min(1024L,
+            Bench.partitionsForMB(
               Bench.dirMB("/root/testdata/sf0.01/documents.parquet") *
-                DupReplicas / 45L).toInt).toString))
+                DupReplicas, cpus.toInt).toString))
         .getOrCreate()
       spark.sparkContext.setLogLevel("WARN")
       dupHeavyProbe(spark)

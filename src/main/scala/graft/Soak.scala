@@ -52,7 +52,7 @@ object Soak {
         try fn(spark, sfDir).count()
         catch { case e: Throwable =>
           failed += 1
-          System.err.println(s"[soak] $name failed: ${e.getMessage}")
+          System.err.println(s"[soak] $name failed: ${Bench.describeFailure(e)}")
         }
         // NOTE: deliberately NO clearCache — the soak exists to prove
         // the operator-scoped release discipline holds without it.
@@ -95,7 +95,7 @@ object Soak {
         } else println(s"[soak-audit] $name ok ($n rows)")
       } catch { case e: Throwable =>
         auditFailed += 1
-        System.err.println(s"[soak-audit] $name failed: ${e.getMessage}")
+        System.err.println(s"[soak-audit] $name failed: ${Bench.describeFailure(e)}")
       }
     }
     println(s"""{"soak_audit_queries":${SparkEntry.auditQueries.size},"audit_failed":$auditFailed}""")

@@ -23,7 +23,7 @@ object Verify {
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        System.err.println(s"[verify] $name failed: ${Bench.describeFailure(e)}")
       }
       finally {
         spark.catalog.clearCache() // per-query operator caches

@@ -217,13 +217,7 @@ object VectorFunctions {
       spark.sessionState.functionRegistry.createOrReplaceTempFunction(
         "sorted_intersect_n",
         exprs => SortedIntersectSize(exprs(0), exprs(1)), "scala_udf")
-      // SPARK_GRAFT_NO_FOLD_REWRITE: bench-experiment kill switch only
-      // (r13 verdict asked the rule's always-on optimizer-walk cost to
-      // be ruled in/out of the fleet-wide drift) — operators never
-      // depend on the rewrite for correctness, only for the ~20x
-      // codegen'd hot loop, so disabling it is measurement-safe
-      if (!sys.env.contains("SPARK_GRAFT_NO_FOLD_REWRITE") &&
-          !spark.experimental.extraOptimizations
+      if (!spark.experimental.extraOptimizations
           .contains(graft.optimizer.RewriteVectorFolds)) {
         spark.experimental.extraOptimizations =
           spark.experimental.extraOptimizations :+

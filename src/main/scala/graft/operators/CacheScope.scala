@@ -86,12 +86,6 @@ object CacheScope {
     val spark = df.sparkSession
     val persisted = df.persist(level)
     if (eager) persisted.queryExecution.toRdd.count()
-    // SPARK_GRAFT_NO_SELF_RELEASE: bench-experiment kill switch only
-    // (r13 verdict: rule the armed listeners' per-action sameResult
-    // walks in/out of the fleet-wide drift). Falls back to the r12
-    // contract — blocks live until the caller's clearCache — which the
-    // bench harness already issues after every timed run.
-    if (sys.env.contains("SPARK_GRAFT_NO_SELF_RELEASE")) return persisted
     val marker = persisted.queryExecution.analyzed
     val mgr = spark.listenerManager
     val done = new java.util.concurrent.atomic.AtomicBoolean(false)

@@ -41,26 +41,14 @@ object Dedup {
   private[graft] def shingles(documents: DataFrame): DataFrame = {
     val spark = documents.sparkSession
     import spark.implicits._
-    // r18 (guide §2.6 idle capacity — the setsim_join fix generalized):
-    // documents.parquet scans as ONE partition at bench SF (row-group
-    // bound), so the shingle flatMap, the md5+16-hash minhash projection
-    // and every broadcast-joined span above them ran single-task while
-    // the other cores idled. An explicit repartition at the session's
-    // data-proportional shuffle width (AQE cannot coalesce a
-    // user-specified count) distributes the whole downstream
-    // CPU-heavy/byte-light pipeline; the exchange moves only (doc_id,
-    // text). Measured at sf0.1/32c, interleaved on/off bench pairs
-    // (min of 2 runs each way, calib 0.26-0.50): ngram_jaccard
-    // 2.61 -> 1.99 s, ngram_containment 2.84 -> 2.06, lsh_recall
-    // 2.88 -> 2.25, lsh_scurve 5.09 -> 4.61; the dedup/minhash
-    // consumers moved within noise both ways.
-    // SPARK_GRAFT_NARROW_SHINGLES: bench-experiment kill switch only
-    // (the SPARK_GRAFT_NO_SELF_RELEASE pattern) — restores the narrow
-    // scan so the width win stays re-measurable against host drift.
+    // documents.parquet can scan as one partition (one row group), so
+    // spread the CPU-heavy shingle and minhash spans above it at the
+    // session's shuffle width; the exchange moves only (doc_id, text),
+    // and AQE cannot coalesce an explicit count. Receipts:
+    // OPTIMIZATION_r18.md.
     val shufP = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val in = documents.select(col("doc_id"), col("text"))
-    (if (sys.env.contains("SPARK_GRAFT_NARROW_SHINGLES")) in
-     else in.repartition(shufP, col("doc_id"))).as[(Long, String)]
+    documents.select(col("doc_id"), col("text"))
+      .repartition(shufP, col("doc_id")).as[(Long, String)]
       .flatMap { case (id, text) =>
         // split(" ", -1): KEEP trailing empty tokens — Java's 1-arg split
         // drops them, but both Catalyst's split() and the oracle's

@@ -43,25 +43,15 @@ object Similarity {
     * any pairwise join) — mirrors the oracle's `n` CTE; the pairwise stage
     * divides by the precomputed product of norms.
     */
-  /** r18 (guide §2.6, the shingles width fix applied to the vector
-    * family): embeddings.parquet scans as ONE partition at bench SF, so
-    * the brute-force dot-product spans above it ran single-task.
-    * Explicit width at the session's data-proportional shuffle count
-    * distributes them; inputs that are already limit-bounded shuffle a
-    * handful of rows, which is noise. Applied to [[sideWithNorm]] (the
-    * exact-baseline corpus side) ONLY: widening [[vectorsWithNorm]] too
-    * was measured and LOST — the IVF serve family reads pruned bucketed
-    * index scans where the exchange is pure overhead (interleaved
-    * pairs: ann_lifecycle_serve 1.46 -> 3.21 s, ann_index_compacted
-    * 1.53 -> 3.12 s) while the exact-recall family won big
-    * (knn_label_eval 2.43 -> 0.57 s, ann_topk 2.08 -> 0.58 s,
-    * matryoshka_recall 2.26 -> 0.85 s, pq_recall_rerank 3.14 -> 1.75 s,
-    * ivf_probe_recall 4.22 -> 3.34 s). SPARK_GRAFT_NARROW_VECTORS
-    * restores the narrow scan for drift-honest re-measurement.
+  /** embeddings.parquet can scan as one partition, so the brute-force
+    * dot-product spans above it would run single-task: spread them at
+    * the session's shuffle width. Used by [[sideWithNorm]] (the exact
+    * baselines' corpus side) only: above the IVF serve family's pruned
+    * bucketed scans the exchange is pure overhead (receipts:
+    * OPTIMIZATION_r18.md).
     */
   private def widened(embeddings: DataFrame): DataFrame =
-    if (sys.env.contains("SPARK_GRAFT_NARROW_VECTORS")) embeddings
-    else embeddings.repartition(embeddings.sparkSession.conf
+    embeddings.repartition(embeddings.sparkSession.conf
       .get("spark.sql.shuffle.partitions").toInt, col("vec_id"))
 
   private def sideWithNorm(embeddings: DataFrame, id: String, v: String,

@@ -861,8 +861,7 @@ object StreamingOps {
     * unchanged; only the small-state floor moves. Same-session A/B at
     * sf0.1 (10-query stateful slice, this host): 65.1 s at 32 → 48.6 s
     * at 8 — with the 8-run measured under WORSE background load
-    * (calib 0.325 vs 0.225). `SPARK_GRAFT_STREAM_SHUFFLE` overrides for
-    * experiments, mirroring SPARK_GRAFT_SHUFFLE.
+    * (calib 0.325 vs 0.225).
     *
     * Results are partitioning-invariant: state keying is logical
     * (groupBy/dropDuplicates/join keys), watermarks are global, and
@@ -870,8 +869,7 @@ object StreamingOps {
     * aggregate or admitted set — the driver hash gate sees no change.
     */
   def scaledStatePartitions(sfDir: String): Int =
-    sys.env.get("SPARK_GRAFT_STREAM_SHUFFLE").map(_.trim.toInt).getOrElse(
-      math.max(8, math.min(1024L, graft.Bench.dirMB(sfDir) / 45L).toInt))
+    graft.Bench.partitionsForMB(graft.Bench.dirMB(sfDir), 8)
 
   /** Run `body` (which builds AND drains a bounded streaming query) with
     * shuffle partitions sized by [[scaledStatePartitions]]; restore the

@@ -143,6 +143,21 @@ class CrystalBallSpec extends AnyFunSuite {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
+  test("CrystalBallApp.run writes the three reference outputs") {
+    val dir = java.nio.file.Files.createTempDirectory("crystalball_app")
+    CrystalBallApp.run(spark, Golden.inputPath, dir.toString)
+    def parts(out: String) = Golden.parts(dir.resolve(out))
+    val pairParts = parts("CrystalBallPair")
+    assert(pairParts.size == 3)
+    assert(pairParts.flatten.sorted == Golden.pairLines.toSeq.sorted)
+    for ((variant, n) <- Seq("CrystalBallStripe" -> 3, "CrystalBallHybrid" -> 2)) {
+      val got = parts(variant)
+      assert(got.size == n, s"$variant: ${got.size} part files")
+      assert(got.map(_.map(Golden.parseStripe)) ==
+        Golden.stripeParts(variant).map(_.map(Golden.parseStripe)), variant)
+    }
+  }
+
   test("per-product probabilities sum to 1") {
     val byProduct = computedPairs.groupBy(_._1._1).view.mapValues(_.values.sum)
     byProduct.foreach { case (p, s) =>

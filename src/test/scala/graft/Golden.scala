@@ -26,6 +26,9 @@ object Golden {
   private def read(p: Path): Seq[String] =
     Files.readAllLines(p, UTF_8).asScala.toSeq
 
+  /** The basket text file, as a path the engine's sources can read. */
+  val inputPath: String = path("input").toString
+
   val input: Seq[String] = read(path("input"))
 
   /** One expected pair: P = num / den, printed by the sink as `printed`. */
@@ -43,11 +46,14 @@ object Golden {
   def pairLines: Set[String] =
     pairs.map { case ((a, b), p) => s"[$a, $b]\t${p.printed}" }.toSet
 
-  /** A stripe variant's part files, in partition order, as lines. */
-  def stripeParts(variant: String): Seq[Seq[String]] =
-    Files.list(path(variant)).iterator().asScala
+  /** A directory's part files, in partition order, as lines. */
+  def parts(dir: Path): Seq[Seq[String]] =
+    Files.list(dir).iterator().asScala
       .filter(_.getFileName.toString.startsWith("part-"))
       .toSeq.sortBy(_.getFileName.toString).map(read)
+
+  /** A stripe variant's expected part files, in partition order. */
+  def stripeParts(variant: String): Seq[Seq[String]] = parts(path(variant))
 
   private val entry = """\((\S+), ([0-9.Ee+-]+)\)""".r
 

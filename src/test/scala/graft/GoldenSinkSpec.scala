@@ -137,13 +137,8 @@ class GoldenSinkSpec extends AnyFunSuite {
   }
 
   test("the reference layouts write 3 and 2 part files holding the reference cuts") {
-    import scala.jdk.CollectionConverters._
     val dir = java.nio.file.Files.createTempDirectory("golden_layout")
-    def parts(out: String): Seq[Seq[String]] =
-      java.nio.file.Files.list(dir.resolve(out)).iterator().asScala
-        .filter(_.getFileName.toString.startsWith("part-"))
-        .toSeq.sortBy(_.getFileName.toString)
-        .map(p => java.nio.file.Files.readAllLines(p).asScala.toSeq)
+    def parts(out: String) = Golden.parts(dir.resolve(out))
     val probs = cachedProbs(aqe)
     try {
       GoldenSink.writeText(GoldenSink.pairLines(GoldenSink.rangePartitioned(probs, 3)

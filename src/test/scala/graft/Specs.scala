@@ -2,17 +2,11 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared SparkSession for the whole test run. */
+/** One shared SparkSession for the whole test run, on the engine's one
+  * session posture ([[Bench.sessionBuilder]]). */
 object Specs {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
-      .config("spark.ui.enabled", "false")
+    val s = Bench.sessionBuilder("local[4]", "4").appName("graft-tests")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
