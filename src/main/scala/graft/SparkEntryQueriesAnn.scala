@@ -818,44 +818,29 @@ private[graft] trait SparkEntryQueriesAnn extends SparkEntryStaging {
     // relative links contribute real-host edges) through the SAME
     // exact-integer rank recurrence as page_rank — the html_extract ->
     // html_links_resolved -> link_rank -> host_cap chain
-    // r18 opt (guide §2.6, the shingles width pattern): the fixture
-    // pages inherit the documents scan's ONE partition, so the
-    // per-href resolution regex chain — which count() cannot prune
-    // here, unlike html_links_resolved's presentation surface, because
-    // the edge relation filters on url_norm and distincts on host —
-    // ran on 1 of 32 cores (probe: resolveLinks 1.5 s warm, edges
-    // build 2.7 s). An explicit repartition above the literal-built
-    // page projection fans the regex chain out; the ~2.5 MB page
-    // shuffle is byte-light. Scoped to the two GRAPH consumers only:
-    // html_links / html_links_resolved keep the narrow scan because
-    // their count() surface prunes the chain entirely (0.13 s bench)
-    // and an unprunable exchange would only tax them.
-    "link_rank" -> ((s, dir) => {
-      val shufP = s.conf.get("spark.sql.shuffle.partitions").toInt
-      val edges = Url.resolveLinks(
-          htmlFixturePages(s, dir).repartition(shufP, col("doc_id")))
-        .filter(col("url_norm").isNotNull)
-        .select(concat(lit("d"), col("doc_id").cast("string")).as("src"),
-          col("host").as("dst"))
-        .distinct()
-      Graph.pageRank(edges)
-    }),
+    "link_rank" -> ((s, dir) => Graph.pageRank(resolvedHostEdges(s, dir))),
     // Kleinberg HITS over the SAME resolved doc->host edge relation:
     // docs are hubs, hosts authorities — unnormalized exact-BIGINT
     // sweeps (ranking-identical to the L2-normalized form at any fixed
     // round count), oracle unrolls the two sweeps verbatim
-    "hits_scores" -> ((s, dir) => {
-      // same width fix as link_rank — see the receipt above
-      val shufP = s.conf.get("spark.sql.shuffle.partitions").toInt
-      val edges = Url.resolveLinks(
-          htmlFixturePages(s, dir).repartition(shufP, col("doc_id")))
-        .filter(col("url_norm").isNotNull)
-        .select(concat(lit("d"), col("doc_id").cast("string")).as("src"),
-          col("host").as("dst"))
-        .distinct()
-      Graph.hits(edges)
-    }),
+    "hits_scores" -> ((s, dir) => Graph.hits(resolvedHostEdges(s, dir))),
   )
+
+  /** The resolved doc -> host edge relation of the fixture pages: one
+    * `(src = "d<doc_id>", dst = host)` edge per distinct resolved link.
+    *
+    * Widened (Width.spread): the per-href resolution regex chain is
+    * CPU-heavy, and this relation filters on `url_norm` and distincts on
+    * host, so nothing prunes it. `html_links` and `html_links_resolved`
+    * stay narrow: their count() surface prunes the chain entirely
+    * (OPTIMIZATION_r18.md §12).
+    */
+  private def resolvedHostEdges(s: SparkSession, dir: String): DataFrame =
+    Url.resolveLinks(Width.spread(htmlFixturePages(s, dir), "doc_id"))
+      .filter(col("url_norm").isNotNull)
+      .select(concat(lit("d"), col("doc_id").cast("string")).as("src"),
+        col("host").as("dst"))
+      .distinct()
 
   /** ScaleAudit-only receipts (r16, VERDICT r15 items 1+5): the
     * serve-everything IVFPQ audit twins (every vector a query —

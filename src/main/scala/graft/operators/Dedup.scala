@@ -29,7 +29,7 @@ object Dedup {
     * Docs shorter than 3 tokens emit nothing.
     *
     * Implemented as a typed flatMap (the same discipline as the flagship
-    * CoOccurrence.countsTyped): the equivalent Catalyst form —
+    * CoOccurrence.pairs): the equivalent Catalyst form —
     * explode(array_distinct(transform(sequence(...), concat_ws(
     * element_at...)))) — runs on the INTERPRETED higher-order-function
     * path (HOF lambdas are not whole-stage-codegen'd) and measured 10×
@@ -41,14 +41,11 @@ object Dedup {
   private[graft] def shingles(documents: DataFrame): DataFrame = {
     val spark = documents.sparkSession
     import spark.implicits._
-    // documents.parquet can scan as one partition (one row group), so
-    // spread the CPU-heavy shingle and minhash spans above it at the
-    // session's shuffle width; the exchange moves only (doc_id, text),
-    // and AQE cannot coalesce an explicit count. Receipts:
-    // OPTIMIZATION_r18.md.
-    val shufP = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    documents.select(col("doc_id"), col("text"))
-      .repartition(shufP, col("doc_id")).as[(Long, String)]
+    // Widened (Width.spread): the shingle and minhash spans above the
+    // documents scan are CPU-heavy, and the exchange moves only
+    // (doc_id, text). OPTIMIZATION_r18.md §4.
+    Width.spread(documents.select(col("doc_id"), col("text")), "doc_id")
+      .as[(Long, String)]
       .flatMap { case (id, text) =>
         // split(" ", -1): KEEP trailing empty tokens — Java's 1-arg split
         // drops them, but both Catalyst's split() and the oracle's
@@ -225,31 +222,22 @@ object Dedup {
       .withColumn("pos", row_number().over(
         org.apache.spark.sql.expressions.Window.partitionBy(col("doc_id"))
           .orderBy(col("df"), col("token"))))
-    // r18: prefix carries only what the candidate join's predicates read —
-    // n_docs no longer rides through the self-join (it re-attaches from
-    // repArr during verification, which joins repArr anyway). Persisted:
-    // both sides of the self-join consume it, and without the cut each
-    // side re-runs the dfreq aggregate + the per-doc order window.
+    // prefix carries only what the candidate join's predicates read —
+    // n_docs re-attaches from repArr during verification, which joins
+    // repArr anyway. Persisted: both sides of the self-join consume it,
+    // and without the cut each side re-runs the dfreq aggregate + the
+    // per-doc order window.
     //
-    // The explicit repartition is THE scaling fix (stage-listener
-    // measurement, sf0.1/32c): the candidate join broadcasts one prefix
-    // side and streams the other, and the verify joins broadcast repArr —
+    // Widened (Width.spread): the candidate join broadcasts one prefix
+    // side and streams the other, and the verify joins broadcast repArr,
     // so the probe side's partitioning IS the parallelism of the whole
-    // generate→verify→intersect span. AQE's byte-proportional coalescing
-    // squeezed the (tiny: ~10 K rows) prefix relation to ONE partition and
-    // the span ran 8.4 s single-task while 31 cores idled — the classic
-    // compute-heavy/byte-light mismatch (the join FANS OUT ~200× before
-    // any byte hits a shuffle). Pinning the session's data-proportional
-    // shuffle-partition count (the r12 rule: scales with SF, floored at
-    // the core count) keeps the fan-out distributed at every scale; the
-    // exchange moves only the prefix relation itself.
-    val shufP = documents.sparkSession.conf
-      .get("spark.sql.shuffle.partitions").toInt
-    val prefix = CacheScope.selfReleasing(ordered
+    // generate→verify→intersect span, which fans out ~200× before any
+    // byte hits a shuffle (OPTIMIZATION_r18.md §1).
+    val prefix = CacheScope.selfReleasing(Width.spread(ordered
       .filter(col("pos") <=
         col("sz") - expr(s"($thresholdE6 * sz + 999999) div 1000000") + 1)
-      .select(col("doc_id"), col("token"), col("pos"), col("sz"))
-      .repartition(shufP, col("doc_id")))
+      .select(col("doc_id"), col("token"), col("pos"), col("sz")),
+      "doc_id"))
     // minimum overlap o_min implied by J >= t: o·1e6 div (sza+szb−o) >= t
     // ⟺ o >= ceil(t·(sza+szb) / (1e6+t)) — exact integer ceiling
     val oMin = s"($thresholdE6 * (a.sz + b.sz) + ${1000000L + thresholdE6}" +

@@ -44,10 +44,12 @@ object Multimodal {
   object ImageIoCodec {
     // In-memory ImageIO streams only: the default disk-backed
     // ImageInputStream cache creates a temp FILE per read/write and
-    // serializes concurrent kernels on filesystem + registry locks —
-    // with the r18 width fix 32 tasks decode at once and the temp-file
-    // path collapsed the win. Payloads here are byte arrays; the
-    // memory-cached stream is bit-identical.
+    // serializes concurrent kernels on filesystem + registry locks.
+    // Payloads here are byte arrays; the memory-cached stream is
+    // bit-identical. The ImageIO kernels (imageRoundTrip,
+    // phashFingerprints, imageEmbeddings) are widened with Width.spread,
+    // which pays only with this switch; the audio and video kernels
+    // measured slower widened and stay narrow (OPTIMIZATION_r18.md §13).
     javax.imageio.ImageIO.setUseCache(false)
 
     def decodeMeta(docId: Long, bytes: Array[Byte]): Option[MediaMeta] =
@@ -82,34 +84,6 @@ object Multimodal {
           out.toByteArray
         }
     }
-  }
-
-  /** r18 width fix (guide §2.6, the shingles pattern): every real-codec
-    * generator below inherits the documents scan's SINGLE row-group
-    * partition, so its per-row PNG/WAV/Y4M encode+decode kernel ran on
-    * 1 of N cores while the rest idled — and the mapPartitions encoder
-    * boundary makes the kernel unprunable, so every consumer pays it in
-    * full. An explicit session-width keyed repartition of the narrow
-    * (doc_id[, text]) input fans the kernel out; the exchange is
-    * byte-light (≤ the raw text), the codec work is the cost. Explicit
-    * count so AQE cannot coalesce the tiny exchange back to one task;
-    * the count is the sf-proportional session setting, not a local pin.
-    *
-    * Scoped to the ImageIO kernels ONLY (phashFingerprints,
-    * imageEmbeddings, imageRoundTrip) — and only together with
-    * `ImageIO.setUseCache(false)`: with the default disk-backed stream
-    * cache, 32 concurrent decoders serialized on temp-file creation and
-    * the width fix REGRESSED 3-8x. The audio (javax.sound AudioSystem)
-    * kernels were widened, measured, and REVERTED: AudioSystem has
-    * global provider locks and no cache switch (audio_embed_real
-    * 0.65 -> 2.33 s, audio_decode_real 1.04 -> 2.72 s calib-normalized);
-    * the pure-JVM Y4M video kernels are cheap enough that the exchange
-    * is pure overhead (video_decode_real 1.32x) — both stay narrow.
-    */
-  private def spread(narrow: DataFrame): DataFrame = {
-    val shufP = narrow.sparkSession.conf
-      .get("spark.sql.shuffle.partitions").toInt
-    narrow.repartition(shufP, col("doc_id"))
   }
 
   val EmbedDims = 8
@@ -260,7 +234,8 @@ object Multimodal {
   def imageRoundTrip(documents: DataFrame, maxDim: Int = 4): DataFrame = {
     val spark = documents.sparkSession
     import spark.implicits._
-    spread(documents.select(col("doc_id").cast("long"))).as[Long]
+    Width.spread(documents.select(col("doc_id").cast("long")), "doc_id")
+      .as[Long]
       .mapPartitions { it =>
         it.map { id =>
           val w = (1 + id % 16).toInt
@@ -611,7 +586,8 @@ object Multimodal {
     val spark = documents.sparkSession
     import spark.implicits._
     val (hw, hh) = (HashW, HashH)
-    spread(documents.select(col("doc_id"), col("text"))).as[(Long, String)]
+    Width.spread(documents.select(col("doc_id"), col("text")), "doc_id")
+      .as[(Long, String)]
       .mapPartitions { it =>
         javax.imageio.ImageIO.setUseCache(false) // see ImageIoCodec note
         it.map { case (id, text) =>
@@ -713,7 +689,8 @@ object Multimodal {
     val spark = documents.sparkSession
     import spark.implicits._
     val side = EmbedImgSide
-    spread(documents.select(col("doc_id"), col("text"))).as[(Long, String)]
+    Width.spread(documents.select(col("doc_id"), col("text")), "doc_id")
+      .as[(Long, String)]
       .mapPartitions { it =>
         javax.imageio.ImageIO.setUseCache(false) // see ImageIoCodec note
         it.map { case (id, text) =>

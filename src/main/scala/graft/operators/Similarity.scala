@@ -42,22 +42,16 @@ object Similarity {
   /** Per-vector projection with the norm computed ONCE per vector (before
     * any pairwise join) — mirrors the oracle's `n` CTE; the pairwise stage
     * divides by the precomputed product of norms.
+    *
+    * Widened (Width.spread): the exact baselines' brute-force dot-product
+    * spans are CPU-heavy. The IVF serve family does not come through
+    * here; it stays on its pruned bucketed scans (OPTIMIZATION_r18.md
+    * §9).
     */
-  /** embeddings.parquet can scan as one partition, so the brute-force
-    * dot-product spans above it would run single-task: spread them at
-    * the session's shuffle width. Used by [[sideWithNorm]] (the exact
-    * baselines' corpus side) only: above the IVF serve family's pruned
-    * bucketed scans the exchange is pure overhead (receipts:
-    * OPTIMIZATION_r18.md).
-    */
-  private def widened(embeddings: DataFrame): DataFrame =
-    embeddings.repartition(embeddings.sparkSession.conf
-      .get("spark.sql.shuffle.partitions").toInt, col("vec_id"))
-
   private def sideWithNorm(embeddings: DataFrame, id: String, v: String,
       nrm: String): DataFrame = {
     VectorFunctions.register(embeddings.sparkSession)
-    widened(embeddings)
+    Width.spread(embeddings, "vec_id")
       .select(col("vec_id").as(id), asDouble(col("embedding")).as(v))
       .withColumn(nrm, norm(col(v)))
   }

@@ -209,22 +209,13 @@ object Sketches {
     val total = exact.agg(sum(col("exact_cnt")).as("n_total"))
     val topk = exact.orderBy(col("exact_cnt").desc, col("key")).limit(k)
     // the sketch side: one md5 per item, d digest-slice buckets,
-    // d·w bounded counter relation. r18 opt (guide §2.6, the shingles/
-    // basket width pattern): lineitem.parquet scans as 3 row-group
-    // partitions, so the d-way explode + hex-slice + base-16 parse ran
-    // on 3 of 32 cores (probe: counter build 1.9 s narrow, md5 alone
-    // 0.33 s — the chain, not the digest, was the cost). An explicit
-    // keyed repartition (key column only, ~8 bytes/row) fans the
-    // expression chain out at the session's sf-proportional width;
-    // explicit count so AQE cannot coalesce the byte-light exchange
-    // back to one task. The exact side keeps its narrow scan: its
-    // partial aggregate combines map-side and was measured fine
-    // (0.25 s). The xxhash64 twin stays narrow too — its per-row chain
-    // is one 64-bit hash, measured 0.31 s end-to-end.
-    val shufP = lineitem.sparkSession.conf
-      .get("spark.sql.shuffle.partitions").toInt
+    // d·w bounded counter relation. Widened (Width.spread): the d-way
+    // explode + hex-slice + base-16 parse chain is the cost, and the
+    // exchange moves the key column only. The exact side stays narrow
+    // (its partial aggregate combines map-side), and so does the
+    // xxhash64 twin (one 64-bit hash per row). OPTIMIZATION_r18.md §11.
     val seeds = (0 until CmsDepth).map(lit(_))
-    val counters = items.repartition(shufP, col("key"))
+    val counters = Width.spread(items, "key")
       .select(md5(col("key").cast("string").cast("binary")).as("h"),
         explode(array(seeds: _*)).as("seed"))
       .select(col("seed"), bucketOf.as("bucket"))

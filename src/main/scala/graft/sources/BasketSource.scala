@@ -92,16 +92,9 @@ object BasketSource {
     val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
     li.select(col("l_orderkey"), col("l_linenumber"),
         col("l_partkey").cast("string").as("pk"))
-      // r18: explicit repartition on the basket key BEFORE the groupBy.
-      // Same single shuffle (the aggregate's required distribution is
-      // satisfied, so no second exchange appears), but the list-building
-      // aggregation runs at the session's shuffle width instead of inside
-      // the scan stage — parquet row groups cap the scan at 3 tasks at
-      // sf0.1, and collect_list's map-side partial aggregation reduces
-      // nothing (lists concatenate; every element ships either way), so
-      // hoisting the heavy agg above the exchange costs no extra bytes.
-      // Measured (countsFused shape, sf0.1/32c): 1.08 -> 0.82 s warm,
-      // 3.94 -> 1.13 s cold; benefits every basket consumer.
+      // the aggregate's one exchange, hoisted above the list building and
+      // sized by AQE: collect_list reduces nothing map-side, so this
+      // exchange carries every row (the graft.operators.Width policy)
       .repartition(col("l_orderkey"))
       .groupBy(col("l_orderkey"))
       .agg(sort_array(collect_list(struct(col("l_linenumber"), col("pk"))))

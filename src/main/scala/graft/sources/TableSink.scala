@@ -54,9 +54,9 @@ object TableSink {
     */
   private def dropWithLocation(spark: org.apache.spark.sql.SparkSession,
       table: String): Unit = {
-    val parts = table.split('.')
-    val quoted = parts.map(p => s"`$p`").mkString(".")
+    val (_, quoted) = variant(table)
     spark.sql(s"DROP TABLE IF EXISTS $quoted")
+    val parts = table.split('.')
     val warehouse = spark.conf.get("spark.sql.warehouse.dir")
     val relative = parts match {
       case Array(db, tbl) => s"${db.toLowerCase}.db/${tbl.toLowerCase}"
@@ -65,6 +65,16 @@ object TableSink {
     val loc = new org.apache.hadoop.fs.Path(warehouse, relative)
     val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(loc)) fs.delete(loc, true)
+  }
+
+  /** `table` with `suffix` appended to its last name part, bare and
+    * backtick-quoted per part: `variant("db.t", "_x")` is
+    * `("db.t_x", "`db`.`t_x`")`.
+    */
+  private def variant(table: String, suffix: String = ""): (String, String) = {
+    val parts = table.split('.')
+    val name = (parts.dropRight(1) :+ (parts.last + suffix)).mkString(".")
+    (name, name.split('.').map(p => s"`$p`").mkString("."))
   }
 
   /** Plain (unbucketed) managed-table overwrite with the same
@@ -135,11 +145,8 @@ object TableSink {
   def compactBucketed(spark: SparkSession, table: String, bucketCol: String,
       nBuckets: Int): Unit = {
     require(nBuckets >= 1, "compactBucketed: nBuckets must be >= 1")
-    val parts = table.split('.')
-    val quoted = parts.map(p => s"`$p`").mkString(".")
-    val scratch = (parts.dropRight(1) :+ (parts.last + "_compacting"))
-      .mkString(".")
-    val scratchQuoted = scratch.split('.').map(p => s"`$p`").mkString(".")
+    val (_, quoted) = variant(table)
+    val (scratch, scratchQuoted) = variant(table, "_compacting")
     recoverCompaction(spark, table)
     // read the generations as PLAIN parquet (inputFiles), not through the
     // bucketed-table scan: the scan advertises HashPartitioning and the
@@ -162,9 +169,7 @@ object TableSink {
     // installed — a crash between the renames strands NO data (old copy
     // under _precompact, new under _compacting), unlike DROP-then-RENAME
     // where the drop destroys the only copy before the scratch lands
-    val old = (parts.dropRight(1) :+ (parts.last + "_precompact"))
-      .mkString(".")
-    val oldQuoted = old.split('.').map(p => s"`$p`").mkString(".")
+    val (_, oldQuoted) = variant(table, "_precompact")
     spark.sql(s"DROP TABLE IF EXISTS $oldQuoted") // stale crash leftover
     spark.sql(s"ALTER TABLE $quoted RENAME TO $oldQuoted")
     spark.sql(s"ALTER TABLE $scratchQuoted RENAME TO $quoted")
@@ -184,14 +189,9 @@ object TableSink {
     * next compaction's [[writeBucketed]] overwrites it.
     */
   private def recoverCompaction(spark: SparkSession, table: String): Unit = {
-    val parts = table.split('.')
-    val quoted = parts.map(p => s"`$p`").mkString(".")
-    def variant(suffix: String): (String, String) = {
-      val name = (parts.dropRight(1) :+ (parts.last + suffix)).mkString(".")
-      (name, name.split('.').map(p => s"`$p`").mkString("."))
-    }
-    val (old, oldQuoted) = variant("_precompact")
-    val (scratch, scratchQuoted) = variant("_compacting")
+    val (_, quoted) = variant(table)
+    val (old, oldQuoted) = variant(table, "_precompact")
+    val (scratch, scratchQuoted) = variant(table, "_compacting")
     if (!spark.catalog.tableExists(table)) {
       if (spark.catalog.tableExists(scratch))
         spark.sql(s"ALTER TABLE $scratchQuoted RENAME TO $quoted")
@@ -202,26 +202,6 @@ object TableSink {
       spark.sql(s"DROP TABLE $oldQuoted") // superseded complete copy
   }
 
-  /** Morton (Z-order) key over numeric columns: each value maps to a
-    * `bits`-bit bucket by linear min-max scaling, and the buckets' bits
-    * interleave into one long. Rows close in z-value are close in EVERY
-    * dimension, so range-partitioning + sorting by it clusters a file
-    * layout for multi-column data skipping — where a single-column sort
-    * gives perfect pruning on one predicate column and none on the rest,
-    * z-order gives ~sqrt pruning on BOTH (file count f → per-file span
-    * ~1/√f of each dimension for 2 columns).
-    *
-    * Pure bit arithmetic on codegen'd built-ins (floor/shift/and/or) —
-    * no UDF; the z-key costs bits·ncols scalar ops per row.
-    *
-    * NULL handling: a row-level NULL in a z-column maps to bucket 0 (the
-    * greatest() clamp treats the NULL-propagated bucket as below 0), so
-    * null rows cluster with minimum-value rows. That keeps them
-    * range-prunable for IS NOT NULL + range predicates but makes the
-    * min-edge files null-heavy; pre-filter or route nulls to a dedicated
-    * partition if they are frequent. Only all-null columns are rejected
-    * (by [[writeZOrdered]]'s stats require).
-    */
   /** SNAPSHOT-VERSIONED table writes — the Iceberg/Delta time-travel
     * mechanism in miniature: each version's data lands in its OWN
     * immutable file set under `data/v<N>/`, and a per-version MANIFEST
@@ -243,21 +223,11 @@ object TableSink {
     */
   def writeSnapshot(df: DataFrame, root: String, version: Int): Unit = {
     require(version >= 1, s"versions start at 1, got $version")
-    val spark = df.sparkSession
-    val conf = spark.sparkContext.hadoopConfiguration
     val rootPath = new org.apache.hadoop.fs.Path(root)
-    val fs = rootPath.getFileSystem(conf)
+    val fs = rootPath.getFileSystem(
+      df.sparkSession.sparkContext.hadoopConfiguration)
     if (version == 1 && fs.exists(rootPath)) fs.delete(rootPath, true)
-    val prev =
-      if (version == 1) Seq.empty[String]
-      else readManifest(fs, root, version - 1)
-    val dataDir = s"$root/data/v$version"
-    df.write.mode("errorifexists").parquet(dataDir)
-    val manifest = prev :+ dataDir
-    val out = fs.create(
-      new org.apache.hadoop.fs.Path(s"$root/manifests/v$version.txt"), true)
-    out.write(manifest.mkString("\n").getBytes("UTF-8"))
-    out.close()
+    commitVersion(df, fs, root, version, "errorifexists")
   }
 
   /** [[writeSnapshot]] with UPSERT semantics for one version — the
@@ -270,14 +240,24 @@ object TableSink {
     */
   def writeSnapshotUpsert(df: DataFrame, root: String, version: Int): Unit = {
     require(version >= 1, s"versions start at 1, got $version")
-    val spark = df.sparkSession
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new org.apache.hadoop.fs.Path(root).getFileSystem(conf)
+    val fs = new org.apache.hadoop.fs.Path(root)
+      .getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+    commitVersion(df, fs, root, version, "overwrite")
+  }
+
+  /** The commit step both snapshot writes share: read the predecessor
+    * manifest (none for version 1), write `df` as the version's data
+    * directory under `mode`, then write its manifest (predecessor + the
+    * new directory). The manifest lands after the data, so a version
+    * is never listed before its files exist.
+    */
+  private def commitVersion(df: DataFrame, fs: org.apache.hadoop.fs.FileSystem,
+      root: String, version: Int, mode: String): Unit = {
     val prev =
       if (version == 1) Seq.empty[String]
       else readManifest(fs, root, version - 1)
     val dataDir = s"$root/data/v$version"
-    df.write.mode("overwrite").parquet(dataDir)
+    df.write.mode(mode).parquet(dataDir)
     val out = fs.create(
       new org.apache.hadoop.fs.Path(s"$root/manifests/v$version.txt"), true)
     out.write((prev :+ dataDir).mkString("\n").getBytes("UTF-8"))
@@ -346,6 +326,26 @@ object TableSink {
     lines.filter(_.nonEmpty)
   }
 
+  /** Morton (Z-order) key over numeric columns: each value maps to a
+    * `bits`-bit bucket by linear min-max scaling, and the buckets' bits
+    * interleave into one long. Rows close in z-value are close in EVERY
+    * dimension, so range-partitioning + sorting by it clusters a file
+    * layout for multi-column data skipping — where a single-column sort
+    * gives perfect pruning on one predicate column and none on the rest,
+    * z-order gives ~sqrt pruning on BOTH (file count f → per-file span
+    * ~1/√f of each dimension for 2 columns).
+    *
+    * Pure bit arithmetic on codegen'd built-ins (floor/shift/and/or) —
+    * no UDF; the z-key costs bits·ncols scalar ops per row.
+    *
+    * NULL handling: a row-level NULL in a z-column maps to bucket 0 (the
+    * greatest() clamp treats the NULL-propagated bucket as below 0), so
+    * null rows cluster with minimum-value rows. That keeps them
+    * range-prunable for IS NOT NULL + range predicates but makes the
+    * min-edge files null-heavy; pre-filter or route nulls to a dedicated
+    * partition if they are frequent. Only all-null columns are rejected
+    * (by [[writeZOrdered]]'s stats require).
+    */
   def zValue(cols: Seq[Column], mins: Seq[Double], maxs: Seq[Double],
       bits: Int = 12): Column = {
     val n = cols.size

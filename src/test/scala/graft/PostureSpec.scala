@@ -2,13 +2,47 @@ package graft
 
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
+import scala.util.matching.Regex
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec,
+  AdaptiveSparkPlanExec, QueryStageExec, ShuffleQueryStageExec}
 import org.scalatest.funsuite.AnyFunSuite
+import graft.operators.Width
 
 /** The one session posture ([[Bench.sessionBuilder]]) and the harness
   * rules around it: the test session carries the posture, engine code
-  * reads no environment, and failures report their cause.
+  * reads no environment, one helper ([[Width.spread]]) reads the session's
+  * shuffle width, and failures report their cause.
   */
 class PostureSpec extends AnyFunSuite {
+
+  /** Every line matching `pattern` in the engine sources — the six engine
+    * packages and the `SparkEntry*` query registry — outside the files
+    * named in `allowed`, as `path:line: text`.
+    */
+  private def engineLines(pattern: Regex, allowed: Set[String]): Seq[String] = {
+    val root = Paths.get("src/main/scala/graft")
+    val packages = Seq("operators", "functions", "optimizer", "plans",
+        "sources", "streaming").flatMap { pkg =>
+      val dir = root.resolve(pkg)
+      assert(Files.isDirectory(dir), s"$dir missing")
+      Files.walk(dir).iterator().asScala.toSeq
+    }
+    val registry = Files.list(root).iterator().asScala.toSeq
+      .filter(_.getFileName.toString.startsWith("SparkEntry"))
+    assert(registry.nonEmpty, s"no SparkEntry*.scala under $root")
+    (packages ++ registry)
+      .filter(_.toString.endsWith(".scala"))
+      .filterNot(f => allowed(f.getFileName.toString))
+      .sortBy(_.toString)
+      .flatMap { f =>
+        Files.readAllLines(f).asScala.zipWithIndex.collect {
+          case (line, i) if pattern.findFirstIn(line).nonEmpty =>
+            s"$f:${i + 1}: ${line.trim}"
+        }
+      }
+  }
 
   test("the test session carries the posture's recursion row limit") {
     // 350k anchor rows x 3 levels = 1.05M rows, past Spark's 1M default
@@ -22,21 +56,46 @@ class PostureSpec extends AnyFunSuite {
   }
 
   test("engine packages read no environment variables") {
-    val read = """sys\.env|System\.getenv""".r
-    val offenders = Seq("operators", "functions", "optimizer", "plans",
-        "sources", "streaming").flatMap { pkg =>
-      val dir = Paths.get("src/main/scala/graft", pkg)
-      assert(Files.isDirectory(dir), s"$dir missing")
-      Files.walk(dir).iterator().asScala.toSeq
-        .filter(_.toString.endsWith(".scala")).sortBy(_.toString)
-        .flatMap { f =>
-          Files.readAllLines(f).asScala.zipWithIndex.collect {
-            case (line, i) if read.findFirstIn(line).nonEmpty =>
-              s"$f:${i + 1}: ${line.trim}"
-          }
-        }
-    }
+    val offenders = engineLines("""sys\.env|System\.getenv""".r, Set.empty)
     assert(offenders.isEmpty, offenders.mkString("\n", "\n", ""))
+  }
+
+  test("only Width and StreamingOps read the session's shuffle width") {
+    // StreamingOps.withStatePartitions sets the state width and restores it
+    val offenders = engineLines(
+      Regex.quote("\"spark.sql.shuffle.partitions\"").r,
+      Set("Width.scala", "StreamingOps.scala"))
+    assert(offenders.isEmpty, offenders.mkString("\n", "\n", ""))
+  }
+
+  /** Partitions the final adaptive plan of an executed frame reads from
+    * its first shuffle. Query stages are leaves of the final plan, so the
+    * walk steps into each stage's own plan.
+    */
+  private def shuffleReadWidth(plan: SparkPlan): Int = {
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case adaptive: AdaptiveSparkPlanExec => nodes(adaptive.executedPlan)
+      case stage: QueryStageExec => nodes(stage.plan)
+      case _ => p.children.flatMap(nodes)
+    })
+    nodes(plan).collectFirst {
+      case read: AQEShuffleReadExec => read.partitionSpecs.size
+      case stage: ShuffleQueryStageExec => stage.shuffle.numPartitions
+    }.getOrElse(fail(s"no shuffle read in\n$plan"))
+  }
+
+  test("Width.spread holds the session width under AQE") {
+    val spark = Specs.spark
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
+    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+    val tenRows = spark.range(10).toDF("k")
+    val spread = Width.spread(tenRows, "k")
+    assert(spread.collect().length == 10)
+    assert(shuffleReadWidth(spread.queryExecution.executedPlan) == 4)
+    // without the explicit count AQE coalesces the byte-light exchange
+    val sized = tenRows.repartition(col("k"))
+    assert(sized.collect().length == 10)
+    assert(shuffleReadWidth(sized.queryExecution.executedPlan) < 4)
   }
 
   test("partition rule: one per 45 MB, floored, capped at 1024") {
