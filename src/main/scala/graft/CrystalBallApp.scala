@@ -46,22 +46,23 @@ object CrystalBallApp {
     // compute the normalized relation ONCE; the three writes reuse it
     // (no per-write recomputation of the scan + window + aggregation)
     val probs = CrystalBall.normalize(CoOccurrence.counts(baskets)).persist()
-    // stripeShape's global sort is dropped by the optimizer under the
-    // fixed-cut layout below, which re-sorts within each partition
-    val stripes = CrystalBall.stripeShape(probs)
-    // range-partition to the reference file layout, sort within each
-    // partition (the reference's in-file order), then format
-    def layout(df: DataFrame, n: Int) =
-      GoldenSink.rangePartitioned(df, n)
-        .sortWithinPartitions("product")
-    GoldenSink.writeText(
-      GoldenSink.pairLines(GoldenSink.rangePartitioned(probs, 3)
-        .sortWithinPartitions("product", "neighbor")),
-      s"$output/CrystalBallPair")
-    GoldenSink.writeText(GoldenSink.stripeLines(layout(stripes, 3)),
-      s"$output/CrystalBallStripe")
-    GoldenSink.writeText(GoldenSink.stripeLines(layout(stripes, 2)),
-      s"$output/CrystalBallHybrid")
-    probs.unpersist()
+    try {
+      // stripeShape's global sort is dropped by the optimizer under the
+      // fixed-cut layout below, which re-sorts within each partition
+      val stripes = CrystalBall.stripeShape(probs)
+      // range-partition to the reference file layout, sort within each
+      // partition (the reference's in-file order), then format
+      def layout(df: DataFrame, n: Int) =
+        GoldenSink.rangePartitioned(df, n)
+          .sortWithinPartitions("product")
+      GoldenSink.writeText(
+        GoldenSink.pairLines(GoldenSink.rangePartitioned(probs, 3)
+          .sortWithinPartitions("product", "neighbor")),
+        s"$output/CrystalBallPair")
+      GoldenSink.writeText(GoldenSink.stripeLines(layout(stripes, 3)),
+        s"$output/CrystalBallStripe")
+      GoldenSink.writeText(GoldenSink.stripeLines(layout(stripes, 2)),
+        s"$output/CrystalBallHybrid")
+    } finally probs.unpersist()
   }
 }

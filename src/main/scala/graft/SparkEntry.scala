@@ -1743,13 +1743,7 @@ object SparkEntry extends SparkEntryOracleMain
     }),
   )
 
-  /** Deterministic messy-URL corpus for the URL operators: both engines
-    * synthesize the same mixed-case / default-port / userinfo / fragment /
-    * schemeless URL per document (the html_extract discipline), so the
-    * oracle checks real normalization work, not a pre-clean column.
-    * doc_id%6 picks the mess class, doc_id%5 the host — ~30 hosts, enough
-    * population per host for the cap to bite.
-    */
+  /** The DuckDB oracle SQL of every registered query, keyed by name. */
   def oracleSql: Map[String, String] = oracleSqlMap
 
   private lazy val oracleSqlMap: Map[String, String] =

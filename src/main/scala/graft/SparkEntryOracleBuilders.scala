@@ -21,6 +21,13 @@ private[graft] trait SparkEntryOracleBuilders {
       name: String): DataFrame =
     graft.sources.Tables.load(spark, dir, name)
 
+  /** Deterministic messy-URL corpus for the URL operators: both engines
+    * synthesize the same mixed-case / default-port / userinfo / fragment /
+    * schemeless URL per document (the html_extract discipline), so the
+    * oracle checks real normalization work, not a pre-clean column.
+    * doc_id%6 picks the mess class, doc_id%5 the host — ~30 hosts, enough
+    * population per host for the cap to bite.
+    */
   private[graft] def messyUrls(docs: DataFrame): DataFrame = {
     val m = pmod(col("doc_id"), lit(6))
     val k = pmod(col("doc_id"), lit(5)).cast("string")

@@ -89,10 +89,8 @@ object CoOccurrence {
     * SAME relation (the plan node is held to cooccur_counts' oracle hash
     * via the registered cooccur_counts_plan twin), with no encoder round
     * trip: scan → window-pairs → partial aggregate fuse into one codegen
-    * stage. r17 optimization (guide §1.2 "per-task work"): the default
-    * pair source for DOWNSTREAM consumers (graph edge builders, PPMI,
-    * stripe/totals normalizations) — measured 1.80 s (flatMap) vs 1.07 s
-    * (plan node) for the identical counts query at sf0.1. The four
+    * stage. It is the default pair source for DOWNSTREAM consumers
+    * (graph edge builders, PPMI, stripe/totals normalizations). The four
     * registered O4 forms (flatMap / SQL / UDTF / plan) keep their own
     * implementations; uncapped window only (the capped twin stays on
     * [[counts]], whose maxWindow the plan node deliberately doesn't

@@ -19,11 +19,16 @@ import graft.Basket
   */
 object CrystalBall {
 
-  /** (product, neighbor, cnt) → + prob. One extra exchange on `product`
-    * over aggregated data only.
+  /** (product, neighbor, cnt) → + prob. One exchange on `product` over
+    * aggregated data only: the [[Width.spread]] at the session width, which
+    * the window, everything persisted from it and every reader of that
+    * relation inherit (the reference's per-product reducers, run in
+    * parallel). An input already hash-partitioned on `product` at that
+    * width, such as a table bucketed at it, keeps its layout and plans no
+    * exchange.
     */
   def normalize(counts: DataFrame): DataFrame =
-    counts.withColumn("prob",
+    Width.spread(counts, "product").withColumn("prob",
       col("cnt") / sum(col("cnt")).over(Window.partitionBy(col("product"))))
 
   /** Skew-safe alternative to the window: aggregate per-product totals
@@ -60,9 +65,9 @@ object CrystalBall {
     stripeShape(normalize(CoOccurrence.counts(baskets)))
 
   /** The stripe aggregation over an already-normalized (product,
-    * neighbor, cnt, prob) relation — split out (r17 optimization) so the
-    * registered stripe queries can feed it from
-    * [[CoOccurrence.countsFused]] without re-stating the shape.
+    * neighbor, cnt, prob) relation, so the registered stripe queries can
+    * feed it from [[CoOccurrence.countsFused]] without re-stating the
+    * shape.
     */
   def stripeShape(probs: DataFrame): DataFrame =
     probs
@@ -77,7 +82,7 @@ object CrystalBall {
   def stripeMap(baskets: Dataset[Basket]): DataFrame =
     stripeMapShape(normalize(CoOccurrence.counts(baskets)))
 
-  /** MapType twin of [[stripeShape]] (see its r17 note). */
+  /** MapType twin of [[stripeShape]]. */
   def stripeMapShape(probs: DataFrame): DataFrame =
     probs
       .groupBy(col("product"))
@@ -85,7 +90,7 @@ object CrystalBall {
         sort_array(collect_list(struct(col("neighbor"), col("prob")))))
         .as("stripe"))
 
-  /** PPMI / LIFT ranking over the co-occurrence counts (r16 — the
+  /** PPMI / LIFT ranking over the co-occurrence counts (the
     * information-theoretic sibling of [[normalize]]'s P(b|a), the
     * classic word-association statistic of Church & Hanks 1990 applied
     * to the reference's product domain): lift(a,b) =
@@ -102,7 +107,7 @@ object CrystalBall {
     * the rank cut pushed map-side by WindowGroupLimit) — nothing here
     * touches raw observations.
     *
-    * minCount (r17, the Church & Hanks support floor): PMI is famously
+    * minCount (the Church & Hanks support floor): PMI is famously
     * unstable on rare pairs — a once-seen pair with two rare members
     * posts an enormous lift that is pure noise, and at corpus scale the
     * once-seen tail IS most of the pair relation. Every PMI
@@ -121,9 +126,9 @@ object CrystalBall {
     // NO operator-scoped cache: the pair relation is traversed four
     // times (two marginals, the total, the scored join) and a DISK_ONLY
     // row-format cache of a corpus-scale relation loses to columnar
-    // scans (the ppr_seeded r15 measurement) — the registered query
-    // materializes its counts chain to a parquet table first, so each
-    // traversal here is a compact columnar scan
+    // scans — the registered query materializes its counts chain to a
+    // parquet table first, so each traversal here is a compact columnar
+    // scan
     val c = counts.select(col("product"), col("neighbor"), col("cnt"))
     val rowM = c.groupBy(col("product")).agg(sum(col("cnt")).as("c_a"))
     val colM = c.groupBy(col("neighbor")).agg(sum(col("cnt")).as("c_b"))

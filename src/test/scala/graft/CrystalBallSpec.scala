@@ -1,8 +1,14 @@
 package graft
 
+import java.nio.file.Files
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM,
+  ShuffleExchangeExec}
+import org.apache.spark.sql.execution.window.WindowExec
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
-import graft.sources.BasketSource
+import graft.sources.{BasketSource, TableSink}
 import graft.operators.{CoOccurrence, CrystalBall}
 
 /** Golden-parity + edge-case suite for the flagship crystal-ball semantics
@@ -156,6 +162,54 @@ class CrystalBallSpec extends AnyFunSuite {
       assert(got.map(_.map(Golden.parseStripe)) ==
         Golden.stripeParts(variant).map(_.map(Golden.parseStripe)), variant)
     }
+  }
+
+  test("CrystalBallApp.run releases its persist when a write fails") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val dir = Files.createTempDirectory("crystalball_app_fail")
+    // the pair write succeeds and fills the cache; the stripe write cannot
+    // create its directory through a dangling link
+    Files.createSymbolicLink(dir.resolve("CrystalBallStripe"),
+      dir.resolve("missing").resolve("CrystalBallStripe"))
+    intercept[Exception](CrystalBallApp.run(spark, Golden.inputPath, dir.toString))
+    assert(Files.isDirectory(dir.resolve("CrystalBallPair")), "the pair write did not run")
+    assert(sc.getPersistentRDDs.keySet == before,
+      s"persist left behind: ${sc.getPersistentRDDs}")
+  }
+
+  private object Plans extends AdaptiveSparkPlanHelper
+
+  test("normalize runs its window at the session width under AQE") {
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
+    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+    val probs = CrystalBall.normalize(
+      CoOccurrence.counts(BasketSource.fromLines(spark, fixtureLines)))
+    assert(probs.collect().length == 34)
+    val plan = probs.queryExecution.executedPlan
+    val (shuffle, width) = Plans.collectFirst(plan) { case w: WindowExec => w }
+      .flatMap(Specs.firstShuffleRead)
+      .getOrElse(fail(s"no window over a shuffle in\n$plan"))
+    assert(shuffle.shuffleOrigin == REPARTITION_BY_NUM, plan)
+    assert(width == 4, plan)
+  }
+
+  test("normalize over a table bucketed at the session width plans no exchange") {
+    val table = "crystalball_spec_bucketed_counts"
+    TableSink.writeBucketed(
+      CoOccurrence.counts(BasketSource.fromLines(spark, fixtureLines)),
+      table, "product", 4)
+    try {
+      // the lineitem_serve lookup shape
+      val probs = CrystalBall.normalize(
+        spark.table(table).filter(col("product") === "12"))
+      val got = probs.collect()
+        .map(r => r.getAs[String]("neighbor") -> r.getAs[Double]("prob")).toMap
+      assert(got("34") == 4.0 / 11.0)
+      val plan = probs.queryExecution.executedPlan
+      assert(Plans.collect(plan) { case e: ShuffleExchangeExec => e }.isEmpty,
+        s"exchange planned over the bucketed read\n$plan")
+    } finally spark.sql(s"DROP TABLE IF EXISTS $table")
   }
 
   test("per-product probabilities sum to 1") {

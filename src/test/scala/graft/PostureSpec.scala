@@ -5,8 +5,6 @@ import scala.jdk.CollectionConverters._
 import scala.util.matching.Regex
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec,
-  AdaptiveSparkPlanExec, QueryStageExec, ShuffleQueryStageExec}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.Width
 
@@ -69,20 +67,10 @@ class PostureSpec extends AnyFunSuite {
   }
 
   /** Partitions the final adaptive plan of an executed frame reads from
-    * its first shuffle. Query stages are leaves of the final plan, so the
-    * walk steps into each stage's own plan.
-    */
-  private def shuffleReadWidth(plan: SparkPlan): Int = {
-    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
-      case adaptive: AdaptiveSparkPlanExec => nodes(adaptive.executedPlan)
-      case stage: QueryStageExec => nodes(stage.plan)
-      case _ => p.children.flatMap(nodes)
-    })
-    nodes(plan).collectFirst {
-      case read: AQEShuffleReadExec => read.partitionSpecs.size
-      case stage: ShuffleQueryStageExec => stage.shuffle.numPartitions
-    }.getOrElse(fail(s"no shuffle read in\n$plan"))
-  }
+    * its first shuffle. */
+  private def shuffleReadWidth(plan: SparkPlan): Int =
+    Specs.firstShuffleRead(plan).map(_._2)
+      .getOrElse(fail(s"no shuffle read in\n$plan"))
 
   test("Width.spread holds the session width under AQE") {
     val spark = Specs.spark

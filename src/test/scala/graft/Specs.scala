@@ -1,6 +1,10 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec,
+  AdaptiveSparkPlanExec, QueryStageExec, ShuffleQueryStageExec}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 
 /** One shared SparkSession for the whole test run, on the engine's one
   * session posture ([[Bench.sessionBuilder]]). */
@@ -10,5 +14,23 @@ object Specs {
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
+  }
+
+  /** The first shuffle an executed plan reads, with the number of
+    * partitions it reads. Query stages are leaves of a final adaptive
+    * plan, so the walk steps into each stage's own plan.
+    */
+  def firstShuffleRead(plan: SparkPlan): Option[(ShuffleExchangeLike, Int)] = {
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case adaptive: AdaptiveSparkPlanExec => nodes(adaptive.executedPlan)
+      case stage: QueryStageExec => nodes(stage.plan)
+      case _ => p.children.flatMap(nodes)
+    })
+    nodes(plan).collectFirst {
+      case read @ AQEShuffleReadExec(stage: ShuffleQueryStageExec, _) =>
+        (stage.shuffle, read.partitionSpecs.size)
+      case stage: ShuffleQueryStageExec =>
+        (stage.shuffle, stage.shuffle.numPartitions)
+    }
   }
 }
