@@ -1,4 +1,5 @@
 package graft
+import graft.operators.CacheScope
 import org.apache.spark.sql.SparkSession
 object Bench {
 
@@ -142,17 +143,18 @@ object Bench {
       // because it poisons both runs equally)
       System.gc()
       val t0 = System.nanoTime()
+      // a full materialization through the noop sink: a count() lets the
+      // optimizer prune whatever the row count does not need
       val ok =
-        try { fn(spark, sfDir).count(); true }
-        catch { case e: Throwable =>
+        try {
+          CacheScope {
+            fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+          }
+          true
+        } catch { case e: Throwable =>
           System.err.println(s"[bench] $name FAILED: ${describeFailure(e)}"); false
         }
-      // measure before cache teardown so clearCache cost isn't charged
-      // to the query
       val elapsed = (System.nanoTime() - t0) / 1e9
-      // operator caches (dedup/assoc) must not occupy storage memory for
-      // the remaining queries
-      spark.catalog.clearCache()
       // a failing query must be visible in the JSON, not look like a fast run
       if (ok) elapsed else -1.0
     }

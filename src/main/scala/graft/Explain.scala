@@ -20,14 +20,12 @@ object Explain {
       println(s"\n========== $name ==========")
       // some builders (ML estimators) run eagerly and can fail — keep
       // dumping the remaining plans
-      try SparkEntry.queries(name)(spark, sfDir).explain("formatted")
+      try graft.operators.CacheScope {
+        SparkEntry.queries(name)(spark, sfDir).explain("formatted")
+      }
       catch { case e: Throwable =>
         System.err.println(s"[explain] $name failed to build: ${Bench.describeFailure(e)}")
       }
-      // plan-only builds never consume the operators' self-releasing
-      // persists — drop the armed listeners instead of leaving each one
-      // to tax every subsequent action with a sameResult tree walk
-      graft.operators.CacheScope.releaseAll()
     }
     spark.stop()
   }

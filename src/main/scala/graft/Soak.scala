@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.operators.CacheScope
 
 /** Dev utility: the LONG-LIVED-SESSION soak (VERDICT r11 item 9). Runs
   * the ENTIRE registered query surface N times (default 2) inside ONE
@@ -49,15 +49,15 @@ object Soak {
       val t0 = System.nanoTime()
       SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
         val before = spark.sparkContext.getPersistentRDDs.keySet
-        try fn(spark, sfDir).count()
+        try CacheScope { fn(spark, sfDir).count() }
         catch { case e: Throwable =>
           failed += 1
           System.err.println(s"[soak] $name failed: ${Bench.describeFailure(e)}")
         }
         // NOTE: deliberately NO clearCache — the soak exists to prove
-        // the operator-scoped release discipline holds without it.
-        // Attribute any persist a query leaves behind: the leak report
-        // that makes a growth column actionable.
+        // that the scope releases every operator persist. The scope's
+        // release is synchronous, so whatever is persisted now and was
+        // not before is this query's leak.
         val leaked =
           spark.sparkContext.getPersistentRDDs.keySet -- before
         if (leaked.nonEmpty)
@@ -65,11 +65,11 @@ object Soak {
             s"RDD(s): ${leaked.toSeq.sorted.mkString(",")}")
       }
       val secs = (System.nanoTime() - t0) / 1e9
+      // the heap figure: the pause lets Spark's cleaner drop the blocks
+      // the first GC released before the second GC counts
       System.gc(); Thread.sleep(500); System.gc()
-      // ground-truth survivor list (the per-query [soak-leak] lines can
-      // race CacheScope's async listener-bus release; after the settle
-      // sleep, anything still persisted really is leaked). RDD.toString
-      // carries the creation site — the attribution that matters.
+      // survivors of the whole pass; RDD.toString carries the creation
+      // site — the attribution that matters
       spark.sparkContext.getPersistentRDDs.toSeq.sortBy(_._1)
         .foreach { case (id, rdd) =>
           println(s"[soak-survivor] pass=$p rdd=$id $rdd")
@@ -88,7 +88,7 @@ object Soak {
     var auditFailed = 0
     SparkEntry.auditQueries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       try {
-        val n = fn(spark, sfDir).count()
+        val n = CacheScope { fn(spark, sfDir).count() }
         if (n == 0L) {
           auditFailed += 1
           System.err.println(s"[soak-audit] $name returned 0 rows")

@@ -177,13 +177,13 @@ object SparkEntry extends SparkEntryOracleMain
       // r18 (guide §2.4, the cooccur_totals_tws_boot pattern): the
       // basket build fed THREE actions (base write, append, merge
       // count), each re-running the lineitem shuffle + list build. One
-      // operator-scoped persist, released after the merge action.
+      // scoped persist serves all three.
       // cooccur_persisted deliberately does NOT get this: its PlanSpec
       // pin (and its point) is that the merge plan scans lineitem
       // exactly once — a persist would hide the delta scan behind an
       // InMemoryRelation.
-      val b = graft.operators.CacheScope.selfReleasing(
-        BasketSource.fromLineitem(s, dir), matchingActions = 3)
+      val b = graft.operators.CacheScope.persist(
+        BasketSource.fromLineitem(s, dir))
       val gen = crc32(col("customer").cast("binary")) % 3
       val tbl = "graft_cooccur_appended"
       graft.sources.TableSink.writeBucketed(
@@ -346,11 +346,10 @@ object SparkEntry extends SparkEntryOracleMain
           // r18 (guide §2.4): the basket build fed TWO separate actions
           // (the backfill saveTable and the stream-half text write),
           // each re-running the lineitem shuffle + list build. One
-          // operator-scoped persist, released after its second consumer.
-          val baskets = graft.operators.CacheScope.selfReleasing(
+          // scoped persist serves both.
+          val baskets = graft.operators.CacheScope.persist(
             BasketSource.fromLineitem(s, dir)
-              .withColumn("bkt", Sampling.bucket100(col("customer"))),
-            matchingActions = 2)
+              .withColumn("bkt", Sampling.bucket100(col("customer"))))
           val backfill = CoOccurrence.countsFused(
               baskets.filter(col("bkt") < 50))
             .groupBy(col("product"))
@@ -1464,9 +1463,8 @@ object SparkEntry extends SparkEntryOracleMain
       // upsertApply consumes the feed twice (anti-join keys + images);
       // a real pipeline passes a materialized CDC batch, so a DERIVED
       // feed persists DISK_ONLY first — else the diff join runs twice
-      // at snapshot scale. Operator-scoped release (r12): one lazy
-      // consumer plan, so selfReleasing frees it after the action.
-      val feed = CacheScope.selfReleasing(
+      // at snapshot scale.
+      val feed = CacheScope.persist(
         Scd.snapshotDiff(oldSnap, newSnap, Seq("o_orderkey"),
           includePayload = true),
         org.apache.spark.storage.StorageLevel.DISK_ONLY)

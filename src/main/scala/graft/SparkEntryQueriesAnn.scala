@@ -576,22 +576,16 @@ private[graft] trait SparkEntryQueriesAnn extends SparkEntryStaging {
       // branches of the corpus plan (both union arms + the DSIR
       // selection chain), and un-persisted the whole gopher→c4→LSH
       // curation ran once per branch inside the corpus-materializing
-      // action. One operator-scoped persist dedupes that; it
-      // self-releases on the trainer's collect (the first action),
-      // after which every later action reads the corpus persist.
-      val kept = graft.operators.CacheScope.selfReleasing(
+      // action. One scoped persist dedupes that.
+      val kept = graft.operators.CacheScope.persist(
         Dedup.keepCanonical(cleaned,
           Dedup.minhashLsh(cleaned).select(col("doc_a"), col("doc_b"))))
       val sel = Dsir.dsirSelect(kept, k = 100).select(col("doc_id"))
-      // matchingActions = 2: the BPE trainer's word-type collect is a
-      // legitimate internal Dataset action over this relation — releasing
-      // on it (the default first-match) would recompute the entire
-      // curation chain for the encode action that follows
-      val corpus = graft.operators.CacheScope.selfReleasing(
+      // read twice: the BPE trainer's word-type collect, then the encode
+      val corpus = graft.operators.CacheScope.persist(
         kept.filter(col("lang") === "en").select(col("doc_id"), col("text"))
           .unionByName(
-            kept.select(col("doc_id"), col("text")).join(sel, Seq("doc_id"))),
-        matchingActions = 2)
+            kept.select(col("doc_id"), col("text")).join(sel, Seq("doc_id"))))
       Packing.packFromLengths(
         TextAnalysis.bpeTrainedEncode(corpus)
           .select(col("doc_id"), col("n_bpe_tokens").as("len")))
@@ -745,17 +739,7 @@ private[graft] trait SparkEntryQueriesAnn extends SparkEntryStaging {
       val docs = t(s, dir, "documents")
       val gKeep = TextAnalysis.gopherQuality(docs, stopList = Seq("the", "a"))
         .filter(col("keep")).select(col("doc_id"))
-      // r18 receipt — persist of `repaired` tried and REJECTED: it feeds
-      // both the LM-bucket branch and the passage-dedup input, so a
-      // CacheScope.selfReleasing(…, matchingActions = 2) persist looked
-      // like the pipeline_dsir_pack win (2 needed: ExactRank's
-      // build-time rank pass inside bigramBucketLabels is itself a
-      // listener-visible action over this relation and ate the default
-      // single match — the plan lost its InMemoryRelation silently).
-      // Measured with the substitution PROVEN in the plan: 2.16/1.91 s
-      // per action vs 1.51/1.57 s without (sf0.1/32c, warm) — the
-      // DISK_ONLY materialization of the full-width text relation costs
-      // more than recomputing the pruned gopher→c4 chain per branch.
+      // no persist of `repaired`: measured slower (OPTIMIZATION_r18.md §14)
       val repaired = TextAnalysis.c4LineFilter(docs.join(gKeep, Seq("doc_id")),
           minLineWords = 50, requireTerminalPunct = false)
         .filter(col("keep"))

@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.operators.CacheScope
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -20,16 +20,12 @@ object Verify {
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only.contains(name) }
       .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+      try CacheScope {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+      }
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${Bench.describeFailure(e)}")
-      }
-      finally {
-        spark.catalog.clearCache() // per-query operator caches
-        // a build that failed before its consuming action leaves armed
-        // self-release listeners behind — drop them (Explain discipline)
-        graft.operators.CacheScope.releaseAll()
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

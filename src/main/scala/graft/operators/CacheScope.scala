@@ -1,131 +1,44 @@
 package graft.operators
 
+import java.util.concurrent.ConcurrentLinkedDeque
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.QueryExecution
-import org.apache.spark.sql.util.QueryExecutionListener
 import org.apache.spark.storage.StorageLevel
 
-/** Operator-scoped cache release (r12): the loan pattern for the few
-  * remaining intra-operator persists, replacing the old caller contract
-  * ("release with `spark.catalog.clearCache()` after materializing").
-  *
-  * A reuse persist inside an operator has a well-defined lifetime: it
-  * exists so that ONE consuming action computes the upstream pipeline
-  * once instead of N times. [[selfReleasing]] encodes exactly that:
-  *
-  *  1. persist — lazily by default (blocks land during the consumer's
-  *     action exactly as before, zero extra passes). `eager = true`
-  *     additionally MATERIALIZES through the RDD surface
-  *     (`queryExecution.toRdd.count()`) first: an RDD action fires no
-  *     [[QueryExecutionListener]] event, so an operator that runs its
-  *     OWN Dataset action after this call (nearDupClusters' label
-  *     handoff) cannot have that action's completion event race the
-  *     arming below and release prematurely. Operators that run no
-  *     internal Dataset action need no eagerness — the only matching
-  *     event possible is the consumer's.
-  *  2. arm a one-shot listener that, on the first Dataset action whose
-  *     analyzed plan CONTAINS this relation (matched with `sameResult`,
-  *     so aliasing and exprId churn don't defeat it), unpersists and
-  *     unregisters itself. Failure releases too — an aborted consumer
-  *     must not strand blocks.
-  *
-  * After the consumer's action the blocks are gone without any caller
-  * involvement; `clearCache()` remains harmless. A relation armed but
-  * never consumed (a query built for plan inspection only) no longer
-  * keeps its listener indefinitely (the r12 shape — each stale listener
-  * taxed every subsequent action with a `sameResult` tree walk for the
-  * life of the session): a stale listener now retires itself after
-  * [[MaxStaleActions]] non-matching actions, and plan-only builders
-  * (Explain-style callers) can call [[releaseAll]] to drop every armed
-  * registration at once. A retired relation's DataFrame still works —
-  * lineage recomputes, which is the old clearCache behavior.
-  *
-  * Known benign race (r12 review): listener events deliver
-  * asynchronously, so when the SAME query is rebuilt back-to-back
-  * (Bench's min-of-2 timing), run 1's late completion event can match
-  * run 2's freshly armed marker via `sameResult` and release run 2's
-  * persist before its action runs. Worst case is LOST REUSE inside that
-  * one consumer (lineage recomputes — results unchanged), which is also
-  * exactly what the old clearCache-between-runs measurement discipline
-  * produced; correctness is never affected, so this stays a documented
-  * trade rather than a timestamp-guard complication.
+/** The lifetime of an operator's reuse persist: it lives until the
+  * consuming job ends. A caller runs its consuming actions inside
+  * `CacheScope { … }`; every [[persist]] made while the body runs, on
+  * the calling thread or on a thread started inside the body (a
+  * streaming query's micro-batch thread), is unpersisted when the body
+  * returns or throws. A nested scope releases only its own
+  * registrations. Outside a scope [[persist]] is a plain persist that
+  * the caller owns.
   */
 object CacheScope {
 
-  /** CONSECUTIVE non-matching Dataset actions a still-armed listener
-    * survives before retiring itself (a matching action resets the
-    * count — r13 advice: a live multi-action consumer must not lose its
-    * persist to unrelated traffic between its reads). In this engine a
-    * cache's consumer action follows its arming immediately, so any
-    * registration this stale is a plan-only build; retirement costs
-    * lost reuse at worst, never correctness.
-    */
-  val MaxStaleActions = 64
+  // inheritable: a thread started inside a scope registers with it
+  private val current =
+    new InheritableThreadLocal[ConcurrentLinkedDeque[DataFrame]]
 
-  // every still-armed registration's idempotent release hook, so
-  // plan-only builders can drop them all without knowing which
-  // operators armed what
-  private val armed =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[() => Unit]()
-
-  /** `matchingActions`: release on the Nth matching Dataset action
-    * instead of the first — for the rare operator whose consumer runs a
-    * legitimate internal Dataset action over the cached relation BEFORE
-    * the final one (pipeline_dsir_pack: the BPE trainer's word-type
-    * collect consumes the curated corpus, then the encode action reads
-    * it again; releasing on the collect would recompute the whole
-    * curation chain). RDD-surface actions (ExactRank's build-time
-    * collects) fire no listener event and don't count.
-    */
-  def selfReleasing(df: DataFrame,
-      level: StorageLevel = StorageLevel.DISK_ONLY,
-      eager: Boolean = false,
-      matchingActions: Int = 1): DataFrame = {
-    require(matchingActions >= 1,
-      s"matchingActions must be >= 1, got $matchingActions")
-    val spark = df.sparkSession
-    val persisted = df.persist(level)
-    if (eager) persisted.queryExecution.toRdd.count()
-    val marker = persisted.queryExecution.analyzed
-    val mgr = spark.listenerManager
-    val done = new java.util.concurrent.atomic.AtomicBoolean(false)
-    val misses = new java.util.concurrent.atomic.AtomicInteger()
-    val hits = new java.util.concurrent.atomic.AtomicInteger()
-    object listener extends QueryExecutionListener {
-      val release: () => Unit = () =>
-        if (done.compareAndSet(false, true)) {
-          persisted.unpersist(false)
-          mgr.unregister(this)
-          armed.remove(release)
-        }
-      private def maybe(qe: QueryExecution): Unit =
-        if (qe.analyzed.exists(_.sameResult(marker))) {
-          // a hit proves the consumer is live: only CONSECUTIVE
-          // non-matching actions may retire this listener, so a
-          // matchingActions=2 consumer with >64 unrelated actions
-          // between its two reads keeps its persist
-          misses.set(0)
-          if (hits.incrementAndGet() >= matchingActions) release()
-        }
-        else if (misses.incrementAndGet() > MaxStaleActions)
-          release() // stale: a plan-only build that never ran
-      override def onSuccess(funcName: String, qe: QueryExecution,
-          durationNs: Long): Unit = maybe(qe)
-      override def onFailure(funcName: String, qe: QueryExecution,
-          exception: Exception): Unit = maybe(qe)
+  def apply[T](body: => T): T = {
+    val outer = current.get
+    val held = new ConcurrentLinkedDeque[DataFrame]
+    current.set(held)
+    try body
+    finally {
+      current.set(outer)
+      // newest first: a relation built on an older one goes before it,
+      // so Spark never re-plans a dependent of a released cache
+      Iterator.continually(held.poll()).takeWhile(_ != null)
+        .foreach(_.unpersist(false))
     }
-    armed.add(listener.release)
-    mgr.register(listener)
-    persisted
   }
 
-  /** Drop every still-armed registration (unpersist + unregister). For
-    * callers that build plans without running them (Explain) — armed
-    * listeners they leave behind would otherwise tax every subsequent
-    * action until their stale-retirement kicks in.
-    */
-  def releaseAll(): Unit = {
-    val it = armed.iterator()
-    while (it.hasNext) it.next().apply()
+  def persist(df: DataFrame,
+      level: StorageLevel = StorageLevel.DISK_ONLY): DataFrame = {
+    // a relation someone already cached stays theirs to release
+    val fresh = df.storageLevel == StorageLevel.NONE
+    val persisted = df.persist(level)
+    if (fresh) Option(current.get).foreach(_.push(persisted))
+    persisted
   }
 }

@@ -80,8 +80,7 @@ object Dedup {
     * while keeping the near-dup signal, which lives in *rare* shingles.
     *
     * The capped shingle relation persists DISK_ONLY (no storage-memory
-    * pin) and releases itself after the first consuming action
-    * ([[CacheScope.selfReleasing]]) — no caller teardown contract.
+    * pin) through [[CacheScope.persist]].
     */
   def ngramJaccard(documents: DataFrame, threshold: Double = 0.1,
       maxDocFreq: Int = MaxShingleDocFreq): DataFrame = {
@@ -98,11 +97,8 @@ object Dedup {
     // sides), so it persists DISK_ONLY: never a storage-MEMORY pin (the r6
     // objection to `.cache()`), and measured 40% faster than recomputing
     // at sf0.1 (1.72 s vs 2.88 s — BENCH_NOTES r7) because recompute pays
-    // a second corpus explode+shuffle. The persist is operator-scoped
-    // (r12): lazily persisted (blocks land during the consumer's own
-    // action — this operator runs no internal Dataset action, so no
-    // eager materialization is needed), self-released after the first
-    // consuming action (CacheScope.selfReleasing).
+    // a second corpus explode+shuffle. The persist is lazy: its blocks
+    // land during the consumer's own action.
     shingleOverlap(documents, maxDocFreq)
       .withColumn("jaccard",
         col("n_common").cast("double") /
@@ -124,7 +120,7 @@ object Dedup {
       .agg(count(lit(1)).as("df"))
       .filter(col("df") <= maxDocFreq)
       .select(col("shingle"))
-    val sh = CacheScope.selfReleasing(
+    val sh = CacheScope.persist(
       base.join(capped, "shingle").select(col("doc_id"), col("shingle")))
     val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
     val inter = sh.as("a").join(sh.as("b"),
@@ -198,7 +194,7 @@ object Dedup {
     // verification all derive from it — the old shape ran
     // regexp_extract_all over the corpus twice (signature pass + token
     // pass) and re-joined the exploded token relation twice to verify.
-    val base = CacheScope.selfReleasing(
+    val base = CacheScope.persist(
       documents.select(col("doc_id"),
         array_sort(array_distinct(expr(
           "regexp_extract_all(lower(text), '[a-z0-9]+', 0)"))).as("toks")))
@@ -209,7 +205,7 @@ object Dedup {
     // representative docs with their token arrays + set size; consumed by
     // the prefix build and twice by the verify join — document-count
     // sized with document-length-bounded rows
-    val repArr = CacheScope.selfReleasing(
+    val repArr = CacheScope.persist(
       base.join(reps.select(col("rep_id").as("doc_id"), col("n_docs")),
           "doc_id")
         .select(col("doc_id"), col("n_docs"), col("toks"),
@@ -233,7 +229,7 @@ object Dedup {
     // so the probe side's partitioning IS the parallelism of the whole
     // generate→verify→intersect span, which fans out ~200× before any
     // byte hits a shuffle (OPTIMIZATION_r18.md §1).
-    val prefix = CacheScope.selfReleasing(Width.spread(ordered
+    val prefix = CacheScope.persist(Width.spread(ordered
       .filter(col("pos") <=
         col("sz") - expr(s"($thresholdE6 * sz + 999999) div 1000000") + 1)
       .select(col("doc_id"), col("token"), col("pos"), col("sz")),
@@ -286,7 +282,7 @@ object Dedup {
     // token arrays die at it — the filter/distinct/orderBy tail reads
     // 7 scalar columns, and orderBy's range-sampling pass re-reads the
     // cache instead of re-running the joins.
-    val inter = CacheScope.selfReleasing(cand
+    val inter = CacheScope.persist(cand
       .join(repArr.select(col("doc_id").as("doc_a"), col("sz").as("sz_a"),
         col("n_docs").as("n_docs_a"), col("toks").as("toks_a")), "doc_a")
       .join(repArr.select(col("doc_id").as("doc_b"), col("sz").as("sz_b"),
@@ -314,7 +310,7 @@ object Dedup {
     * sub-document contamination) has tiny Jaccard (union is dominated
     * by the long doc) but containment 1.0. Same capped, persisted,
     * window-free dataflow as [[ngramJaccard]] — only the denominator
-    * differs; same self-releasing persist, no caller teardown.
+    * differs; same scoped persist.
     */
   def ngramContainment(documents: DataFrame, threshold: Double = 0.5,
       maxDocFreq: Int = MaxShingleDocFreq): DataFrame =
@@ -533,16 +529,12 @@ object Dedup {
     * touches base signatures only for docs that collided (candidate-
     * sized, not base-sized). Best-match reduction is two partial-
     * aggregable groupBys over the matched relation — no per-doc window.
-    *
-    * Signature-relation reuse persists release themselves after the
-    * first consuming action ([[CacheScope.selfReleasing]]); no caller
-    * teardown contract.
     */
   def minhashIncremental(base: DataFrame, batch: DataFrame,
       threshold: Double = 0.25): DataFrame = {
     // DISK_ONLY per the house rule — the base signature relation is
     // corpus-proportional (see minhashLsh; BENCH_NOTES r9 measurement)
-    val baseMh = CacheScope.selfReleasing(minhashSignatures(base))
+    val baseMh = CacheScope.persist(minhashSignatures(base))
     minhashProbeIndex(batch, minhashBandIndex(baseMh), baseMh, threshold)
   }
 
@@ -570,7 +562,7 @@ object Dedup {
     */
   def minhashProbeIndex(batch: DataFrame, baseBands: DataFrame,
       baseSigs: DataFrame, threshold: Double = 0.25): DataFrame = {
-    val batchMh = CacheScope.selfReleasing(minhashSignatures(batch))
+    val batchMh = CacheScope.persist(minhashSignatures(batch))
     val candidates = bandRows(batchMh).as("x").join(baseBands.as("y"),
         bandCols.foldLeft(col("x.band") === col("y.band")) {
           (cond, c) => cond && col(s"x.$c") === col(s"y.$c")
@@ -714,17 +706,15 @@ object Dedup {
     // so returning the persisted RDD directly leaked executor storage
     // across queries — in the r7 shared bench the three cluster queries'
     // leaked final rounds inflated dedup_keep 2.8x over its isolated
-    // time. The label persist itself is operator-scoped (r12): it
-    // materializes eagerly here (one pass over the |nodes|-sized label
-    // relation) and unpersists ITSELF after the first consuming action
-    // (CacheScope.selfReleasing) — both cluster consumers (labels +
-    // sizes join-back) share that one action, so the reuse win is
-    // intact and nothing awaits a caller clearCache. Under eviction
-    // pressure MEMORY_AND_DISK spills instead of dropping, so the
-    // unpersisted lineage below it is a correctness fallback, not the
-    // common path.
-    val out = CacheScope.selfReleasing(labels.orderBy(col("doc_id")),
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK, eager = true)
+    // time. The label persist materializes here (one pass over the
+    // |nodes|-sized label relation) and serves both cluster consumers
+    // (labels + sizes join-back) until the caller's scope closes. Under
+    // eviction pressure MEMORY_AND_DISK spills instead of dropping, so
+    // the unpersisted lineage below it is a correctness fallback, not
+    // the common path.
+    val out = CacheScope.persist(labels.orderBy(col("doc_id")),
+      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    out.queryExecution.toRdd.count() // materialize before the loop state goes
     if (persisted != null) persisted.unpersist(false)
     out
   }
@@ -840,9 +830,8 @@ object Dedup {
     * S-curve's inflection at ~0.71, so truth pairs well above it should
     * be hit with high probability and pairs below it are best-effort.
     *
-    * Both inputs manage their own reuse ([[ngramJaccard]]'s
-    * self-releasing shingle persist; [[minhashLsh]] holds no cache at
-    * all) — no caller teardown.
+    * Both inputs manage their own reuse ([[ngramJaccard]]'s scoped
+    * shingle persist; [[minhashLsh]] holds no cache at all).
     */
   def lshRecall(documents: DataFrame,
       truthThreshold: Double = 0.5): DataFrame = {
@@ -882,10 +871,10 @@ object Dedup {
     require(configs.nonEmpty && configs.forall { case (b, r) =>
       b >= 1 && r >= 1 && b * r == NumHashes },
       s"each config must arrange all $NumHashes hashes")
-    val truth = CacheScope.selfReleasing(
+    val truth = CacheScope.persist(
       ngramJaccard(documents, threshold = truthThreshold)
         .select(col("doc_a"), col("doc_b")).withColumn("t", lit(1L)))
-    val mh = CacheScope.selfReleasing(minhashWide(shingles(documents)))
+    val mh = CacheScope.persist(minhashWide(shingles(documents)))
     configs.map { case (b, r) =>
       lshCandidatesFor(mh, b, r, maxBucket)
         .withColumn("c", lit(1L))
@@ -1316,7 +1305,7 @@ object Dedup {
     * gram, two doc-keyed count-aggs — every shuffle on gram or doc_id.
     */
   def spanNovelty(documents: DataFrame, k: Int = SpanTokens): DataFrame = {
-    val sp = CacheScope.selfReleasing(spans(documents, k))
+    val sp = CacheScope.persist(spans(documents, k))
     val firstDoc = sp.groupBy(col("gram"))
       .agg(min(col("doc_id")).as("first_doc"))
     val per = sp.join(firstDoc, "gram")

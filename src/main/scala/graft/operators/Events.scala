@@ -290,7 +290,7 @@ object Events {
     val pos = events
       .select(col("user_id"), col("event_type"),
         row_number().over(byUser).as("pos"))
-    val fp = graft.operators.CacheScope.selfReleasing(
+    val fp = graft.operators.CacheScope.persist(
       pos.groupBy(col("user_id"), col("event_type"))
         .agg(min(col("pos")).as("first_pos"), max(col("pos")).as("last_pos")))
     val l1 = fp.groupBy(col("event_type").as("pattern"))
@@ -430,7 +430,7 @@ object Events {
     * fail-fast cardinality guard.
     */
   def madOutliers(events: DataFrame): DataFrame = {
-    val cents = CacheScope.selfReleasing(
+    val cents = CacheScope.persist(
       events.select(col("event_type"),
         floor(col("value") * 100).cast("long").as("cents"),
         col("event_id")),
@@ -440,7 +440,7 @@ object Events {
       .filter(expr("rnk = (n_group + 1) div 2"))
       .select(col("event_type"), col("n_group").as("n_events"),
         col("cents").as("med_cents"))
-    val devs = CacheScope.selfReleasing(
+    val devs = CacheScope.persist(
       cents.join(broadcast(med), "event_type")
         .select(col("event_type"), abs(col("cents") - col("med_cents"))
           .as("dev"), col("event_id")),

@@ -42,11 +42,8 @@ object Graph {
     * DISK_ONLY per the [[triangleCounts]] discipline: an edge relation
     * is corpus-sized and must not pin storage memory, least of all
     * across an iterative run where it would compete with every
-    * iteration's shuffle for executor memory. Both releases are
-    * operator-scoped (r12, [[CacheScope.selfReleasing]]): the whole rank
-    * derivation is ONE lazy plan, so the first consuming action
-    * materializes each cache once, reuses it across all iterations'
-    * subtrees, and unpersists it on completion — no caller teardown.
+    * iteration's shuffle for executor memory. Both go through
+    * [[CacheScope.persist]].
     */
   def pageRank(edges: DataFrame, iterations: Int = 3, dampingPct: Int = 85,
       scale: Long = 1000000000L): DataFrame = {
@@ -58,9 +55,9 @@ object Graph {
     val e = edges.select(col("src"), col("dst"))
     val outDeg = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
     // one shuffle on src for the whole run; every iteration rejoins this
-    val withDeg = CacheScope.selfReleasing(
+    val withDeg = CacheScope.persist(
       e.join(outDeg, "src"), StorageLevel.DISK_ONLY)
-    val nodes = CacheScope.selfReleasing(
+    val nodes = CacheScope.persist(
       e.select(col("src").as("node"))
         .union(e.select(col("dst").as("node"))).distinct(),
       StorageLevel.DISK_ONLY)
@@ -115,7 +112,7 @@ object Graph {
     require(rounds >= 1 && rounds <= 4,
       "rounds in [1,4] — unnormalized BIGINT scores overflow beyond that; " +
         "rescale between sweeps (integral div) for deeper runs")
-    val e = CacheScope.selfReleasing(
+    val e = CacheScope.persist(
       edges.select(col("src"), col("dst")), StorageLevel.DISK_ONLY)
     var hub = e.select(col("src")).distinct().withColumn("h", lit(1L))
     // auth participates in the recurrence only FROM the first sweep's
@@ -178,11 +175,11 @@ object Graph {
     // extra disk round-trip (BENCH_NOTES r14)
     val e = edges.select(col("src"), col("dst"))
     val outDeg = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-    val withDeg = CacheScope.selfReleasing(
+    val withDeg = CacheScope.persist(
       e.join(outDeg, "src"), StorageLevel.DISK_ONLY)
     // node relation annotated ONCE with seed membership (left join +
     // flag), so every round's base term is a row-local CASE, not a join
-    val nodes = CacheScope.selfReleasing(
+    val nodes = CacheScope.persist(
       e.select(col("src").as("node"))
         .union(e.select(col("dst").as("node"))).distinct()
         .join(seeds.select(col("node")).distinct()
@@ -227,12 +224,6 @@ object Graph {
     * not pin storage memory) — without the pin the entire upstream edge
     * derivation re-executes once per consuming join (measured 3×).
     *
-    * Both releases are operator-scoped (r12,
-    * [[CacheScope.selfReleasing]]): the count derivation is one lazy
-    * plan, so the first consuming action materializes each cache once,
-    * serves every downstream join from it, and unpersists on
-    * completion — no caller teardown.
-    *
     * Emits (node, n_tri) for vertices in at least one triangle.
     */
   /** LINK PREDICTION over the co-occurrence graph (Liben-Nowell &
@@ -269,14 +260,14 @@ object Graph {
     import org.apache.spark.storage.StorageLevel
     require(maxAdj >= 2 && minCommon >= 1,
       s"linkPredict: maxAdj >= 2, minCommon >= 1 (got $maxAdj/$minCommon)")
-    val und = CacheScope.selfReleasing(
+    val und = CacheScope.persist(
       edges.select(least(col("src"), col("dst")).as("u"),
           greatest(col("src"), col("dst")).as("v"))
         .filter(col("u") =!= col("v")).distinct(),
       StorageLevel.DISK_ONLY)
     val adj = und.select(col("u").as("w"), col("v").as("x"))
       .unionAll(und.select(col("v").as("w"), col("u").as("x")))
-    val deg = CacheScope.selfReleasing(
+    val deg = CacheScope.persist(
       adj.groupBy(col("w")).agg(count(lit(1)).as("deg")),
       StorageLevel.DISK_ONLY)
     val capped = adj
@@ -310,7 +301,7 @@ object Graph {
     import org.apache.spark.storage.StorageLevel
     // canonical undirected edge set (self-loops dropped, both input
     // orientations collapse)
-    val und = CacheScope.selfReleasing(
+    val und = CacheScope.persist(
       edges.select(least(col("src"), col("dst")).as("u"),
           greatest(col("src"), col("dst")).as("v"))
         .filter(col("u") =!= col("v")).distinct(),
@@ -330,7 +321,7 @@ object Graph {
           struct(col("v").as("s"), col("u").as("t"), col("du").as("dt")))
         .as("e"))
       .select(col("e.s").as("s"), col("e.t").as("t"), col("e.dt").as("dt"))
-    val oriented = CacheScope.selfReleasing(orientedPlan,
+    val oriented = CacheScope.persist(orientedPlan,
       StorageLevel.DISK_ONLY)
     // wedges at each apex s: out-neighbor pairs in the SAME (degree, id)
     // order the edges are oriented by, so the closing edge — if it
@@ -381,7 +372,7 @@ object Graph {
     val und = edges.select(least(col("src"), col("dst")).as("u"),
         greatest(col("src"), col("dst")).as("v"))
       .filter(col("u") =!= col("v")).distinct()
-    val adj = CacheScope.selfReleasing(
+    val adj = CacheScope.persist(
       und.select(col("u").as("node"), col("v").as("nbr"))
         .unionAll(und.select(col("v").as("node"), col("u").as("nbr"))),
       StorageLevel.DISK_ONLY)
@@ -448,10 +439,7 @@ object Graph {
     val und = edges.select(least(col("src"), col("dst")).as("u"),
         greatest(col("src"), col("dst")).as("v"))
       .filter(col("u") =!= col("v")).distinct()
-    // plain persist + explicit unpersist (NOT selfReleasing): the driver
-    // loop below runs one internal action per round, so a listener-based
-    // release would fire on round 1 and every later round would recompute
-    // the adjacency from scratch
+    // plain persist + explicit unpersist: loop state goes when the loop ends
     val adj = und.select(col("u").as("node"), col("v").as("nbr"))
       .unionAll(und.select(col("v").as("node"), col("u").as("nbr")))
       .persist(StorageLevel.DISK_ONLY)
@@ -510,10 +498,11 @@ object Graph {
         lastWithOld.filter(col("lbl") =!= col("old")).count() > 0)
       throw new IllegalStateException(
         s"lpaConverged did not converge in $maxRounds rounds")
-    val out = CacheScope.selfReleasing(
+    val out = CacheScope.persist(
       labels.select(col("node"), col("lbl").as("community"))
         .orderBy(col("node")),
-      StorageLevel.MEMORY_AND_DISK, eager = true)
+      StorageLevel.MEMORY_AND_DISK)
+    out.queryExecution.toRdd.count() // materialize before the loop state goes
     if (persisted != null) persisted.unpersist(false)
     out
   }
@@ -552,16 +541,15 @@ object Graph {
     * depth-constant closures at any round count.
     *
     * CONSUMPTION CONTRACT (the price of truncated lineage): the
-    * returned relation is served from an operator-scoped cache;
-    * consecutive consumer actions hit that cache, but once it releases
-    * (first consuming action, or staleness) the relation CANNOT be
-    * lazily recomputed — the checkpointed loop rounds it would replay
-    * through are gone (Spark fails with
-    * CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND, loudly, never wrong data). A
-    * consumer that needs the ranks more than once should persist them
-    * durably — the registered `pagerank_converged` query writes the
-    * result to a catalog table and serves reads from that, which is
-    * also the honest economics: a 55-round fixpoint is an ARTIFACT you
+    * returned relation is served from a [[CacheScope.persist]] cache;
+    * every action inside the caller's scope hits that cache, but once
+    * the scope closes the relation CANNOT be lazily recomputed — the
+    * checkpointed loop rounds it would replay through are gone (Spark
+    * fails with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND, loudly, never wrong
+    * data). A consumer that needs the ranks beyond its scope should
+    * persist them durably — the registered `pagerank_converged` query
+    * writes the result to a catalog table and serves reads from that,
+    * which is also the honest economics: a 55-round fixpoint is an ARTIFACT you
     * store, not a view you recompute. The shallow fixpoints
     * ([[lpaConverged]], [[kcoreDecompose]], [[reachConverged]]) stay
     * persist-only and recomputable precisely to avoid this contract.
@@ -575,8 +563,7 @@ object Graph {
     val spark = edges.sparkSession
     val e = edges.select(col("src"), col("dst"))
     val outDeg = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-    // plain persist + explicit unpersist (the lpaConverged rationale:
-    // the loop runs one internal action per round)
+    // plain persist + explicit unpersist: loop state goes when the loop ends
     val withDeg = e.join(outDeg, "src").persist(StorageLevel.DISK_ONLY)
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct()
@@ -632,9 +619,10 @@ object Graph {
         lastWithOld.filter(col("rank_e9") =!= col("old")).count() > 0)
       throw new IllegalStateException(
         s"pageRankConverged did not converge in maxRounds=$maxRounds rounds")
-    val out = CacheScope.selfReleasing(
+    val out = CacheScope.persist(
       ranks.select(col("node"), col("rank_e9")).orderBy(col("node")),
-      StorageLevel.MEMORY_AND_DISK, eager = true)
+      StorageLevel.MEMORY_AND_DISK)
+    out.queryExecution.toRdd.count() // materialize before the loop state goes
     withDeg.unpersist()
     nodes.unpersist()
     if (persisted != null) persisted.unpersist(false)
@@ -688,7 +676,7 @@ object Graph {
         "alpha constants wired here")
     val bucketHex = if (registers == 16) 1 else 2
     val alphaM2E3 = if (registers == 16) 172288L else 47072712L
-    val e = CacheScope.selfReleasing(
+    val e = CacheScope.persist(
       edges.select(col("src"), col("dst")), StorageLevel.DISK_ONLY)
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct()
@@ -717,7 +705,7 @@ object Graph {
       .withColumn("ball_e2",
         expr(s"CAST((CAST($alphaM2E3 AS DECIMAL(38,0)) * 281474976710656)" +
           " div (10 * s_scaled) AS BIGINT)"))
-    var regs = CacheScope.selfReleasing(regs0, StorageLevel.DISK_ONLY)
+    var regs = CacheScope.persist(regs0, StorageLevel.DISK_ONLY)
     // SHAPE IS THE MEASURED OPTIMUM (r16, VERDICT r15 item 6 — the
     // receipts say NO to both prescribed "optimizations" on this graph,
     // BENCH_NOTES r16 A/B, same host, x100): (a) Boldi–Vigna systolic
@@ -740,7 +728,7 @@ object Graph {
         .unionAll(regs)
         .groupBy(col("node"), col("j")).agg(max(col("m")).as("m"))
       regs = if (r < rounds)
-        CacheScope.selfReleasing(merged, StorageLevel.DISK_ONLY)
+        CacheScope.persist(merged, StorageLevel.DISK_ONLY)
       else merged
       out = out.unionAll(ball(regs, r))
     }
@@ -768,7 +756,7 @@ object Graph {
         greatest(col("src"), col("dst")).as("v"))
       .filter(col("u") =!= col("v")).distinct()
     val lab = labels.select(col("node"), col("community"))
-    val undC = CacheScope.selfReleasing(und,
+    val undC = CacheScope.persist(und,
       org.apache.spark.storage.StorageLevel.DISK_ONLY)
     val m = undC.agg(count(lit(1)).as("m"))
     val ec = undC
@@ -850,7 +838,7 @@ object Graph {
     require(walksPerSeed >= 1 && walksPerSeed <= 8,
       s"walksPerSeed must be in [1, 8], got $walksPerSeed")
     // every step rejoins this — one shuffle for the whole walk set
-    val e = CacheScope.selfReleasing(
+    val e = CacheScope.persist(
       edges.select(col("src"), col("dst")), StorageLevel.DISK_ONLY)
     var state = seeds.select(col("node").as("seed")).distinct()
       .withColumn("rep",
@@ -929,7 +917,7 @@ object Graph {
       s"walksPerSeed must be in [1, 8], got $walksPerSeed")
     // distinct: a duplicated edge row cannot change an argmin, but it
     // WOULD duplicate rows through the adjacency flag join
-    val e = CacheScope.selfReleasing(
+    val e = CacheScope.persist(
       edges.select(col("src"), col("dst")).distinct(),
       StorageLevel.DISK_ONLY)
     // both self-join sides pre-renamed into the walker's own column
@@ -1052,7 +1040,7 @@ object Graph {
     */
   def skipgramNegatives(pairs: DataFrame, m: Int = 2): DataFrame = {
     require(m >= 1 && m <= 16, s"m in [1,16]: $m")
-    val pairsP = CacheScope.selfReleasing(
+    val pairsP = CacheScope.persist(
       pairs.select(col("center"), col("context"), col("cnt")))
     val freqs = pairsP.groupBy(col("context").as("node"))
       .agg(sum(col("cnt")).as("freq"))
@@ -1061,7 +1049,7 @@ object Graph {
       .withColumn("w",
         floor(sqrt(fd) * sqrt(sqrt(fd)) * lit(1000.0)).cast("long"))
       .withColumn("g", lit(1))
-    val ladder = CacheScope.selfReleasing(
+    val ladder = CacheScope.persist(
       ExactRank.exactPrefixSum(weighted, Seq("g"), Seq("node"), "w"))
     val stats = ladder.agg(max(col("w_total")).as("wt"),
       count(lit(1)).as("nn"))
@@ -1101,8 +1089,7 @@ object Graph {
     val und = edges.select(least(col("src"), col("dst")).as("u"),
         greatest(col("src"), col("dst")).as("v"))
       .filter(col("u") =!= col("v")).distinct()
-    // plain persist + explicit unpersist (the lpaConverged rationale:
-    // the loop runs one internal action per round)
+    // plain persist + explicit unpersist: loop state goes when the loop ends
     val adj = und.select(col("u").as("node"), col("v").as("nbr"))
       .unionAll(und.select(col("v").as("node"), col("u").as("nbr")))
       .persist(StorageLevel.DISK_ONLY)
@@ -1145,12 +1132,13 @@ object Graph {
     // in-core degrees over the converged survivor set (>= k for all by
     // the fixpoint). Eager: the plan reads `adj` and the survivor RDD,
     // both unpersisted right after this materializes.
-    val out = CacheScope.selfReleasing(
+    val out = CacheScope.persist(
       adj.join(nodes, "node")
         .join(nodes.select(col("node").as("nbr")), "nbr")
         .groupBy(col("node")).agg(count(lit(1)).as("core_deg"))
         .orderBy(col("node")),
-      StorageLevel.MEMORY_AND_DISK, eager = true)
+      StorageLevel.MEMORY_AND_DISK)
+    out.queryExecution.toRdd.count() // materialize before the loop state goes
     adj.unpersist()
     persisted.unpersist(false)
     out
@@ -1260,11 +1248,12 @@ object Graph {
     if (changed)
       throw new IllegalStateException(
         s"ktrussDecompose did not converge in maxRounds=$maxRounds rounds")
-    val out = CacheScope.selfReleasing(
+    val out = CacheScope.persist(
       e.join(support(e), Seq("u", "v"))
         .select(col("u"), col("v"), col("sup").as("support"))
         .orderBy(col("u"), col("v")),
-      StorageLevel.MEMORY_AND_DISK, eager = true)
+      StorageLevel.MEMORY_AND_DISK)
+    out.queryExecution.toRdd.count() // materialize before the loop state goes
     persisted.unpersist(false)
     out
   }
@@ -1391,10 +1380,11 @@ object Graph {
     if (!converged)
       throw new IllegalStateException(
         s"ktrussDecomposeInc did not converge in maxRounds=$maxRounds rounds")
-    val out = CacheScope.selfReleasing(
+    val out = CacheScope.persist(
       st.select(col("u"), col("v"), col("sup").as("support"))
         .orderBy(col("u"), col("v")),
-      StorageLevel.MEMORY_AND_DISK, eager = true)
+      StorageLevel.MEMORY_AND_DISK)
+    out.queryExecution.toRdd.count() // materialize before the loop state goes
     persisted.unpersist(false)
     out
   }
@@ -1415,9 +1405,8 @@ object Graph {
     * full degree table, not just the transitive core.
     */
   def localClustering(edges: DataFrame): DataFrame = {
-    // one cached copy: the degree table and the wedge join both
-    // traverse it inside the SAME consumer action (matchingActions=1)
-    val e = CacheScope.selfReleasing(
+    // one cached copy: the degree table and the wedge join both read it
+    val e = CacheScope.persist(
       edges.select(least(col("src"), col("dst")).as("u"),
           greatest(col("src"), col("dst")).as("v"))
         .filter(col("u") =!= col("v")).distinct())
@@ -1457,7 +1446,7 @@ object Graph {
     */
   def assortativity(edges: DataFrame): DataFrame = {
     val d38 = "decimal(38,0)"
-    val und = CacheScope.selfReleasing(
+    val und = CacheScope.persist(
       edges.select(least(col("src"), col("dst")).as("u"),
           greatest(col("src"), col("dst")).as("v"))
         .filter(col("u") =!= col("v")).distinct())
@@ -1500,15 +1489,14 @@ object Graph {
     * ≤63-row threshold spine — no per-k scan, no window.
     */
   def richClub(edges: DataFrame): DataFrame = {
-    val und = CacheScope.selfReleasing(
+    val und = CacheScope.persist(
       edges.select(least(col("src"), col("dst")).as("u"),
           greatest(col("src"), col("dst")).as("v"))
         .filter(col("u") =!= col("v")).distinct())
-    val deg = CacheScope.selfReleasing(
+    val deg = CacheScope.persist(
       und.select(col("u").as("x"))
         .unionAll(und.select(col("v").as("x")))
-        .groupBy(col("x")).agg(count(lit(1)).as("d")),
-      matchingActions = 1)
+        .groupBy(col("x")).agg(count(lit(1)).as("d")))
     val ths = deg.agg(max(col("d")).as("md"))
       .select(explode(expr(
         "transform(filter(sequence(0, 62)," +
@@ -1550,22 +1538,17 @@ object Graph {
     * every later level's anti join and by the final union, and the flat
     * cached relations keep `reached`'s lineage linear in k where plain
     * recursion doubles it per level. The edge relation persists DISK_ONLY
-    * for the same reason (k consumptions). All releases are
-    * operator-scoped (r12, [[CacheScope.selfReleasing]]): the final
-    * union is one lazy plan containing every frontier, so its first
-    * consuming action materializes each cache, reuses it across levels,
-    * and unpersists it on completion — no caller teardown. k is a
-    * small fixed constant per the [[pageRank]]
-    * discipline — an open-ended fixpoint would move to
-    * the persisted-row-RDD truncation of Dedup.nearDupClusters.
+    * for the same reason (k consumptions). k is a small fixed constant
+    * per the [[pageRank]] discipline — an open-ended fixpoint would move
+    * to the persisted-row-RDD truncation of Dedup.nearDupClusters.
     */
   def kHopReach(edges: DataFrame, seeds: DataFrame, k: Int): DataFrame = {
     import org.apache.spark.storage.StorageLevel
     require(k >= 1 && k <= 10,
       "k must be in [1, 10] — beyond that use a checkpointed fixpoint")
-    val e = CacheScope.selfReleasing(
+    val e = CacheScope.persist(
       edges.select(col("src"), col("dst")), StorageLevel.DISK_ONLY)
-    var frontiers = List(CacheScope.selfReleasing(
+    var frontiers = List(CacheScope.persist(
       seeds.select(col("node")).distinct()
         .withColumn("min_hops", lit(0)), StorageLevel.DISK_ONLY))
     for (i <- 1 to k) {
@@ -1574,7 +1557,7 @@ object Graph {
         .select(col("dst").as("node")).distinct()
         .join(reached, Seq("node"), "left_anti")
         .withColumn("min_hops", lit(i))
-      frontiers = CacheScope.selfReleasing(next,
+      frontiers = CacheScope.persist(next,
         StorageLevel.DISK_ONLY) :: frontiers
     }
     frontiers.reduce(_ unionByName _).orderBy(col("min_hops"), col("node"))
@@ -1647,9 +1630,10 @@ object Graph {
         s"reachConverged frontier still live after $maxRounds rounds — " +
           "raise maxRounds (and the oracle's recursion bound) together")
     }
-    val out = CacheScope.selfReleasing(
+    val out = CacheScope.persist(
       reached.orderBy(col("min_hops"), col("node")),
-      StorageLevel.MEMORY_AND_DISK, eager = true)
+      StorageLevel.MEMORY_AND_DISK)
+    out.queryExecution.toRdd.count() // materialize before the loop state goes
     frontierRdd.unpersist(false)
     reachedRdd.unpersist(false)
     out

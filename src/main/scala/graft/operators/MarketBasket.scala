@@ -157,15 +157,12 @@ object MarketBasket {
     * on the basket key (shuffle on basket, never a cross product);
     * support/confidence/lift divide exact integer counts.
     *
-    * The distinct-items relation persist (supports + both pair-join
-    * sides) is operator-scoped (r12, [[CacheScope.selfReleasing]]): the
-    * rule derivation is one lazy plan, so the first consuming action
-    * materializes the cache once, serves all three consumers from it,
-    * and unpersists it on completion — no caller teardown.
+    * The distinct-items relation persist serves all three consumers
+    * (supports + both pair-join sides).
     */
   def rules(lineitem: DataFrame, minPairCount: Long = 2): DataFrame = {
     // DISK_ONLY for the corpus-sized relation (see fpgrowthRules)
-    val items = CacheScope.selfReleasing(basketItems(lineitem),
+    val items = CacheScope.persist(basketItems(lineitem),
       StorageLevel.DISK_ONLY)
     // basket count as a broadcast 1-row aggregate — keeps the whole rule
     // derivation a single lazy plan (no driver-side count action/extra scan)

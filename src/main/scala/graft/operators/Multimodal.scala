@@ -751,11 +751,11 @@ object Multimodal {
     * side, capped index side), and for these legs every consumption
     * re-runs the per-doc codec kernel — the dominant cost (measured:
     * audio_ann_partners spent ~2/3 of its x10 wall-clock re-decoding).
-    * One operator-scoped DISK_ONLY persist makes the decode run once;
-    * results are unchanged and the release needs no caller teardown.
+    * One scoped DISK_ONLY persist makes the decode run once; results
+    * are unchanged.
     */
   private def decodedOnce(embeddings: DataFrame): DataFrame =
-    CacheScope.selfReleasing(embeddings,
+    CacheScope.persist(embeddings,
       org.apache.spark.storage.StorageLevel.DISK_ONLY)
 
   /** Video-fingerprint geometry: [[videoPhashFingerprints]] synthesizes

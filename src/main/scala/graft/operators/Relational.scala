@@ -534,7 +534,7 @@ object Relational {
     val d19 = "decimal(19,0)"
     val d38 = "decimal(38,0)"
     val cents = round(col("o_totalprice") * 100).cast("long")
-    val per = graft.operators.CacheScope.selfReleasing(
+    val per = graft.operators.CacheScope.persist(
       orders.select(col("o_custkey"),
           when(col("o_orderdate") < lit(splitDate), cents)
             .otherwise(lit(0L)).as("xc"),
@@ -544,8 +544,7 @@ object Relational {
         .agg(sum(col("xc")).as("x"), sum(col("yc")).as("y"))
         .withColumn("variant",
           when(Sampling.bucket100(col("o_custkey")) < 50, "A")
-            .otherwise("B")),
-      matchingActions = 2)
+            .otherwise("B")))
     val pool = per.agg(
       count(lit(1)).as("n"),
       sum(col("x").cast(d38)).as("sx"),
@@ -617,7 +616,7 @@ object Relational {
       .agg(count(lit(1)).as("n"),
         sum(when(col("cents") > col("median_cents"), 1L).otherwise(0L))
           .as("c"))
-    val perP = graft.operators.CacheScope.selfReleasing(per)
+    val perP = graft.operators.CacheScope.persist(per)
     ks.map { k =>
       // unrolled k-step floored product; (n−c−i) hits ≤0 → r = 0
       val rExpr = (0 until k).foldLeft("1000000"){ (acc, i) =>
@@ -1371,7 +1370,7 @@ object Relational {
       .orderBy(col("l_orderkey"), col("l_linenumber"), col("pk"))
       .limit(maxPoints)
       .withColumn("g", lit(1))
-    val idx = graft.operators.CacheScope.selfReleasing(
+    val idx = graft.operators.CacheScope.persist(
       ExactRank.exactRank(pts, Seq("g"),
         Seq("l_orderkey", "l_linenumber", "pk"), rankCol = "i"))
     val a = idx.select(col("i").as("ia"), col("x").as("xa"),

@@ -85,57 +85,6 @@ object Similarity {
   def serveHead(embeddings: DataFrame, n: Int = ServeHead): DataFrame =
     embeddings.orderBy(col("vec_id")).limit(n).select(col("vec_id"))
 
-  /** Prefix of the truncation-probe metric; each [[cosinePairs]] call
-    * derives a UNIQUE name (`prefix.<seq>`) so two cosinePairs frames can
-    * be composed into one query — Spark rejects a plan that defines the
-    * same observed-metric name twice ("multiple definitions of observed
-    * metrics"). The listener matches by prefix.
-    */
-  private val TruncationMetricPrefix = "graft.cosine_pairs.input_probe"
-
-  private val truncMetricSeq = new java.util.concurrent.atomic.AtomicLong()
-
-  /** Sessions that already carry the truncation listener (weak keys so a
-    * stopped session does not leak through this registry).
-    */
-  private val truncListenerSessions =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[org.apache.spark.sql.SparkSession, java.lang.Boolean]())
-
-  /** One listener per session: watches for the cosinePairs probe metric in
-    * any completed query and logs the truncation warning iff the probe saw
-    * more rows than the cap. Runs on the listener bus — no extra job, and
-    * the warning fires exactly when a truncated query actually executes.
-    */
-  private def registerTruncationListener(
-      spark: org.apache.spark.sql.SparkSession): Unit =
-    if (truncListenerSessions.putIfAbsent(spark, java.lang.Boolean.TRUE) == null)
-      spark.listenerManager.register(
-        new org.apache.spark.sql.util.QueryExecutionListener {
-          override def onSuccess(funcName: String,
-              qe: org.apache.spark.sql.execution.QueryExecution,
-              durationNs: Long): Unit =
-            qe.observedMetrics.foreach { case (name, row) =>
-              if (name.startsWith(TruncationMetricPrefix)) {
-                // over zero input rows the max() aggregate yields a NULL
-                // cap (and count yields 0) — nothing to warn about, and
-                // getLong on the null would throw inside the listener bus
-                val capIdx = row.fieldIndex("cap")
-                if (!row.isNullAt(capIdx)) {
-                  val cap = row.getLong(capIdx)
-                  if (row.getLong(row.fieldIndex("n_probe")) > cap)
-                    log.warn(s"cosinePairs: input exceeds maxVectors=$cap; " +
-                      s"scoring only the first $cap vec_ids on BOTH sides " +
-                      "— pairs among later vectors are omitted (use lshTopK " +
-                      "for the full corpus)")
-                }
-              }
-            }
-          override def onFailure(funcName: String,
-              qe: org.apache.spark.sql.execution.QueryExecution,
-              exception: Exception): Unit = ()
-        })
-
   /** Pairwise cosine scores above `minCos` for vec_id < other_id pairs,
     * both sides drawn from the first `maxVectors` vec_ids (exact baseline
     * over a bounded, deterministic sample — see [[MaxBruteForceQueries]]).
@@ -143,16 +92,15 @@ object Similarity {
   def cosinePairs(embeddings: DataFrame, minCos: Double,
       maxVectors: Int = MaxBruteForceQueries): DataFrame = {
     // The truncation must be audible, not just documented: pairs among
-    // vectors beyond maxVectors are NOT returned. An `observe` metric on a
-    // limit(n+1) probe folds the check into the query's own execution —
-    // zero extra Spark jobs — and a session listener logs the warning when
-    // the query actually materializes (n+1 rows observed ⇒ input over cap).
-    registerTruncationListener(embeddings.sparkSession)
-    val sample = embeddings.orderBy(col("vec_id")).limit(maxVectors + 1)
-      .observe(s"$TruncationMetricPrefix.${truncMetricSeq.incrementAndGet()}",
-        count(lit(1)).as("n_probe"),
-        max(lit(maxVectors.toLong)).as("cap"))
-      .orderBy(col("vec_id")).limit(maxVectors)
+    // vectors beyond maxVectors are NOT returned. One bounded count (at
+    // most maxVectors + 1 ids) says at build time whether the cap cuts.
+    if (embeddings.select(col("vec_id")).limit(maxVectors + 1).count() >
+        maxVectors)
+      log.warn(s"cosinePairs: input exceeds maxVectors=$maxVectors; " +
+        s"scoring only the first $maxVectors vec_ids on BOTH sides " +
+        "— pairs among later vectors are omitted (use lshTopK " +
+        "for the full corpus)")
+    val sample = embeddings.orderBy(col("vec_id")).limit(maxVectors)
     val a = sideWithNorm(sample, "vec_id", "va", "nrm_a")
     val b = sideWithNorm(sample, "other_id", "vb", "nrm_b")
     a.join(b, col("vec_id") < col("other_id"))
@@ -318,15 +266,13 @@ object Similarity {
     val queries = index.orderBy(col("other_id")).limit(maxQueries)
       .select(col("other_id").as("vec_id"), col("vb").as("v"),
         col("nrm_b").as("nrm"))
-    // two consumers: the probed-cell collect below and the serve join —
-    // matchingActions = 2 keeps the persist through both
-    val probes = CacheScope.selfReleasing(
+    // two consumers: the probed-cell collect below and the serve join
+    val probes = CacheScope.persist(
       assignCells(queries, cents)
         .filter(col("crk") <= numProbes)
         .select(col("vec_id"), col("v"), col("nrm"),
           col("cent_id").as("cluster")),
-      org.apache.spark.storage.StorageLevel.DISK_ONLY,
-      matchingActions = 2)
+      org.apache.spark.storage.StorageLevel.DISK_ONLY)
     // bounded collect: <= maxQueries · numProbes cell ids
     val cells = probes.select(col("cluster")).distinct().collect()
       .map(_.getLong(0)).sorted.toSeq
@@ -1280,7 +1226,7 @@ object Similarity {
     // without it the whole assignment chain (N·nlist scores + rank
     // window; three windows in the two-level form) executes twice
     // inside the one consuming action.
-    val assigned = CacheScope.selfReleasing(
+    val assigned = CacheScope.persist(
       if (twoLevel) twoLevelAssign(e, numCentroids)
       else assignCells(e, firstNCentroids(e, numCentroids))
         .filter(col("crk") === 1)
@@ -1291,7 +1237,7 @@ object Similarity {
     // the oracle's shared `dist` CTE. Without the operator-scoped
     // persist the two consumers are separate plan subtrees and the
     // corpus scan + 128×/vector distance expansion executes twice.
-    val dist = CacheScope.selfReleasing(
+    val dist = CacheScope.persist(
       pqSubvectors(embeddings, numSub, dims)
         .join(broadcast(pqCodebook(embeddings, numSub, ks, dims)), "m")
         .select(col("vec_id"), col("m"), col("code_id").as("code"),
@@ -1421,15 +1367,13 @@ object Similarity {
     // corpus convention shared with the PQ/IVF stub quantizers); on a
     // 1-based or sparse corpus `vec_id < k` silently yields fewer seeds
     // and a degenerate clustering — fail fast instead (r16 advice).
-    // One pushed-filter count over ≤k candidate rows, on the RAW input
-    // (never the CacheScope'd relation — a build-time action on that
-    // would consume its one-shot release listener).
+    // One pushed-filter count over ≤k candidate rows, on the RAW input.
     val seedCount = embeddings.filter(col("vec_id") < k).count()
     require(seedCount == k,
       s"kmeans seeds: expected $k vectors with vec_id in [0, $k) — found " +
         s"$seedCount; the seed rule requires dense 0-based vec_ids")
     // quantize once; every round's assign + the final assign re-read it
-    val q = CacheScope.selfReleasing(
+    val q = CacheScope.persist(
       embeddings.select(col("vec_id"),
         expr("transform(embedding, x -> " +
           "CAST(floor(CAST(x AS DOUBLE) * 1000000.0) AS BIGINT))").as("v")),
@@ -1556,11 +1500,11 @@ object Similarity {
     // operator-scoped persist: `assigned` feeds the residual relation
     // AND both sides of the serve's candidate join (the ivfpqTopK
     // lesson, r14 — without it the assignment chain runs per consumer)
-    val assigned = CacheScope.selfReleasing(
+    val assigned = CacheScope.persist(
       assignCells(e, cents).filter(col("crk") === 1)
         .select(col("vec_id"), col("cent_id").as("cluster")),
       org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val dist = CacheScope.selfReleasing(
+    val dist = CacheScope.persist(
       residualDist(residualVectors(e, assigned, cents),
         numCentroids, numSub, ks, dims),
       org.apache.spark.storage.StorageLevel.DISK_ONLY)
@@ -1774,14 +1718,14 @@ object Similarity {
     import org.apache.spark.storage.StorageLevel
     require(probes.nonEmpty && probes.forall(_ >= 1),
       s"probes must be >= 1, got $probes")
-    val truth = CacheScope.selfReleasing(
+    val truth = CacheScope.persist(
       bruteForceTopK(embeddings, k, maxQueries)
         .select(col("vec_id"), col("other_id")).withColumn("t", lit(1L)),
       StorageLevel.DISK_ONLY)
     val e = vectorsWithNorm(embeddings)
     val cents = firstNCentroids(e, numCentroids)
     val scored = assignCells(e, cents)
-    val indexed = CacheScope.selfReleasing(
+    val indexed = CacheScope.persist(
       scored.filter(col("crk") === 1)
         .select(col("vec_id").as("other_id"), col("v").as("vb"),
           col("nrm").as("nrm_b"), col("cent_id").as("cluster_b")),
@@ -1789,7 +1733,7 @@ object Similarity {
     val headIds = embeddings.orderBy(col("vec_id")).limit(maxQueries)
       .select(col("vec_id"))
     // bounded: maxQueries × numCentroids rows
-    val headScored = CacheScope.selfReleasing(
+    val headScored = CacheScope.persist(
       scored.join(headIds, "vec_id"), StorageLevel.DISK_ONLY)
     probes.map { p =>
       val probeSide = headScored.filter(col("crk") <= p)

@@ -230,7 +230,7 @@ object TextAnalysis {
     val nonStop = toks.filter(!col("w").isInCollection(stopwords))
       .withColumn("island", col("pos") - row_number().over(
         Window.partitionBy(col("doc_id")).orderBy(col("pos"))))
-    val phraseTok = CacheScope.selfReleasing(nonStop
+    val phraseTok = CacheScope.persist(nonStop
       .withColumn("plen", count(lit(1)).over(
         Window.partitionBy(col("doc_id"), col("island"))))
       .select(col("doc_id"), col("island"), col("pos"), col("w"),
@@ -280,7 +280,7 @@ object TextAnalysis {
     val nonStop = toks.filter(!col("w").isInCollection(stopwords))
       .withColumn("island", col("pos") - row_number().over(
         Window.partitionBy(col("doc_id")).orderBy(col("pos"))))
-    val phraseTok = CacheScope.selfReleasing(nonStop
+    val phraseTok = CacheScope.persist(nonStop
       .withColumn("plen", count(lit(1)).over(
         Window.partitionBy(col("doc_id"), col("island"))))
       .select(col("doc_id"), col("island"), col("pos"), col("w"),
@@ -337,7 +337,7 @@ object TextAnalysis {
     require(minCount >= 1 && topK >= 1,
       s"collocationsTscore: minCount >= 1, topK >= 1 (got $minCount/$topK)")
     val d38 = "decimal(38,0)"
-    val toks = CacheScope.selfReleasing(
+    val toks = CacheScope.persist(
       documents.select(col("doc_id"),
         posexplode(expr(
           "regexp_extract_all(lower(text), '[a-z0-9]+', 0)"))
@@ -397,7 +397,7 @@ object TextAnalysis {
       explode(expr("regexp_extract_all(lower(text), '[a-z0-9]+', 0)"))
         .as("w"))
     val freq = toks.groupBy(col("w")).agg(count(lit(1)).as("r"))
-    val coc = CacheScope.selfReleasing(
+    val coc = CacheScope.persist(
       freq.groupBy(col("r")).agg(count(lit(1)).as("n_r")))
     coc.join(
         broadcast(coc.select((col("r") - 1).as("r"),
@@ -425,7 +425,7 @@ object TextAnalysis {
     * intermediate never reaches the driver.
     */
   def heapsCurve(documents: DataFrame): DataFrame = {
-    val toks = CacheScope.selfReleasing(documents.select(col("doc_id"),
+    val toks = CacheScope.persist(documents.select(col("doc_id"),
       explode(expr("regexp_extract_all(lower(text), '[a-z0-9]+', 0)"))
         .as("w")))
     val perDocToks = toks.groupBy(col("doc_id"))
@@ -1692,11 +1692,8 @@ object TextAnalysis {
     // persist the MODEL (bigram-TYPE-sized, already aggregated — not the
     // corpus) so ctx derivation + the enrich join don't replay the
     // corpus-sized model build twice; DISK_ONLY per the house rule
-    // (never compete with shuffle memory). Operator-scoped (r12): the
-    // persist is LAZY (this operator runs no internal Dataset action,
-    // so CacheScope's eager flag is unnecessary) and releases itself
-    // after the first consuming action — no caller teardown contract.
-    val model = graft.operators.CacheScope.selfReleasing(
+    // (never compete with shuffle memory).
+    val model = graft.operators.CacheScope.persist(
       bigrams.groupBy(col("w1"), col("w2"))
         .agg(count(lit(1)).as("cnt")))
     val ctx = model.groupBy(col("w1")).agg(sum(col("cnt")).as("ctx_cnt"))
@@ -1744,7 +1741,7 @@ object TextAnalysis {
         "transform(sequence(0, size(arr) - 2), i -> struct(arr[i] AS w1, arr[i + 1] AS w2))"))
         .as("bg"))
       .select(col("doc_id"), col("bg.w1"), col("bg.w2"))
-    val model = graft.operators.CacheScope.selfReleasing(
+    val model = graft.operators.CacheScope.persist(
       bigrams.groupBy(col("w1"), col("w2"))
         .agg(count(lit(1)).as("cnt")))
     val ctx = model.groupBy(col("w1"))
@@ -1839,7 +1836,7 @@ object TextAnalysis {
         "transform(sequence(0, size(arr) - 2), i -> struct(arr[i] AS w1, arr[i + 1] AS w2))"))
         .as("bg"))
       .select(col("doc_id"), col("lang"), col("bg.w1"), col("bg.w2"))
-    val model = graft.operators.CacheScope.selfReleasing(
+    val model = graft.operators.CacheScope.persist(
       bigrams.groupBy(col("lang"), col("w1"), col("w2"))
         .agg(count(lit(1)).as("cnt")))
     val ctx = model.groupBy(col("lang"), col("w1"))
@@ -2317,24 +2314,20 @@ object TextAnalysis {
       maxWordLen >= 1, "degenerate unigram-train parameters")
     val spark = documents.sparkSession
     import spark.implicits._
-    val types = graft.operators.CacheScope.selfReleasing(
+    val types = graft.operators.CacheScope.persist(
       documents
         .select(explode(regexp_extract_all(col("text"), lit("[a-z0-9]+"),
           lit(0))).as("word"))
         .filter(length(col("word")) <= maxWordLen)
-        .groupBy(col("word")).agg(count(lit(1)).as("freq")),
-      // the char collect, the multi collect, and every EM round's usage
-      // collect all carry the type subtree in their analyzed plans
-      matchingActions = rounds + 2)
+        .groupBy(col("word")).agg(count(lit(1)).as("freq")))
     // seed pieces: all substrings of length 1..maxPieceLen, corpus-weighted
-    val seeds = graft.operators.CacheScope.selfReleasing(
+    val seeds = graft.operators.CacheScope.persist(
       types.select(col("freq"), explode(expr(
           s"""flatten(transform(sequence(1, length(word)),
              |  i -> transform(sequence(i, least(length(word), i + ${maxPieceLen - 1})),
              |    j -> substr(word, i, j - i + 1))))""".stripMargin))
           .as("piece"))
-        .groupBy(col("piece")).agg(sum(col("freq")).as("cnt")),
-      matchingActions = 2)
+        .groupBy(col("piece")).agg(sum(col("freq")).as("cnt")))
     val charRows: Array[(String, Long)] = seeds
       .filter(length(col("piece")) === 1)
       .as[(String, Long)].collect() // bounded: the charset

@@ -1,99 +1,108 @@
 package graft
 
+import graft.operators.{CacheScope, Graph}
+import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Operator-scoped cache release (r12): after a dedup-family query's
-  * consuming action, NO persisted RDDs may remain — without any caller
-  * calling `clearCache`. This is the contract CacheScope.selfReleasing
-  * (and minhashLsh's structural ReusedExchange form) replaced the old
-  * caller-side teardown with.
+/** `CacheScope { … }` releases every `CacheScope.persist` registered
+  * while its body ran, synchronously, when the body returns or throws.
+  * This suite runs outside any scope so it can watch the boundary.
   */
 class CacheScopeSpec extends AnyFunSuite {
 
   lazy val spark = Specs.spark
   private val sf = "/root/testdata/sf0.001"
 
-  /** Release is a post-action listener event (async bus) — poll. */
-  private def drained(deadlineMs: Long = 20000): Boolean = {
-    val end = System.currentTimeMillis + deadlineMs
-    while (System.currentTimeMillis < end &&
-      spark.sparkContext.getPersistentRDDs.nonEmpty) Thread.sleep(100)
-    spark.sparkContext.getPersistentRDDs.isEmpty
-  }
+  private def persistent = spark.sparkContext.getPersistentRDDs.keySet.toSet
 
   test("dedup-family persists release themselves after the consuming action") {
-    // baseline once: earlier suites ran under the old conventions
-    spark.catalog.clearCache()
-    assert(drained(),
-      s"baseline leak (pre-existing): ${spark.sparkContext.getPersistentRDDs}")
+    val before = persistent
     val names = Seq("minhash_lsh", "ngram_jaccard", "ngram_containment",
       "simhash_pairs", "simhash_partners", "dedup_incremental",
       "dedup_clusters", "dedup_keep", "lsh_recall")
     for (n <- names if SparkEntry.queries.contains(n)) {
-      SparkEntry.queries(n)(spark, sf).count() // the one consuming action
-      assert(drained(), s"$n left persisted RDDs behind: " +
-        spark.sparkContext.getPersistentRDDs.values.map(_.toString))
+      CacheScope { SparkEntry.queries(n)(spark, sf).count() }
+      assert(persistent == before, s"$n left persisted RDDs behind: " +
+        (persistent -- before))
     }
   }
 
-  test("releaseAll drops persists armed by plan-only builds") {
-    import spark.implicits._
-    spark.catalog.clearCache()
-    assert(drained(), "baseline leak")
-    // arm two relations and never run their consumers — the Explain
-    // scenario the r12 advice flagged (stale listeners taxing every
-    // later action for the life of the session)
-    val a = operators.CacheScope.selfReleasing(
-      Seq(1, 2, 3).toDF("x").selectExpr("x * 2 AS y"))
-    val b = operators.CacheScope.selfReleasing(
-      Seq(4, 5).toDF("x").selectExpr("x + 1 AS z"))
-    // force the persists to actually hold blocks via the RDD surface
-    // (no listener event, so nothing self-releases yet)
-    a.queryExecution.toRdd.count()
-    b.queryExecution.toRdd.count()
-    assert(spark.sparkContext.getPersistentRDDs.size == 2,
-      s"expected 2 armed persists: ${spark.sparkContext.getPersistentRDDs}")
-    operators.CacheScope.releaseAll()
-    assert(drained(), s"releaseAll left persists: " +
-      spark.sparkContext.getPersistentRDDs.values.map(_.toString))
-    // and an unrelated action after releaseAll must not throw (the
-    // armed listeners are unregistered, not just spent)
-    assert(Seq(1).toDF("x").count() == 1)
-  }
-
-  test("matchingActions = 2 survives the first consumer and releases on the second") {
-    import spark.implicits._
-    spark.catalog.clearCache()
-    operators.CacheScope.releaseAll()
-    assert(drained(), "baseline leak")
-    val twice = operators.CacheScope.selfReleasing(
-      Seq(1, 2, 3).toDF("x").selectExpr("x * 3 AS y"),
-      matchingActions = 2)
-    twice.count() // matching action #1 — must NOT release
-    // the release path is async; give a wrong early release time to land
-    Thread.sleep(1000)
-    assert(spark.sparkContext.getPersistentRDDs.size == 1,
-      "the first matching action must not release a matchingActions=2 persist: " +
-        spark.sparkContext.getPersistentRDDs)
-    twice.count() // matching action #2 — releases
-    assert(drained(), "second matching action failed to release: " +
-      spark.sparkContext.getPersistentRDDs.values.map(_.toString))
-  }
-
-  test("a stale armed listener retires itself after MaxStaleActions") {
-    import spark.implicits._
-    spark.catalog.clearCache()
-    operators.CacheScope.releaseAll()
-    assert(drained(), "baseline leak")
-    val stale = operators.CacheScope.selfReleasing(
-      Seq(9, 9).toDF("x").selectExpr("x - 1 AS w"))
-    stale.queryExecution.toRdd.count() // blocks held, listener armed
-    assert(spark.sparkContext.getPersistentRDDs.size == 1)
-    // run non-matching Dataset actions past the retirement threshold
-    (0 to operators.CacheScope.MaxStaleActions).foreach { i =>
-      Seq(i).toDF("x").count()
+  test("dedup_incremental_stream's micro-batch persists are released") {
+    // the stream's foreachBatch runs Dedup.minhashProbeIndex on the
+    // stream thread, which the query starts inside the scope
+    val before = persistent
+    val during = CacheScope {
+      SparkEntry.queries("dedup_incremental_stream")(spark, sf).count()
+      persistent -- before
     }
-    assert(drained(), "stale listener never retired its persist: " +
-      spark.sparkContext.getPersistentRDDs.values.map(_.toString))
+    assert(during.nonEmpty, "the micro-batches persisted nothing")
+    assert(persistent == before, "micro-batch persists survived the scope: " +
+      (persistent -- before))
+  }
+
+  test("a scope whose body throws still releases") {
+    import spark.implicits._
+    val before = persistent
+    var held: org.apache.spark.sql.DataFrame = null
+    val e = intercept[IllegalStateException] {
+      CacheScope {
+        held = CacheScope.persist(Seq(1, 2, 3).toDF("x").selectExpr("x * 2 AS y"))
+        held.count()
+        assert(persistent.size == before.size + 1)
+        throw new IllegalStateException("consumer failed")
+      }
+    }
+    assert(e.getMessage == "consumer failed")
+    assert(held.storageLevel == StorageLevel.NONE)
+    assert(persistent == before)
+  }
+
+  test("a nested scope releases only its own registrations") {
+    import spark.implicits._
+    val before = persistent
+    CacheScope {
+      val outer = CacheScope.persist(Seq(1, 2).toDF("x").selectExpr("x + 7 AS o"))
+      outer.count()
+      val inner = CacheScope {
+        val mine = CacheScope.persist(Seq(3, 4).toDF("x").selectExpr("x - 7 AS i"))
+        mine.count()
+        // already cached by the outer scope: not the inner scope's to drop
+        CacheScope.persist(outer).count()
+        mine
+      }
+      assert(inner.storageLevel == StorageLevel.NONE, "inner persist survived")
+      assert(outer.storageLevel == StorageLevel.DISK_ONLY,
+        "the inner scope released the outer scope's persist")
+    }
+    assert(persistent == before)
+  }
+
+  test("outside a scope the persist belongs to the caller") {
+    import spark.implicits._
+    val owned = CacheScope.persist(Seq(5).toDF("x").selectExpr("x * 11 AS c"),
+      StorageLevel.MEMORY_AND_DISK)
+    CacheScope { assert(owned.count() == 1) }
+    assert(owned.storageLevel == StorageLevel.MEMORY_AND_DISK)
+    owned.unpersist(true)
+  }
+
+  test("pageRankConverged's result serves two actions inside one scope") {
+    import spark.implicits._
+    // two directed 4-cliques bridged 4↔10 converge in ~10 rounds; the
+    // result reads checkpointed rounds that are gone once its persist
+    // is released, so every action on it must run inside the scope
+    def diClique(ids: Seq[Long]) =
+      for (a <- ids; b <- ids if a != b) yield (a, b)
+    val edges = (diClique(Seq(1L, 2L, 3L, 4L)) ++
+      diClique(Seq(10L, 11L, 12L, 13L)) ++ Seq((4L, 10L), (10L, 4L)))
+      .toDF("src", "dst")
+    val (first, second) = CacheScope {
+      val ranks = Graph.pageRankConverged(edges)
+      // a derived frame plans afresh: it cannot reuse the first
+      // action's shuffle files, only the cache
+      (ranks.collect().toSeq, ranks.orderBy("node").collect().toSeq)
+    }
+    assert(first.size == 8)
+    assert(first == second)
   }
 }

@@ -16,7 +16,7 @@ import graft.operators.{CoOccurrence, CrystalBall}
   * reference fixture ([[Golden]]), parsed (never byte-compared — stripe
   * map order in the reference is Java HashMap order).
   */
-class CrystalBallSpec extends AnyFunSuite {
+class CrystalBallSpec extends AnyFunSuite with CacheScoped {
 
   lazy val spark: SparkSession = Specs.spark
 

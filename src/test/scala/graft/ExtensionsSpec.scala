@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.{CoOccurrence, CrystalBall}
 import graft.sources.BasketSource
 
-class ExtensionsSpec extends AnyFunSuite {
+class ExtensionsSpec extends AnyFunSuite with CacheScoped {
 
   test("GraftExtensions installs co_occur_pairs and dot_d at session build") {
     val base = Specs.spark // ensure the shared context exists first

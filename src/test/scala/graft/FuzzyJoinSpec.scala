@@ -11,7 +11,7 @@ import graft.operators.FuzzyJoin
   * including randomized corpora that cross the short-string cut and stack
   * near-duplicates on one gram.
   */
-class FuzzyJoinSpec extends AnyFunSuite {
+class FuzzyJoinSpec extends AnyFunSuite with CacheScoped {
 
   lazy val spark: SparkSession = Specs.spark
 

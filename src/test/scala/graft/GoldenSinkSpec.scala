@@ -8,7 +8,7 @@ import graft.sources.{BasketSource, GoldenSink}
 /** Reference-format output + UDAF stripe equivalence (SURVEY.md §2
   * O8/O11/O15/O16/O17).
   */
-class GoldenSinkSpec extends AnyFunSuite {
+class GoldenSinkSpec extends AnyFunSuite with CacheScoped {
 
   lazy val spark: SparkSession = Specs.spark
 

@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Plan-quality guards: the physical plans the engine relies on at scale
   * must not silently regress (pushdown, pruning, broadcast, top-k).
   */
-class PlanSpec extends AnyFunSuite {
+class PlanSpec extends AnyFunSuite with CacheScoped {
 
   lazy val spark: SparkSession = Specs.spark
   private val sf = "/root/testdata/sf0.001"

@@ -13,7 +13,7 @@ import graft.operators.Width
   * reads no environment, one helper ([[Width.spread]]) reads the session's
   * shuffle width, and failures report their cause.
   */
-class PostureSpec extends AnyFunSuite {
+class PostureSpec extends AnyFunSuite with CacheScoped {
 
   /** Every line matching `pattern` in the engine sources — the six engine
     * packages and the `SparkEntry*` query registry — outside the files
@@ -63,6 +63,12 @@ class PostureSpec extends AnyFunSuite {
     val offenders = engineLines(
       Regex.quote("\"spark.sql.shuffle.partitions\"").r,
       Set("Width.scala", "StreamingOps.scala"))
+    assert(offenders.isEmpty, offenders.mkString("\n", "\n", ""))
+  }
+
+  test("no query listener in the engine: persists live in a CacheScope") {
+    val offenders = engineLines(
+      """QueryExecutionListener|listenerManager""".r, Set.empty)
     assert(offenders.isEmpty, offenders.mkString("\n", "\n", ""))
   }
 

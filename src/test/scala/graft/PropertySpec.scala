@@ -12,7 +12,7 @@ import graft.sources.BasketSource
   * scalatestplus bridge needed); pure-function level so hundreds of cases
   * run without Spark jobs.
   */
-class PropertySpec extends AnyFunSuite {
+class PropertySpec extends AnyFunSuite with CacheScoped {
 
   private val productGen = Gen.chooseNum(1, 20).map(_.toString)
   private val basketGen = Gen.choose(0, 12).flatMap(n => Gen.listOfN(n, productGen))

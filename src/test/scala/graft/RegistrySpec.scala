@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * oracle twins. Removing or adding a query is a recorded decision, so the
   * count is pinned here and moves only together with this test.
   */
-class RegistrySpec extends AnyFunSuite {
+class RegistrySpec extends AnyFunSuite with CacheScoped {
 
   test("the registry holds 340 queries") {
     assert(SparkEntry.queries.size == 340)

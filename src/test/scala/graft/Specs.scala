@@ -5,6 +5,14 @@ import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec,
   AdaptiveSparkPlanExec, QueryStageExec, ShuffleQueryStageExec}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+import org.scalatest.{Outcome, TestSuite}
+
+/** Runs each test inside one [[operators.CacheScope]], as the mains run
+  * each query. */
+trait CacheScoped extends TestSuite {
+  override def withFixture(test: NoArgTest): Outcome =
+    operators.CacheScope { super.withFixture(test) }
+}
 
 /** One shared SparkSession for the whole test run, on the engine's one
   * session posture ([[Bench.sessionBuilder]]). */

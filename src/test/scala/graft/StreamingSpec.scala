@@ -8,7 +8,7 @@ import graft.streaming.StreamingOps
 /** Batch/stream parity: each streaming operator must reproduce its batch
   * twin's result when fed the same parquet as a finite stream.
   */
-class StreamingSpec extends AnyFunSuite {
+class StreamingSpec extends AnyFunSuite with CacheScoped {
 
   lazy val spark: SparkSession = Specs.spark
   private val sf = "/root/testdata/sf0.001"

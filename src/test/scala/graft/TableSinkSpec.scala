@@ -9,7 +9,7 @@ import graft.sources.TableSink
 /** Layout-driven shuffle elimination: partition pruning and co-located
   * bucketed joins, asserted at the physical-plan level.
   */
-class TableSinkSpec extends AnyFunSuite {
+class TableSinkSpec extends AnyFunSuite with CacheScoped {
 
   lazy val spark: SparkSession = Specs.spark
   private val sf = "/root/testdata/sf0.001"

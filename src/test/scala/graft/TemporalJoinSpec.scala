@@ -9,7 +9,7 @@ import graft.operators.TemporalJoin
   * against a hand-computed fixture (including the at-tie and no-match
   * edges), proximityPairs against the naive theta join it replaces.
   */
-class TemporalJoinSpec extends AnyFunSuite {
+class TemporalJoinSpec extends AnyFunSuite with CacheScoped {
 
   lazy val spark: SparkSession = Specs.spark
   private val sf = "/root/testdata/sf0.001"
