@@ -1,6 +1,6 @@
 package graft
 import graft.operators.CacheScope
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
 
   /** Total on-disk size of a corpus directory, in MB. */
@@ -80,6 +80,15 @@ object Bench {
       .config("spark.sql.cteRecursionRowLimit", "100000000")
       .config("spark.ui.enabled", "false")
 
+  /** Runs one query to completion inside its own [[CacheScope]]: a full
+    * materialization through the noop sink. A `count()` would let the
+    * optimizer prune whatever the row count does not need (a window, a
+    * sort, an aggregation above the rows). Bench, ScaleAudit and Soak's
+    * query pass time and drive queries through it.
+    */
+  private[graft] def materialize(query: => DataFrame): Unit =
+    CacheScope { query.write.format("noop").mode("overwrite").save() }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -143,15 +152,8 @@ object Bench {
       // because it poisons both runs equally)
       System.gc()
       val t0 = System.nanoTime()
-      // a full materialization through the noop sink: a count() lets the
-      // optimizer prune whatever the row count does not need
       val ok =
-        try {
-          CacheScope {
-            fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          }
-          true
-        } catch { case e: Throwable =>
+        try { materialize(fn(spark, sfDir)); true } catch { case e: Throwable =>
           System.err.println(s"[bench] $name FAILED: ${describeFailure(e)}"); false
         }
       val elapsed = (System.nanoTime() - t0) / 1e9

@@ -213,7 +213,7 @@ object ScaleAudit {
       val runs = (1 to 2).map { _ =>
         System.gc()
         val t0 = System.nanoTime()
-        graft.operators.CacheScope { fn(spark, dir).count() }
+        Bench.materialize(fn(spark, dir))
         (System.nanoTime() - t0) / 1e9
       }
       runs.min

@@ -49,7 +49,7 @@ object Soak {
       val t0 = System.nanoTime()
       SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
         val before = spark.sparkContext.getPersistentRDDs.keySet
-        try CacheScope { fn(spark, sfDir).count() }
+        try Bench.materialize(fn(spark, sfDir))
         catch { case e: Throwable =>
           failed += 1
           System.err.println(s"[soak] $name failed: ${Bench.describeFailure(e)}")

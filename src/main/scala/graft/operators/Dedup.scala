@@ -599,125 +599,62 @@ object Dedup {
     * a single filter.
     *
     * Algorithm: iterative min-label propagation (each round every node
-    * takes the min label in its neighborhood), run to a fixpoint with a
-    * driver-side convergence check. Rounds needed = component diameter —
-    * near-dup clusters are small and dense (diameter a handful), so the
-    * loop terminates in a few distributed joins; each round is one
-    * shuffle on doc_id. The maxRounds guard turns a pathological chain
-    * into an error rather than an endless job.
+    * takes the min label in its neighborhood, then pointer-jumps through
+    * its label's own label), run to a fixpoint by [[Fixpoint]]. Labels
+    * only decrease over a finite id set, so the loop stops; pointer
+    * jumping halves chains every round, so it takes O(log diameter)
+    * rounds — near-dup clusters are small and dense, a few distributed
+    * joins. The maxRounds guard turns a pathological chain into an error
+    * rather than an endless job. The labels are served from the result
+    * persist until the caller's scope closes; they feed both cluster
+    * consumers (labels and the sizes join-back).
     */
-  def nearDupClusters(pairs: DataFrame, maxRounds: Int = 20): DataFrame = {
-    // maxRounds <= 0 would skip the loop entirely and NPE on the
-    // convergence re-check (lastWithOld still null)
-    require(maxRounds >= 1,
-      s"nearDupClusters requires maxRounds >= 1, got $maxRounds")
-    val spark = pairs.sparkSession
-    // ONE scan of the (possibly expensive) pair relation: each pair row
-    // explodes into both edge directions — the earlier self-union form
-    // evaluated the whole upstream candidate build twice before the cache
-    // could help.
-    val edges = pairs.select(explode(array(
-        struct(col("doc_a").as("src"), col("doc_b").as("dst")),
-        struct(col("doc_b").as("src"), col("doc_a").as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      // an edge relation is corpus-sized and must not pin storage memory
-      // (the Graph.triangleCounts discipline; BENCH_NOTES r9 measurement)
-      .distinct().persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-    // seed each node at min(self, direct neighbors) — one aggregation over
-    // the edge list, equivalent to a free first propagation round
-    var labels = edges.groupBy(col("src"))
-      .agg(min(col("dst")).as("mn"))
-      .select(col("src").as("doc_id"), least(col("src"), col("mn")).as("cluster_id"))
-    var persisted: org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] = null
-    var lastWithOld: DataFrame = null
-    var changed = 1L
-    var rounds = 0
-    while (changed > 0 && rounds < maxRounds) {
-      // each node adopts min(own label, neighbors' labels) ...
-      val viaNeighbors = edges
-        .join(labels.withColumnRenamed("doc_id", "dst"), "dst")
-        .groupBy(col("src").as("doc_id"))
-        .agg(min(col("cluster_id")).as("n_min"))
-      val prop = labels.join(viaNeighbors, Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          least(col("cluster_id"), coalesce(col("n_min"), col("cluster_id")))
-            .as("new_label"),
-          col("cluster_id").as("old"))
-        // referenced twice by the pointer-jump self-join. Deliberately NOT
-        // DISK_ONLY: unlike the fixpoint-lived edge relation above, prop is
-        // transient — unpersisted at the END OF THIS ROUND (below) — so it
-        // never outlives one iteration, and MEMORY_AND_DISK spills rather
-        // than pinning under pressure: the same documented level as the
-        // nextRdd persist 30 lines down, for the same per-round-working-set
-        // reason. DISK_ONLY here pays a synchronous disk round-trip per
-        // fixpoint round (BENCH_NOTES r9 waiver).
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // ... then pointer-jumps through its label's own label (path
-      // compression): chains halve every round, so convergence takes
-      // O(log diameter) rounds instead of diameter — the difference
-      // between 4 and 20 shuffle rounds on a stringy component.
-      val next = prop
-        .join(prop.select(col("doc_id").as("new_label"),
-          col("new_label").as("jump")), Seq("new_label"), "left")
-        .select(col("doc_id"),
-          coalesce(col("jump"), col("new_label")).as("cluster_id"),
-          col("old"))
-      // Lineage truncation via an explicitly persisted row RDD (the
-      // self-join above references prop twice, so without truncation the
-      // logical plan DOUBLES per round — exponential analysis cost and an
-      // OOM by round ~15; a cluster deployment would use a reliable
-      // checkpoint dir, same mechanics). Unlike localCheckpoint this handle
-      // lets superseded rounds be unpersisted, and the convergence check
-      // rides the SAME materializing action through an accumulator — one
-      // job per round, no separate count query. Accumulator updates in a
-      // transformation can only OVER-count on task retry, which at worst
-      // delays the changed==0 exit by one cheap no-op round — it can never
-      // terminate the fixpoint early.
-      val acc = spark.sparkContext.longAccumulator(s"nearDupClusters.changed.r$rounds")
-      val cid = next.schema.fieldIndex("cluster_id")
-      val old = next.schema.fieldIndex("old")
-      val nextRdd = next.rdd.mapPartitions { it =>
-        it.map { row =>
-          if (row.get(cid) != row.get(old)) acc.add(1L)
-          row
-        }
-      }.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      nextRdd.count()
-      changed = acc.value
-      prop.unpersist()
-      if (persisted != null) persisted.unpersist(false)
-      persisted = nextRdd
-      lastWithOld = spark.createDataFrame(nextRdd, next.schema)
-      labels = lastWithOld.drop("old")
-      rounds += 1
+  def nearDupClusters(pairs: DataFrame, maxRounds: Int = 20): DataFrame =
+    Fixpoint("nearDupClusters", maxRounds,
+        stuck = s"nearDupClusters did not converge in $maxRounds rounds") { fp =>
+      // ONE scan of the (possibly expensive) pair relation: each pair row
+      // explodes into both edge directions — the earlier self-union form
+      // evaluated the whole upstream candidate build twice before the
+      // cache could help. An edge relation is corpus-sized and must not
+      // pin storage memory, so it holds at DISK_ONLY.
+      val edges = fp.hold(pairs.select(explode(array(
+          struct(col("doc_a").as("src"), col("doc_b").as("dst")),
+          struct(col("doc_b").as("src"), col("doc_a").as("dst")))).as("e"))
+        .select(col("e.src").as("src"), col("e.dst").as("dst"))
+        .distinct())
+      // seed each node at min(self, direct neighbors) — one aggregation
+      // over the edge list, equivalent to a free first propagation round
+      val seed = edges.groupBy(col("src"))
+        .agg(min(col("dst")).as("mn"))
+        .select(col("src").as("doc_id"),
+          least(col("src"), col("mn")).as("cluster_id"))
+      fp.converge(seed, "cluster_id") { labels =>
+        // each node adopts min(own label, neighbors' labels) ...
+        val viaNeighbors = edges
+          .join(labels.withColumnRenamed("doc_id", "dst"), "dst")
+          .groupBy(col("src").as("doc_id"))
+          .agg(min(col("cluster_id")).as("n_min"))
+        // referenced twice by the pointer-jump self-join; it lives for
+        // this round only, so MEMORY_AND_DISK spills rather than paying
+        // a synchronous disk round-trip per round
+        val prop = fp.hold(labels.join(viaNeighbors, Seq("doc_id"), "left")
+          .select(col("doc_id"),
+            least(col("cluster_id"), coalesce(col("n_min"), col("cluster_id")))
+              .as("new_label"),
+            col("cluster_id").as("old")),
+          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        // ... then pointer-jumps through its label's own label (path
+        // compression): chains halve every round, so convergence takes
+        // O(log diameter) rounds instead of diameter — the difference
+        // between 4 and 20 shuffle rounds on a stringy component.
+        prop
+          .join(prop.select(col("doc_id").as("new_label"),
+            col("new_label").as("jump")), Seq("new_label"), "left")
+          .select(col("doc_id"),
+            coalesce(col("jump"), col("new_label")).as("cluster_id"),
+            col("old"))
+      }.orderBy(col("doc_id"))
     }
-    edges.unpersist()
-    // the accumulator can only OVER-count (task retry), so a changed>0 at
-    // the rounds cap may be a false alarm on an actually-converged
-    // labeling; re-verify with an exact count before aborting the job —
-    // this runs only on the failure path, never in a healthy fixpoint
-    if (changed > 0 &&
-        lastWithOld.filter(col("cluster_id") =!= col("old")).count() > 0)
-      throw new IllegalStateException(
-        s"nearDupClusters did not converge in $maxRounds rounds")
-    // Hand the converged labels to the SQL cache manager and RELEASE the
-    // final round's RDD-level persist: `spark.catalog.clearCache()` (the
-    // old teardown) frees CacheManager entries but NOT raw RDD persists,
-    // so returning the persisted RDD directly leaked executor storage
-    // across queries — in the r7 shared bench the three cluster queries'
-    // leaked final rounds inflated dedup_keep 2.8x over its isolated
-    // time. The label persist materializes here (one pass over the
-    // |nodes|-sized label relation) and serves both cluster consumers
-    // (labels + sizes join-back) until the caller's scope closes. Under
-    // eviction pressure MEMORY_AND_DISK spills instead of dropping, so
-    // the unpersisted lineage below it is a correctness fallback, not
-    // the common path.
-    val out = CacheScope.persist(labels.orderBy(col("doc_id")),
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.queryExecution.toRdd.count() // materialize before the loop state goes
-    if (persisted != null) persisted.unpersist(false)
-    out
-  }
 
   /** The dedup endpoint: drop every non-canonical member of a near-dup
     * cluster, keep everything else. Broadcast-able anti-join — the

@@ -27,8 +27,8 @@ object Graph {
     * relation is persisted WITH its degree column so it shuffles once for
     * the whole run, not once per iteration) and one aggregation on the
     * destination key. Iteration count is a fixed small constant, so plain
-    * lineage suffices — an open-ended fixpoint would reuse the
-    * persisted-row-RDD truncation discipline of Dedup.nearDupClusters.
+    * lineage suffices — an open-ended fixpoint runs on [[Fixpoint]]
+    * ([[pageRankConverged]]).
     *
     * Overflow posture: the damping multiply runs in DECIMAL(38,0)
     * (matching the oracle's HUGEINT) and only the final integral-divide
@@ -357,8 +357,8 @@ object Graph {
     * count, and one per-node argmax via `min(struct(-cnt, label))` — a
     * partial-aggregable hash aggregate, never a per-node window, so a hub
     * node's million neighbor-label rows combine map-side. Iteration count
-    * is a fixed small constant; an open-ended fixpoint would move to the
-    * persisted-row-RDD truncation discipline of Dedup.nearDupClusters.
+    * is a fixed small constant; the open-ended fixpoint is
+    * [[lpaConverged]], on [[Fixpoint]].
     *
     * Emits (node, community) — community = the final label, a member
     * node's id (the per-community minimum in the common converged case).
@@ -394,13 +394,13 @@ object Graph {
       .orderBy(col("node"))
   }
 
-  /** CONVERGENCE-TERMINATED label propagation (r13 verdict item 4): the
-    * open-ended fixpoint the fixed-round [[labelPropagation]] scaladoc
-    * defers to. Synchronous and deterministic like its fixed twin, but
-    * with a MONOTONE update — each round every node adopts
-    * `least(current label, argmax-frequency neighbor label)` (the same
-    * `min(struct(-cnt, lbl))` argmax, clamped by the node's current
-    * label) — and the loop stops when NO label changes.
+  /** CONVERGENCE-TERMINATED label propagation: the open-ended fixpoint
+    * the fixed-round [[labelPropagation]] scaladoc defers to. Synchronous
+    * and deterministic like its fixed twin, but with a MONOTONE update —
+    * each round every node adopts `least(current label, argmax-frequency
+    * neighbor label)` (the same `min(struct(-cnt, lbl))` argmax, clamped
+    * by the node's current label) — and the loop stops when NO label
+    * changes.
     *
     * Monotonicity is what makes "run until no change" well-defined:
     * plain synchronous LPA oscillates forever on bipartite structure
@@ -414,17 +414,8 @@ object Graph {
     * the DuckDB oracle replay it as a FIXED unroll (any K at or above
     * the engine's convergence round yields the identical labeling,
     * the page_rank unroll discipline extended to an open-ended loop).
-    *
-    * Loop mechanics are [[graft.operators.Dedup.nearDupClusters]]'s
-    * verbatim discipline: per-round lineage truncation through an
-    * explicitly persisted row RDD (the plan would otherwise grow per
-    * round and the optimizer re-walk it in full every round), the
-    * changed-count riding the SAME materializing action via an
-    * accumulator (one job per round, no separate count query; task
-    * retries can only OVER-count, which at worst buys one cheap no-op
-    * round, never early termination), superseded rounds unpersisted as
-    * soon as their successor lands, and an exact recheck before
-    * declaring non-convergence at the round cap.
+    * The loop runs on [[Fixpoint]], persist-only: the rounds are
+    * shallow and structure-bounded.
     *
     * Scale shape per round: one equi-join of the bounded label relation
     * onto the persisted adjacency (shuffled once for the whole run),
@@ -432,80 +423,34 @@ object Graph {
     * neighbor-label rows combine map-side), one bounded labels join.
     * Emits (node, community), community = the converged label.
     */
-  def lpaConverged(edges: DataFrame, maxRounds: Int = 50): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
-    require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
-    val spark = edges.sparkSession
-    val und = edges.select(least(col("src"), col("dst")).as("u"),
-        greatest(col("src"), col("dst")).as("v"))
-      .filter(col("u") =!= col("v")).distinct()
-    // plain persist + explicit unpersist: loop state goes when the loop ends
-    val adj = und.select(col("u").as("node"), col("v").as("nbr"))
-      .unionAll(und.select(col("v").as("node"), col("u").as("nbr")))
-      .persist(StorageLevel.DISK_ONLY)
-    var labels = adj.select(col("node")).distinct()
-      .withColumn("lbl", col("node"))
-    var persisted: org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] = null
-    var lastWithOld: DataFrame = null
-    var changed = 1L
-    var rounds = 0
-    while (changed > 0 && rounds < maxRounds) {
-      // argmax(count) with min-label tie-break — labelPropagation's exact
-      // aggregate — then the monotone clamp against the current label
-      val cand = adj.join(
-          labels.select(col("node").as("nbr"), col("lbl")), "nbr")
-        .groupBy(col("node"), col("lbl")).agg(count(lit(1)).as("c"))
-        .groupBy(col("node"))
-        .agg(min(struct((-col("c")).as("nc"), col("lbl").as("l"))).as("m"))
-        .select(col("node"), col("m.l").as("cand"))
-      // every node in `labels` has >= 1 neighbor by adj's construction,
-      // so the inner join drops nothing
-      val next = labels.join(cand, Seq("node"))
-        .select(col("node"), least(col("lbl"), col("cand")).as("lbl"),
-          col("lbl").as("old"))
-      val acc = spark.sparkContext
-        .longAccumulator(s"lpaConverged.changed.r$rounds")
-      val li = next.schema.fieldIndex("lbl")
-      val oi = next.schema.fieldIndex("old")
-      val nextRdd = next.rdd.mapPartitions { it =>
-        it.map { row =>
-          if (row.get(li) != row.get(oi)) acc.add(1L)
-          row
-        }
-      }.persist(StorageLevel.MEMORY_AND_DISK)
-      // persist-only lineage truncation — deliberately NO localCheckpoint
-      // (the pageRankConverged device): a checkpointed round is
-      // UNRECOMPUTABLE once unpersisted, which turns a released result
-      // cache into a landmine for a second consumer action (measured as
-      // CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND in the kcore spec). LPA's
-      // monotone fixpoint converges in O(label-chain) rounds — shallow,
-      // structure-bounded — so the persisted-RDD task graph stays well
-      // under the ~45-round serialization depth where pageRankConverged
-      // measured its deserializer stack overflow; recompute after the
-      // result cache retires walks plain lineage, slow but correct.
-      nextRdd.count()
-      changed = acc.value
-      if (persisted != null) persisted.unpersist(false)
-      persisted = nextRdd
-      lastWithOld = spark.createDataFrame(nextRdd, next.schema)
-      labels = lastWithOld.drop("old")
-      rounds += 1
+  def lpaConverged(edges: DataFrame, maxRounds: Int = 50): DataFrame =
+    Fixpoint("lpaConverged", maxRounds,
+        stuck = s"lpaConverged did not converge in $maxRounds rounds") { fp =>
+      val und = edges.select(least(col("src"), col("dst")).as("u"),
+          greatest(col("src"), col("dst")).as("v"))
+        .filter(col("u") =!= col("v")).distinct()
+      val adj = fp.hold(und.select(col("u").as("node"), col("v").as("nbr"))
+        .unionAll(und.select(col("v").as("node"), col("u").as("nbr"))))
+      val seed = adj.select(col("node")).distinct()
+        .withColumn("lbl", col("node"))
+      fp.converge(seed, "lbl") { labels =>
+        // argmax(count) with min-label tie-break — labelPropagation's
+        // exact aggregate — then the monotone clamp against the current
+        // label
+        val cand = adj.join(
+            labels.select(col("node").as("nbr"), col("lbl")), "nbr")
+          .groupBy(col("node"), col("lbl")).agg(count(lit(1)).as("c"))
+          .groupBy(col("node"))
+          .agg(min(struct((-col("c")).as("nc"), col("lbl").as("l"))).as("m"))
+          .select(col("node"), col("m.l").as("cand"))
+        // every node in `labels` has >= 1 neighbor by adj's construction,
+        // so the inner join drops nothing
+        labels.join(cand, Seq("node"))
+          .select(col("node"), least(col("lbl"), col("cand")).as("lbl"),
+            col("lbl").as("old"))
+      }.select(col("node"), col("lbl").as("community"))
+        .orderBy(col("node"))
     }
-    adj.unpersist()
-    // accumulator over-count guard (nearDupClusters): re-verify with an
-    // exact count before aborting — failure path only
-    if (changed > 0 &&
-        lastWithOld.filter(col("lbl") =!= col("old")).count() > 0)
-      throw new IllegalStateException(
-        s"lpaConverged did not converge in $maxRounds rounds")
-    val out = CacheScope.persist(
-      labels.select(col("node"), col("lbl").as("community"))
-        .orderBy(col("node")),
-      StorageLevel.MEMORY_AND_DISK)
-    out.queryExecution.toRdd.count() // materialize before the loop state goes
-    if (persisted != null) persisted.unpersist(false)
-    out
-  }
 
   /** CONVERGENCE-TERMINATED PageRank — the checkpointed fixpoint
     * [[pageRank]]'s own guard rail points at ("beyond [20 iterations]
@@ -523,22 +468,14 @@ object Graph {
     * lpaConverged argument — so the DuckDB oracle replays the
     * open-ended loop as a FIXED unroll at or above the convergence
     * round. A graph whose integer recurrence cycles instead of fixing
-    * hits `maxRounds` and THROWS (the exact recheck guards accumulator
-    * over-count); it can never serve a half-converged ranking.
+    * hits `maxRounds` and THROWS; it can never serve a half-converged
+    * ranking.
     *
-    * Loop mechanics are [[lpaConverged]]'s verbatim: per-round lineage
-    * truncation through persisted row RDDs, the changed-count riding
-    * the SAME materializing action via an accumulator (over-count can
-    * only buy a no-op round, never early termination), superseded
-    * rounds unpersisted as their successor lands, degree-annotated
-    * edges and the node relation persisted once for the whole run —
-    * PLUS `localCheckpoint()` per round: at this operator's depth
-    * (55 rounds at sf0.01) the persisted-RDD task closures alone chain
-    * the full round history through the RDD object graph, and the
-    * serialized task graph overflowed the deserializer's stack at round
-    * ~45 on the x10 corpus (measured). The checkpoint replaces each
-    * round's dependency chain with its materialized blocks —
-    * depth-constant closures at any round count.
+    * The loop runs on [[Fixpoint]] with `checkpoint = true`: at this
+    * operator's depth (55 rounds at sf0.01) persisted rounds alone
+    * overflow the task deserializer's stack, so every round is
+    * checkpointed. The degree-annotated edges and the node relation are
+    * held for the whole run.
     *
     * CONSUMPTION CONTRACT (the price of truncated lineage): the
     * returned relation is served from a [[CacheScope.persist]] cache;
@@ -556,77 +493,27 @@ object Graph {
     */
   def pageRankConverged(edges: DataFrame, dampingPct: Int = 85,
       scale: Long = 1000000000L, maxRounds: Int = 60): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
     require(dampingPct >= 0 && dampingPct <= 100,
       "dampingPct is an integer percentage")
-    require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
-    val spark = edges.sparkSession
-    val e = edges.select(col("src"), col("dst"))
-    val outDeg = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-    // plain persist + explicit unpersist: loop state goes when the loop ends
-    val withDeg = e.join(outDeg, "src").persist(StorageLevel.DISK_ONLY)
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-      .persist(StorageLevel.DISK_ONLY)
-    val base = (100L - dampingPct) * scale / 100L
-    var ranks = nodes.withColumn("rank_e9", lit(scale))
-    var persisted: org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] = null
-    var lastWithOld: DataFrame = null
-    var changed = 1L
-    var rounds = 0
-    while (changed > 0 && rounds < maxRounds) {
-      // pageRank's exact round body (decimal damping multiply, long sum)
-      val sums = withDeg.join(ranks, col("src") === col("node"))
-        .select(col("dst"), expr("rank_e9 div deg").as("contrib"))
-        .groupBy(col("dst")).agg(sum(col("contrib")).as("s"))
-      val next = nodes.join(sums, col("node") === col("dst"), "left")
-        .select(col("node"), (lit(base) +
-          expr(s"($dampingPct * CAST(coalesce(s, 0) AS DECIMAL(38,0))) div 100"))
-          .as("rank_e9"))
-        .join(ranks.withColumnRenamed("rank_e9", "old"), "node")
-      val acc = spark.sparkContext
-        .longAccumulator(s"pageRankConverged.changed.r$rounds")
-      val ri = next.schema.fieldIndex("rank_e9")
-      val oi = next.schema.fieldIndex("old")
-      val nextRdd = next.rdd.mapPartitions { it =>
-        it.map { row =>
-          if (row.get(ri) != row.get(oi)) acc.add(1L)
-          row
-        }
-      }.persist(StorageLevel.MEMORY_AND_DISK)
-      // REAL lineage truncation, not just recompute-bounding: a persisted
-      // round still CHAINS its predecessors through the task closure's
-      // object graph, and at this operator's round depth (~31+ at the
-      // verify scale, more at 10×) the serialized task graph overflows
-      // the deserializer's stack — measured as a fleet of executor
-      // StackOverflowErrors at round ~45 on the x10 corpus.
-      // localCheckpoint replaces the dependency chain with the
-      // materialized blocks, so every round's closures are depth-constant.
-      // (The shallow LPA/k-core fixpoints got the same treatment
-      // defensively; a cluster deployment would use a reliable checkpoint
-      // dir, same mechanics.)
-      nextRdd.localCheckpoint()
-      nextRdd.count()
-      changed = acc.value
-      if (persisted != null) persisted.unpersist(false)
-      persisted = nextRdd
-      lastWithOld = spark.createDataFrame(nextRdd, next.schema)
-      ranks = lastWithOld.drop("old")
-      rounds += 1
+    Fixpoint("pageRankConverged", maxRounds, checkpoint = true) { fp =>
+      val e = edges.select(col("src"), col("dst"))
+      val outDeg = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
+      val withDeg = fp.hold(e.join(outDeg, "src"))
+      val nodes = fp.hold(e.select(col("src").as("node"))
+        .union(e.select(col("dst").as("node"))).distinct())
+      val base = (100L - dampingPct) * scale / 100L
+      fp.converge(nodes.withColumn("rank_e9", lit(scale)), "rank_e9") { ranks =>
+        // pageRank's exact round body (decimal damping multiply, long sum)
+        val sums = withDeg.join(ranks, col("src") === col("node"))
+          .select(col("dst"), expr("rank_e9 div deg").as("contrib"))
+          .groupBy(col("dst")).agg(sum(col("contrib")).as("s"))
+        nodes.join(sums, col("node") === col("dst"), "left")
+          .select(col("node"), (lit(base) +
+            expr(s"($dampingPct * CAST(coalesce(s, 0) AS DECIMAL(38,0))) div 100"))
+            .as("rank_e9"))
+          .join(ranks.withColumnRenamed("rank_e9", "old"), "node")
+      }.select(col("node"), col("rank_e9")).orderBy(col("node"))
     }
-    // accumulator over-count guard: re-verify exactly before aborting
-    if (changed > 0 &&
-        lastWithOld.filter(col("rank_e9") =!= col("old")).count() > 0)
-      throw new IllegalStateException(
-        s"pageRankConverged did not converge in maxRounds=$maxRounds rounds")
-    val out = CacheScope.persist(
-      ranks.select(col("node"), col("rank_e9")).orderBy(col("node")),
-      StorageLevel.MEMORY_AND_DISK)
-    out.queryExecution.toRdd.count() // materialize before the loop state goes
-    withDeg.unpersist()
-    nodes.unpersist()
-    if (persisted != null) persisted.unpersist(false)
-    out
   }
 
   /** HyperANF (Boldi–Vigna, WWW 2011): the APPROXIMATE neighborhood
@@ -985,36 +872,6 @@ object Graph {
       .orderBy(col("center"), col("context"))
   }
 
-  /** K-CORE decomposition at fixed k: the maximal subgraph in which
-    * every node has (undirected) degree >= k — the standard graph
-    * DENSIFICATION filter before community/centrality analysis, and at
-    * LLM-data scale the cheap way to strip the long tail of weakly
-    * connected products/documents before the expensive graph passes.
-    *
-    * Synchronous peeling to a FIXPOINT: each round drops every node
-    * whose degree among current survivors is < k. The k-core is unique
-    * and peeling order-independent, so the synchronous schedule is
-    * safe; survivors only shrink (next ⊆ current by construction), so
-    * an unchanged COUNT is an unchanged SET and the exact per-round
-    * count doubles as the convergence test — no accumulator
-    * approximation to recheck. Post-convergence rounds are no-ops
-    * (dropping nobody leaves degrees unchanged), which lets the DuckDB
-    * oracle replay the loop as a FIXED unroll, the [[lpaConverged]]
-    * discipline.
-    *
-    * Loop mechanics are [[lpaConverged]]'s: the survivor set
-    * materializes per round through a persisted row RDD (lineage
-    * truncation — it feeds BOTH sides of the next round's degree join),
-    * superseded rounds unpersist as soon as their successor lands, and
-    * the adjacency persists once for the whole run. Scale shape per
-    * round: two equi-joins of the bounded survivor relation onto the
-    * persisted adjacency + one partial-aggregable count — a hub's
-    * million edge rows combine map-side, never a per-node window.
-    *
-    * Emits (node, core_deg) for k-core members — core_deg is the
-    * degree WITHIN the core (>= k by the fixpoint), the per-node
-    * density certificate.
-    */
   /** word2vec NEGATIVE SAMPLING over skip-gram pairs (Mikolov et al.,
     * NeurIPS 2013 §2.2): each (center, context) pair draws `m` negatives
     * from the tempered unigram CONTEXT distribution — weight =
@@ -1080,99 +937,62 @@ object Graph {
       .orderBy(col("center"), col("context"), col("j"))
   }
 
+  /** K-CORE decomposition at fixed k: the maximal subgraph in which
+    * every node has (undirected) degree >= k — the standard graph
+    * DENSIFICATION filter before community/centrality analysis, and at
+    * LLM-data scale the cheap way to strip the long tail of weakly
+    * connected products/documents before the expensive graph passes.
+    *
+    * Synchronous peeling to a FIXPOINT: each round drops every node
+    * whose degree among current survivors is < k. The k-core is unique
+    * and peeling order-independent, so the synchronous schedule is
+    * safe; survivors only shrink (next ⊆ current by construction), so
+    * an unchanged COUNT is an unchanged SET and the exact per-round
+    * count doubles as the convergence test — no accumulator
+    * approximation to recheck. Post-convergence rounds are no-ops
+    * (dropping nobody leaves degrees unchanged), which lets the DuckDB
+    * oracle replay the loop as a FIXED unroll, the [[lpaConverged]]
+    * discipline.
+    *
+    * The loop runs on [[Fixpoint]], persist-only: the survivor set is
+    * cut every round (it feeds BOTH sides of the next round's degree
+    * join) and the adjacency is held for the whole run. Scale shape per
+    * round: two equi-joins of the bounded survivor relation onto the
+    * persisted adjacency + one partial-aggregable count — a hub's
+    * million edge rows combine map-side, never a per-node window.
+    *
+    * Emits (node, core_deg) for k-core members — core_deg is the
+    * degree WITHIN the core (>= k by the fixpoint), the per-node
+    * density certificate.
+    */
   def kcoreDecompose(edges: DataFrame, k: Int = 3,
       maxRounds: Int = 60): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
     require(k >= 1, s"k must be >= 1, got $k")
-    require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
-    val spark = edges.sparkSession
-    val und = edges.select(least(col("src"), col("dst")).as("u"),
-        greatest(col("src"), col("dst")).as("v"))
-      .filter(col("u") =!= col("v")).distinct()
-    // plain persist + explicit unpersist: loop state goes when the loop ends
-    val adj = und.select(col("u").as("node"), col("v").as("nbr"))
-      .unionAll(und.select(col("v").as("node"), col("u").as("nbr")))
-      .persist(StorageLevel.DISK_ONLY)
-    var nodes = adj.select(col("node")).distinct()
-    // materialize the starting survivor set: it feeds both sides of
-    // round 1's join, and its exact count seeds the convergence compare
-    var persisted = nodes.rdd.persist(StorageLevel.MEMORY_AND_DISK)
-    var prev = persisted.count()
-    nodes = spark.createDataFrame(persisted, nodes.schema)
-    var rounds = 0
-    var changed = true
-    while (changed && rounds < maxRounds) {
-      val surv = adj
-        .join(nodes, "node")
-        .join(nodes.select(col("node").as("nbr")), "nbr")
-        .groupBy(col("node")).agg(count(lit(1)).as("deg"))
-        .filter(col("deg") >= k)
-        .select(col("node"))
-      val rdd = surv.rdd.persist(StorageLevel.MEMORY_AND_DISK)
-      // persist-only truncation — deliberately NO localCheckpoint (see
-      // lpaConverged: a checkpointed-then-unpersisted round makes the
-      // returned relation unrecomputable after its cache retires — the
-      // kcore spec's second action CRASHED on exactly that). Peeling
-      // depth is the cascade length — shallow and structure-bounded
-      // (8 rounds at the verify scale), nowhere near the ~45-round
-      // closure-serialization depth that forced pageRankConverged's
-      // checkpoint.
-      val n = rdd.count()
-      // peeling only removes nodes, so equal count ⇒ equal set ⇒ done
-      changed = n != prev
-      prev = n
-      persisted.unpersist(false)
-      persisted = rdd
-      nodes = spark.createDataFrame(rdd, surv.schema)
-      rounds += 1
-    }
-    if (changed)
-      throw new IllegalStateException(
-        s"kcoreDecompose did not converge in maxRounds=$maxRounds rounds")
-    // in-core degrees over the converged survivor set (>= k for all by
-    // the fixpoint). Eager: the plan reads `adj` and the survivor RDD,
-    // both unpersisted right after this materializes.
-    val out = CacheScope.persist(
+    Fixpoint("kcoreDecompose", maxRounds) { fp =>
+      val und = edges.select(least(col("src"), col("dst")).as("u"),
+          greatest(col("src"), col("dst")).as("v"))
+        .filter(col("u") =!= col("v")).distinct()
+      val adj = fp.hold(und.select(col("u").as("node"), col("v").as("nbr"))
+        .unionAll(und.select(col("v").as("node"), col("u").as("nbr"))))
+      // the starting survivor set is cut too: it feeds both sides of
+      // round 1's join, and its count seeds the convergence compare
+      val nodes = fp.loop(fp.cut(adj.select(col("node")).distinct())) { nodes =>
+        fp.cut(adj
+          .join(nodes.rows, "node")
+          .join(nodes.rows.select(col("node").as("nbr")), "nbr")
+          .groupBy(col("node")).agg(count(lit(1)).as("deg"))
+          .filter(col("deg") >= k)
+          .select(col("node")))
+      }((prev, next) => prev.n - next.n).rows
+      // in-core degrees over the converged survivor set (>= k for all by
+      // the fixpoint)
       adj.join(nodes, "node")
         .join(nodes.select(col("node").as("nbr")), "nbr")
         .groupBy(col("node")).agg(count(lit(1)).as("core_deg"))
-        .orderBy(col("node")),
-      StorageLevel.MEMORY_AND_DISK)
-    out.queryExecution.toRdd.count() // materialize before the loop state goes
-    adj.unpersist()
-    persisted.unpersist(false)
-    out
+        .orderBy(col("node"))
+    }
   }
 
-  /** k-TRUSS decomposition (Cohen 2008) — [[kcoreDecompose]]'s
-    * edge-peeling sibling and the standard next rung of cohesion: keep
-    * only edges that sit in ≥ k−2 triangles among SURVIVING edges,
-    * re-checking until a fixpoint (deleting one weak edge can strand
-    * another). A k-truss is a stronger community signal than a k-core —
-    * every kept relationship is itself triangle-reinforced.
-    *
-    * Per round: triangles over the surviving canonical edge set via the
-    * SAME degree-oriented wedge enumeration as [[triangleCounts]]
-    * (wedges at the low-degree apex, O(m^1.5) total wedge volume, hubs
-    * bounded), each triangle exploded into its three canonical edges,
-    * one partial-aggregable count per edge, and a left-join filter.
-    * Convergence = surviving-edge count unchanged (peeling only
-    * removes, so equal count ⇒ equal set). Plain persist + explicit
-    * unpersist per round, count-driven — the kcore loop discipline
-    * (no localCheckpoint: peel depth is cascade-bounded and shallow).
-    *
-    * Emits the converged truss edges with their in-truss support:
-    * (u, v, support), support ≥ k−2 for every row by the fixpoint.
-    * Oracle: a fixed unroll of the peel with triangles enumerated in
-    * the id-ordered a<b<c form — a different join order over the same
-    * triangle set, the triangle_count parity argument per round.
-    */
-  /** Per-edge triangle support over a canonical (u < v) edge relation:
-    * oriented wedges (degree-then-id order of the CURRENT edge set,
-    * wedges at the low-degree apex — O(m^1.5) total wedge volume, hubs
-    * bounded), triangle edges canonicalized back to (min, max). Shared
-    * by the full-recount and incremental k-truss peels.
-    */
   /** Every triangle of a canonical (u < v) edge relation, exactly once,
     * as (apex, a, b): oriented wedges at the low-degree apex
     * (degree-then-id order — O(m^1.5) total wedge volume, hubs
@@ -1204,6 +1024,12 @@ object Graph {
         Seq("a", "b"))
   }
 
+  /** Per-edge triangle support over a canonical (u < v) edge relation:
+    * oriented wedges (degree-then-id order of the CURRENT edge set,
+    * wedges at the low-degree apex — O(m^1.5) total wedge volume, hubs
+    * bounded), triangle edges canonicalized back to (min, max). Shared
+    * by the full-recount and incremental k-truss peels.
+    */
   private def trussSupport(e: DataFrame): DataFrame = {
     val tri = orientedTriangles(e)
     tri.select(explode(array(
@@ -1217,45 +1043,45 @@ object Graph {
       .groupBy(col("u"), col("v")).agg(count(lit(1)).as("sup"))
   }
 
+  /** k-TRUSS decomposition (Cohen 2008) — [[kcoreDecompose]]'s
+    * edge-peeling sibling and the standard next rung of cohesion: keep
+    * only edges that sit in ≥ k−2 triangles among SURVIVING edges,
+    * re-checking until a fixpoint (deleting one weak edge can strand
+    * another). A k-truss is a stronger community signal than a k-core —
+    * every kept relationship is itself triangle-reinforced.
+    *
+    * Per round: triangles over the surviving canonical edge set via the
+    * SAME degree-oriented wedge enumeration as [[triangleCounts]]
+    * (wedges at the low-degree apex, O(m^1.5) total wedge volume, hubs
+    * bounded), each triangle exploded into its three canonical edges,
+    * one partial-aggregable count per edge, and a left-join filter.
+    * Convergence = surviving-edge count unchanged (peeling only
+    * removes, so equal count ⇒ equal set). The loop runs on
+    * [[Fixpoint]], persist-only: peel depth is cascade-bounded and
+    * shallow.
+    *
+    * Emits the converged truss edges with their in-truss support:
+    * (u, v, support), support ≥ k−2 for every row by the fixpoint.
+    * Oracle: a fixed unroll of the peel with triangles enumerated in
+    * the id-ordered a<b<c form — a different join order over the same
+    * triangle set, the triangle_count parity argument per round.
+    */
   def ktrussDecompose(edges: DataFrame, k: Int = 4,
       maxRounds: Int = 30): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
     require(k >= 3, s"k-truss needs k >= 3, got $k")
-    require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
-    val spark = edges.sparkSession
-    val und0 = edges.select(least(col("src"), col("dst")).as("u"),
-        greatest(col("src"), col("dst")).as("v"))
-      .filter(col("u") =!= col("v")).distinct()
-    def support(e: DataFrame): DataFrame = trussSupport(e)
-    var persisted = und0.rdd.persist(StorageLevel.MEMORY_AND_DISK)
-    var prev = persisted.count()
-    var e = spark.createDataFrame(persisted, und0.schema)
-    var rounds = 0
-    var changed = true
-    while (changed && rounds < maxRounds) {
-      val surv = e.join(support(e), Seq("u", "v"), "left")
-        .filter(coalesce(col("sup"), lit(0L)) >= k - 2)
-        .select(col("u"), col("v"))
-      val rdd = surv.rdd.persist(StorageLevel.MEMORY_AND_DISK)
-      val n = rdd.count()
-      changed = n != prev
-      prev = n
-      persisted.unpersist(false)
-      persisted = rdd
-      e = spark.createDataFrame(rdd, surv.schema)
-      rounds += 1
-    }
-    if (changed)
-      throw new IllegalStateException(
-        s"ktrussDecompose did not converge in maxRounds=$maxRounds rounds")
-    val out = CacheScope.persist(
-      e.join(support(e), Seq("u", "v"))
+    Fixpoint("ktrussDecompose", maxRounds) { fp =>
+      val und0 = edges.select(least(col("src"), col("dst")).as("u"),
+          greatest(col("src"), col("dst")).as("v"))
+        .filter(col("u") =!= col("v")).distinct()
+      val e = fp.loop(fp.cut(und0)) { e =>
+        fp.cut(e.rows.join(trussSupport(e.rows), Seq("u", "v"), "left")
+          .filter(coalesce(col("sup"), lit(0L)) >= k - 2)
+          .select(col("u"), col("v")))
+      }((prev, next) => prev.n - next.n).rows
+      e.join(trussSupport(e), Seq("u", "v"))
         .select(col("u"), col("v"), col("sup").as("support"))
-        .orderBy(col("u"), col("v")),
-      StorageLevel.MEMORY_AND_DISK)
-    out.queryExecution.toRdd.count() // materialize before the loop state goes
-    persisted.unpersist(false)
-    out
+        .orderBy(col("u"), col("v"))
+    }
   }
 
   /** INCREMENTAL k-truss peel (r17 — the standard truss optimization:
@@ -1279,114 +1105,93 @@ object Graph {
     * batch-peel rounds, same threshold), and the emitted support is the
     * maintained counter — its exactness at convergence is the loop
     * invariant (sup(e) = triangles among alive edges containing e),
-    * spec-pinned against the full recount. maxRounds counts DELETION
-    * rounds, matching the recount form's changed-rounds.
+    * spec-pinned against the full recount. The loop ([[Fixpoint]],
+    * persist-only) stops when a round's deletion set is empty; maxRounds
+    * counts DELETION rounds, matching the recount form's changed-rounds.
     */
   def ktrussDecomposeInc(edges: DataFrame, k: Int = 4,
       maxRounds: Int = 30): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
     require(k >= 3, s"k-truss needs k >= 3, got $k")
-    require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
-    val spark = edges.sparkSession
-    val und0 = edges.select(least(col("src"), col("dst")).as("u"),
-        greatest(col("src"), col("dst")).as("v"))
-      .filter(col("u") =!= col("v")).distinct()
-    val st0 = und0.join(trussSupport(und0), Seq("u", "v"), "left")
-      .select(col("u"), col("v"),
-        coalesce(col("sup"), lit(0L)).as("sup"))
-    var persisted = st0.rdd.persist(StorageLevel.MEMORY_AND_DISK)
-    persisted.count()
-    var st = spark.createDataFrame(persisted, st0.schema)
-    var rounds = 0
-    var converged = false
-    while (!converged && rounds < maxRounds) {
-      val del = st.filter(col("sup") < k - 2)
-        .select(col("u"), col("v"), col("sup"))
-      val delP = del.rdd.persist(StorageLevel.MEMORY_AND_DISK)
-      val nDel = delP.count()
-      if (nDel == 0L) {
-        converged = true
-        delP.unpersist(false)
-      } else {
-        val delAll = spark.createDataFrame(delP, del.schema)
-        // an edge in ZERO alive triangles destroys zero triangles —
-        // only positive-support deletions feed the wedge expansion, and
-        // when the round has NONE (always at k=3, where the threshold
-        // is sup < 1) the whole round is one anti-join: the branch is
-        // DRIVER-side because even an empty-frontier plan still scans
-        // and shuffles the full edge relation to build adjacency +
-        // degrees (measured: plan-level filtering alone left the inc
-        // form LOSING to the full recount at x100, 41.8 vs 40.1 s).
-        val nPos = delAll.filter(col("sup") > 0L).count()
-        val delKeys = delAll.select(col("u"), col("v"))
-        val survivors = st.join(delKeys, Seq("u", "v"), "left_anti")
-        val next = if (nPos == 0L) survivors else {
-          val delDf = delAll.filter(col("sup") > 0L)
-            .select(col("u"), col("v"))
-          // alive-BEFORE-this-round adjacency (survivors ∪ this batch),
-          // both directions — the graph the destroyed triangles lived in
-          val adj = st.select(col("u").as("x"), col("v").as("y"))
-            .unionAll(st.select(col("v").as("x"), col("u").as("y")))
-          val deg = st.select(col("u").as("n")).unionAll(
-              st.select(col("v").as("n")))
-            .groupBy(col("n")).agg(count(lit(1)).as("d"))
-          // expand each deleted edge from its lower-degree endpoint s
-          // (ties broken by id), closure-check the (t, w) leg
-          val delO = delDf
-            .join(deg.select(col("n").as("u"), col("d").as("du")), "u")
-            .join(deg.select(col("n").as("v"), col("d").as("dv")), "v")
-            .select(col("u"), col("v"),
-              when(col("du") < col("dv") ||
-                  (col("du") === col("dv") && col("u") < col("v")),
-                struct(col("u").as("s"), col("v").as("t")))
-                .otherwise(struct(col("v").as("s"), col("u").as("t")))
-                .as("o"))
-            .select(col("u"), col("v"), col("o.s").as("s"), col("o.t").as("t"))
-          val wedges = delO.join(adj, delO("s") === adj("x"))
-            .filter(col("y") =!= col("t"))
-            .select(col("u"), col("v"), col("t"), col("y").as("w"))
-          val adj2 = st.select(col("u").as("x2"), col("v").as("y2"))
-            .unionAll(st.select(col("v").as("x2"), col("u").as("y2")))
-          val destroyed = wedges.join(adj2,
-              wedges("t") === adj2("x2") && wedges("w") === adj2("y2"),
-              "left_semi")
-            .select(array_sort(array(col("u"), col("v"), col("w"))).as("abc"))
-            .distinct()
-            .select(col("abc")(0).as("a"), col("abc")(1).as("b"),
-              col("abc")(2).as("c"))
-          // each destroyed triangle decrements its SURVIVING edges once;
-          // (a,b,c) is sorted, so the three edges are already canonical
-          val dec = destroyed.select(explode(array(
-              struct(col("a").as("u"), col("b").as("v")),
-              struct(col("a").as("u"), col("c").as("v")),
-              struct(col("b").as("u"), col("c").as("v")))).as("e"))
-            .select(col("e.u").as("u"), col("e.v").as("v"))
-            .join(delKeys, Seq("u", "v"), "left_anti")
-            .groupBy(col("u"), col("v")).agg(count(lit(1)).as("dec"))
-          survivors
-            .join(dec, Seq("u", "v"), "left")
-            .select(col("u"), col("v"),
-              (col("sup") - coalesce(col("dec"), lit(0L))).as("sup"))
-        }
-        val rdd = next.rdd.persist(StorageLevel.MEMORY_AND_DISK)
-        rdd.count()
-        persisted.unpersist(false)
-        delP.unpersist(false)
-        persisted = rdd
-        st = spark.createDataFrame(rdd, st0.schema)
-        rounds += 1
-      }
+    Fixpoint("ktrussDecomposeInc", maxRounds) { fp =>
+      val und0 = edges.select(least(col("src"), col("dst")).as("u"),
+          greatest(col("src"), col("dst")).as("v"))
+        .filter(col("u") =!= col("v")).distinct()
+      val st0 = fp.cut(und0.join(trussSupport(und0), Seq("u", "v"), "left")
+        .select(col("u"), col("v"),
+          coalesce(col("sup"), lit(0L)).as("sup")))
+      // the under-supported edges: the next round's deletions
+      def weak(st: Fixpoint.Cut) = fp.cut(st.rows.filter(col("sup") < k - 2)
+        .select(col("u"), col("v"), col("sup")))
+      val (last, _) = fp.loop((st0, weak(st0))) {
+        case unchanged @ (_, del) if del.n == 0L => unchanged // already a truss
+        case (stCut, del) =>
+          val st = stCut.rows
+          val delAll = del.rows
+          // an edge in ZERO alive triangles destroys zero triangles —
+          // only positive-support deletions feed the wedge expansion, and
+          // when the round has NONE (always at k=3, where the threshold
+          // is sup < 1) the whole round is one anti-join: the branch is
+          // DRIVER-side because even an empty-frontier plan still scans
+          // and shuffles the full edge relation to build adjacency +
+          // degrees (measured: plan-level filtering alone left the inc
+          // form LOSING to the full recount at x100, 41.8 vs 40.1 s).
+          val nPos = delAll.filter(col("sup") > 0L).count()
+          val delKeys = delAll.select(col("u"), col("v"))
+          val survivors = st.join(delKeys, Seq("u", "v"), "left_anti")
+          val nextRows = if (nPos == 0L) survivors else {
+            val delDf = delAll.filter(col("sup") > 0L)
+              .select(col("u"), col("v"))
+            // alive-BEFORE-this-round adjacency (survivors ∪ this batch),
+            // both directions — the graph the destroyed triangles lived in
+            val adj = st.select(col("u").as("x"), col("v").as("y"))
+              .unionAll(st.select(col("v").as("x"), col("u").as("y")))
+            val deg = st.select(col("u").as("n")).unionAll(
+                st.select(col("v").as("n")))
+              .groupBy(col("n")).agg(count(lit(1)).as("d"))
+            // expand each deleted edge from its lower-degree endpoint s
+            // (ties broken by id), closure-check the (t, w) leg
+            val delO = delDf
+              .join(deg.select(col("n").as("u"), col("d").as("du")), "u")
+              .join(deg.select(col("n").as("v"), col("d").as("dv")), "v")
+              .select(col("u"), col("v"),
+                when(col("du") < col("dv") ||
+                    (col("du") === col("dv") && col("u") < col("v")),
+                  struct(col("u").as("s"), col("v").as("t")))
+                  .otherwise(struct(col("v").as("s"), col("u").as("t")))
+                  .as("o"))
+              .select(col("u"), col("v"), col("o.s").as("s"), col("o.t").as("t"))
+            val wedges = delO.join(adj, delO("s") === adj("x"))
+              .filter(col("y") =!= col("t"))
+              .select(col("u"), col("v"), col("t"), col("y").as("w"))
+            val adj2 = st.select(col("u").as("x2"), col("v").as("y2"))
+              .unionAll(st.select(col("v").as("x2"), col("u").as("y2")))
+            val destroyed = wedges.join(adj2,
+                wedges("t") === adj2("x2") && wedges("w") === adj2("y2"),
+                "left_semi")
+              .select(array_sort(array(col("u"), col("v"), col("w"))).as("abc"))
+              .distinct()
+              .select(col("abc")(0).as("a"), col("abc")(1).as("b"),
+                col("abc")(2).as("c"))
+            // each destroyed triangle decrements its SURVIVING edges once;
+            // (a,b,c) is sorted, so the three edges are already canonical
+            val dec = destroyed.select(explode(array(
+                struct(col("a").as("u"), col("b").as("v")),
+                struct(col("a").as("u"), col("c").as("v")),
+                struct(col("b").as("u"), col("c").as("v")))).as("e"))
+              .select(col("e.u").as("u"), col("e.v").as("v"))
+              .join(delKeys, Seq("u", "v"), "left_anti")
+              .groupBy(col("u"), col("v")).agg(count(lit(1)).as("dec"))
+            survivors
+              .join(dec, Seq("u", "v"), "left")
+              .select(col("u"), col("v"),
+                (col("sup") - coalesce(col("dec"), lit(0L))).as("sup"))
+          }
+          val next = fp.cut(nextRows)
+          (next, weak(next))
+      }((_, s) => s._2.n)
+      last.rows.select(col("u"), col("v"), col("sup").as("support"))
+        .orderBy(col("u"), col("v"))
     }
-    if (!converged)
-      throw new IllegalStateException(
-        s"ktrussDecomposeInc did not converge in maxRounds=$maxRounds rounds")
-    val out = CacheScope.persist(
-      st.select(col("u"), col("v"), col("sup").as("support"))
-        .orderBy(col("u"), col("v")),
-      StorageLevel.MEMORY_AND_DISK)
-    out.queryExecution.toRdd.count() // materialize before the loop state goes
-    persisted.unpersist(false)
-    out
   }
 
   /** Per-node LOCAL CLUSTERING COEFFICIENT (Watts & Strogatz 1998):
@@ -1539,8 +1344,8 @@ object Graph {
     * cached relations keep `reached`'s lineage linear in k where plain
     * recursion doubles it per level. The edge relation persists DISK_ONLY
     * for the same reason (k consumptions). k is a small fixed constant
-    * per the [[pageRank]] discipline — an open-ended fixpoint would move
-    * to the persisted-row-RDD truncation of Dedup.nearDupClusters.
+    * per the [[pageRank]] discipline — the open-ended closure is
+    * [[reachConverged]], on [[Fixpoint]].
     */
   def kHopReach(edges: DataFrame, seeds: DataFrame, k: Int): DataFrame = {
     import org.apache.spark.storage.StorageLevel
@@ -1564,21 +1369,18 @@ object Graph {
   }
 
   /** CONVERGENCE-TERMINATED reachability closure (the [[kHopReach]]
-    * scaladoc's deferred "beyond that use a checkpointed fixpoint",
-    * closed with [[lpaConverged]]'s r14 discipline): multi-source BFS
-    * run until the frontier EMPTIES — every node reachable from the
-    * seed set, labeled with its exact minimum hop count, no horizon.
+    * scaladoc's deferred "beyond that use a checkpointed fixpoint"):
+    * multi-source BFS run until the frontier EMPTIES — every node
+    * reachable from the seed set, labeled with its exact minimum hop
+    * count, no horizon.
     *
     * Per level: ONE frontier-onto-edges equi-join, a distinct, and a
     * left-anti join against the reached set — the same hub-safe shapes
     * as the bounded form. What changes is lifecycle: `reached` and the
-    * frontier re-materialize each level through persisted row RDDs
-    * (lineage truncation — an open-ended loop cannot union k cached
-    * frontiers into one lazy plan the way the k-bounded form does,
-    * because the plan and the anti-join's input list would grow with
-    * the discovered diameter), the frontier count rides the SAME
-    * materializing action, and superseded levels unpersist as soon as
-    * their successor lands.
+    * frontier are cut every level on [[Fixpoint]] (an open-ended loop
+    * cannot union k cached frontiers into one lazy plan the way the
+    * k-bounded form does, because the plan and the anti-join's input
+    * list would grow with the discovered diameter).
     *
     * BFS levels are monotone (a node enters `reached` at its minimal
     * hop and is anti-joined away forever), so termination is
@@ -1590,52 +1392,21 @@ object Graph {
     * match.
     */
   def reachConverged(edges: DataFrame, seeds: DataFrame,
-      maxRounds: Int = 60): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
-    require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
-    val spark = edges.sparkSession
-    val e = edges.select(col("src"), col("dst"))
-      .persist(StorageLevel.DISK_ONLY)
-    def truncate(df: DataFrame): (DataFrame,
-        org.apache.spark.rdd.RDD[org.apache.spark.sql.Row], Long) = {
-      val rdd = df.rdd.persist(StorageLevel.MEMORY_AND_DISK)
-      val n = rdd.count()
-      (spark.createDataFrame(rdd, df.schema), rdd, n)
-    }
-    var (reached, reachedRdd, _) = truncate(
-      seeds.select(col("node")).distinct()
+      maxRounds: Int = 60): DataFrame =
+    Fixpoint("reachConverged", maxRounds,
+        stuck = s"reachConverged frontier still live after $maxRounds rounds — " +
+          "raise maxRounds (and the oracle's recursion bound) together") { fp =>
+      val e = fp.hold(edges.select(col("src"), col("dst")))
+      val start = fp.cut(seeds.select(col("node")).distinct()
         .withColumn("min_hops", lit(0)))
-    var frontier = reached
-    var frontierRdd = reachedRdd
-    var frontierN = 1L
-    var i = 0
-    while (frontierN > 0 && i < maxRounds) {
-      i += 1
-      val (nf, nfRdd, nfN) = truncate(
-        frontier.join(e, col("node") === col("src"))
-          .select(col("dst").as("node")).distinct()
-          .join(reached.select(col("node")), Seq("node"), "left_anti")
-          .withColumn("min_hops", lit(i)))
-      val (nr, nrRdd, _) = truncate(reached.unionByName(nf))
-      if (frontierRdd ne reachedRdd) frontierRdd.unpersist(false)
-      reachedRdd.unpersist(false)
-      frontier = nf; frontierRdd = nfRdd; frontierN = nfN
-      reached = nr; reachedRdd = nrRdd
+      val (reached, _, _) = fp.loop((start, start, 0)) {
+        case (reached, frontier, hop) =>
+          val next = fp.cut(frontier.rows.join(e, col("node") === col("src"))
+            .select(col("dst").as("node")).distinct()
+            .join(reached.rows.select(col("node")), Seq("node"), "left_anti")
+            .withColumn("min_hops", lit(hop + 1)))
+          (fp.cut(reached.rows.unionByName(next.rows)), next, hop + 1)
+      }((_, s) => s._2.n)
+      reached.rows.orderBy(col("min_hops"), col("node"))
     }
-    e.unpersist()
-    if (frontierN > 0) {
-      frontierRdd.unpersist(false)
-      reachedRdd.unpersist(false)
-      throw new IllegalStateException(
-        s"reachConverged frontier still live after $maxRounds rounds — " +
-          "raise maxRounds (and the oracle's recursion bound) together")
-    }
-    val out = CacheScope.persist(
-      reached.orderBy(col("min_hops"), col("node")),
-      StorageLevel.MEMORY_AND_DISK)
-    out.queryExecution.toRdd.count() // materialize before the loop state goes
-    frontierRdd.unpersist(false)
-    reachedRdd.unpersist(false)
-    out
-  }
 }

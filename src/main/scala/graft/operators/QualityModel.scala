@@ -17,15 +17,15 @@ import org.apache.spark.sql.functions._
   * Dataflow: hashed term frequencies (HashingTF — fixed feature space,
   * no vocabulary build, no fitting pass) → logistic regression on the
   * deterministic train split (doc_id % holdoutMod != 0) → row-local
-  * scoring of the holdout with broadcast coefficients.
+  * scoring of the holdout with the coefficients in the closure.
   *
   * Scale shape: featurization is row-local (one hash per token, bounded
   * vector width — scales embarrassingly); LR training is MLlib's
   * distributed L-BFGS, a BOUNDED number of treeAggregate passes over
   * the train split (≤ maxIter + line-search overhead — the documented
   * bounded-driver-actions contract, the bpeTrainRules discipline);
-  * scoring is one row-local pass, coefficients ride the closure as a
-  * broadcast. Nothing corpus-sized reaches the driver: each aggregate
+  * scoring is one row-local pass over `numFeatures` coefficients and an
+  * intercept. Nothing corpus-sized reaches the driver: each aggregate
   * returns one gradient vector of `numFeatures` doubles.
   */
 object QualityModel {
@@ -86,10 +86,17 @@ object QualityModel {
     val model = new LogisticRegression()
       .setMaxIter(50).setRegParam(1e-3).setStandardization(false)
       .fit(feat.filter(!col("is_holdout")))
-    val probKeep = org.apache.spark.ml.functions.vector_to_array(
-      col("probability")).getItem(1)
-    model.transform(feat)
-      .select(col("doc_id"), col("label"), col("is_holdout"),
-        probKeep.as("p_keep"), col("prediction"))
+    // score with a closure over the coefficients and the intercept only:
+    // the fitted model carries its training summary, whose session does
+    // not serialize once the session has run an observed action. The
+    // arithmetic is the binary model's own (margin = w·x + b, p(1) =
+    // 1 - 1 / (1 + e^margin), prediction = p(1) > 0.5).
+    val w = model.coefficients
+    val b = model.intercept
+    val pKeep = udf((x: org.apache.spark.ml.linalg.Vector) =>
+      1.0 - 1.0 / (1.0 + math.exp(x.dot(w) + b)))
+    feat.withColumn("p_keep", pKeep(col("features")))
+      .select(col("doc_id"), col("label"), col("is_holdout"), col("p_keep"),
+        when(col("p_keep") > 0.5, 1.0).otherwise(0.0).as("prediction"))
   }
 }

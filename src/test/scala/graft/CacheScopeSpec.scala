@@ -105,4 +105,23 @@ class CacheScopeSpec extends AnyFunSuite {
     assert(first.size == 8)
     assert(first == second)
   }
+
+  test("a converged loop that hits its round cap releases its state") {
+    import spark.implicits._
+    // a 1-2-3-4-5 path peels one endpoint pair per round at k = 2 and
+    // the 6-7-8 triangle stays: more rounds than the cap allows
+    val edges = (Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L)) ++
+      Seq((6L, 7L), (7L, 8L), (8L, 6L))).toDF("src", "dst")
+    val before = persistent
+    for ((name, run) <- Seq[(String, () => Any)](
+        "kcoreDecompose" -> (() => Graph.kcoreDecompose(edges, k = 2, maxRounds = 1)),
+        "pageRankConverged" -> (() => Graph.pageRankConverged(edges, maxRounds = 1)))) {
+      CacheScope {
+        val e = intercept[IllegalStateException](run())
+        assert(e.getMessage.contains(name), e.getMessage)
+        assert(persistent == before, s"$name left persisted RDDs behind: " +
+          (persistent -- before))
+      }
+    }
+  }
 }

@@ -1897,6 +1897,23 @@ class PipelineSpec extends AnyFunSuite with CacheScoped {
       s"fail recall $failRight/${n - keep} below half")
   }
 
+  test("quality_model scores after the session has run an observed action") {
+    import org.apache.spark.sql.Observation
+    import org.apache.spark.sql.functions._
+    // an observed action builds the session's ObservationManager, which
+    // does not serialize: scoring must not ship anything that holds the
+    // session (the fitted model's training summary does)
+    val seen = Observation("rows")
+    spark.range(3).observe(seen, count(lit(1)).as("n")).collect()
+    assert(seen.get("n") == 3L)
+    val scored = QualityModel.scoreHoldout(tbl("documents"),
+      stopList = Seq("the", "a"))
+    assert(scored.count() == tbl("documents").count())
+    assert(scored.filter(col("p_keep") < 0.0 || col("p_keep") > 1.0 ||
+      col("prediction") =!= when(col("p_keep") > 0.5, 1.0).otherwise(0.0))
+      .count() == 0)
+  }
+
   test("pipeline_tokenizer composes training with the greedy encoder") {
     import spark.implicits._
     // fixture rules: (a,a), (a,b), (aa,ab) — aaab encodes to ONE token,

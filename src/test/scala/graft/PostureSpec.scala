@@ -72,6 +72,31 @@ class PostureSpec extends AnyFunSuite with CacheScoped {
     assert(offenders.isEmpty, offenders.mkString("\n", "\n", ""))
   }
 
+  test("converged loops cut, cap and hand off only through Fixpoint") {
+    val mechanics = (Seq("longAccumulator", "localCheckpoint", ".rdd.persist",
+        "queryExecution.toRdd.count()").map(Regex.quote) :+
+      """createDataFrame\(\s*\w+\s*,""").mkString("|").r
+    val member = """^  (?:private(?:\[\w+\])? )?def (\w+).*""".r
+    val dir = Paths.get("src/main/scala/graft/operators")
+    val sites = Files.list(dir).iterator().asScala.toSeq.sortBy(_.toString)
+      .filter(f => f.toString.endsWith(".scala") &&
+        f.getFileName.toString != "Fixpoint.scala")
+      .flatMap { f =>
+        val lines = Files.readAllLines(f).asScala.toIndexedSeq
+        val obj = f.getFileName.toString.stripSuffix(".scala")
+        lines.indices.filter(i => mechanics.findFirstIn(lines(i)).nonEmpty)
+          .map { i =>
+            val owner = (i to 0 by -1).map(lines).collectFirst {
+              case member(name) => name
+            }.getOrElse("?")
+            s"$obj.$owner" -> s"$f:${i + 1}: ${lines(i).trim}"
+          }
+      }
+    if (sites.nonEmpty) fail("loop mechanics outside Fixpoint in " +
+      sites.map(_._1).distinct.mkString(", ") +
+      sites.map(_._2).mkString(":\n", "\n", ""))
+  }
+
   /** Partitions the final adaptive plan of an executed frame reads from
     * its first shuffle. */
   private def shuffleReadWidth(plan: SparkPlan): Int =
