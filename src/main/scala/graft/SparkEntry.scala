@@ -35,7 +35,7 @@ object SparkEntry extends SparkEntryOracleMain
 
   /** Flagship: pair-shaped crystal ball over lineitem-derived baskets. */
   private def crystalballPairs(spark: SparkSession, dir: String): DataFrame =
-    CrystalBall.pairProbabilities(BasketSource.basketsFromLineitem(spark, dir))
+    CrystalBall.pairProbabilities(BasketSource.fromLineitem(spark, dir))
 
   // ---- driver surface ---------------------------------------------------
 
@@ -92,17 +92,19 @@ object SparkEntry extends SparkEntryOracleMain
       BasketSource.fromLineitem(s, dir)
         .select(col("customer"), array_join(col("products"), " ").as("products"))
         .orderBy(col("customer"))),
-    // O4/O5 + O7/O12: repeat-terminated co-occurrence window + counts
+    // O4/O5 + O7/O12: repeat-terminated co-occurrence window + counts,
+    // on the engine's one pair kernel (the CoOccurWindow plan node)
     "cooccur_counts" -> ((s, dir) =>
-      CoOccurrence.counts(BasketSource.basketsFromLineitem(s, dir))
+      CoOccurrence.counts(BasketSource.fromLineitem(s, dir))
         .orderBy(col("product"), col("neighbor"))),
-    // O4 with the quadratic-basket guard ENGAGED (maxWindow=5): the 100 TB
-    // pathological-basket cap, driver-checked against an oracle that
-    // expresses the cap as a position-delta predicate. On 7-item lineitem
-    // baskets the cap truncates real windows, so this result genuinely
-    // differs from the uncapped twin.
+    // O4 with the quadratic-basket guard ENGAGED (maxWindow=5, carried
+    // by the same plan node): the 100 TB pathological-basket cap,
+    // driver-checked against an oracle that expresses the cap as a
+    // position-delta predicate. On 7-item lineitem baskets the cap
+    // truncates real windows, so this result genuinely differs from the
+    // uncapped twin.
     "cooccur_counts_capped" -> ((s, dir) =>
-      CoOccurrence.counts(BasketSource.basketsFromLineitem(s, dir), maxWindow = 5)
+      CoOccurrence.counts(BasketSource.fromLineitem(s, dir), maxWindow = 5)
         .orderBy(col("product"), col("neighbor"))),
     // O4 via pure Catalyst composition (posexplode + window + range join):
     // same relation as cooccur_counts, proving SQL-expressibility.
@@ -120,10 +122,9 @@ object SparkEntry extends SparkEntryOracleMain
     }),
     // O4 as a WHOLE-OPERATOR Catalyst extension — custom LogicalPlan +
     // SparkStrategy + SparkPlan (graft.plans.CoOccurWindow), the (c)
-    // rung of the custom-operator ladder: the window scan runs over
-    // InternalRow ArrayData in place (no encoder round trip) and emits
-    // through one reused UnsafeProjection. Same oracle text as
-    // cooccur_counts — all four O4 forms answer to one hash gate.
+    // rung of the custom-operator ladder, called directly rather than
+    // through CoOccurrence.counts: the same kernel as cooccur_counts, and
+    // the oracle text it shares with cooccur_counts_sql and _gen.
     "cooccur_counts_plan" -> ((s, dir) =>
       graft.plans.CoOccurWindow.pairs(
           BasketSource.fromLineitem(s, dir).select(col("products")))
@@ -141,8 +142,8 @@ object SparkEntry extends SparkEntryOracleMain
       val b = BasketSource.fromLineitem(s, dir)
       val existing = b.filter(crc32(col("customer").cast("binary")) % 2 === 0)
       val delta = b.filter(crc32(col("customer").cast("binary")) % 2 === 1)
-      CoOccurrence.countsFused(existing)
-        .unionByName(CoOccurrence.countsFused(delta))
+      CoOccurrence.counts(existing)
+        .unionByName(CoOccurrence.counts(delta))
         .groupBy(col("product"), col("neighbor"))
         .agg(sum(col("cnt")).as("cnt"))
         .orderBy(col("product"), col("neighbor"))
@@ -161,8 +162,8 @@ object SparkEntry extends SparkEntryOracleMain
       val delta = b.filter(crc32(col("customer").cast("binary")) % 2 === 1)
       val tbl = "graft_cooccur_partials"
       graft.sources.TableSink.writeBucketed(
-        CoOccurrence.countsFused(existing), tbl, "product", 8)
-      CoOccurrence.mergeCounts(s.table(tbl), CoOccurrence.countsFused(delta))
+        CoOccurrence.counts(existing), tbl, "product", 8)
+      CoOccurrence.mergeCounts(s.table(tbl), CoOccurrence.counts(delta))
         .orderBy(col("product"), col("neighbor"))
     }),
     // the APPEND half of the build-once discipline: generation 0's
@@ -187,17 +188,17 @@ object SparkEntry extends SparkEntryOracleMain
       val gen = crc32(col("customer").cast("binary")) % 3
       val tbl = "graft_cooccur_appended"
       graft.sources.TableSink.writeBucketed(
-        CoOccurrence.countsFused(b.filter(gen === 0)), tbl, "product", 8)
+        CoOccurrence.counts(b.filter(gen === 0)), tbl, "product", 8)
       graft.sources.TableSink.appendBucketed(
-        CoOccurrence.countsFused(b.filter(gen === 1)), tbl, "product", 8)
+        CoOccurrence.counts(b.filter(gen === 1)), tbl, "product", 8)
       CoOccurrence.mergeCounts(s.table(tbl),
-          CoOccurrence.countsFused(b.filter(gen === 2)))
+          CoOccurrence.counts(b.filter(gen === 2)))
         .orderBy(col("product"), col("neighbor"))
     }),
     // the flagship THROUGH THE STREAMING ENGINE, driver-checked: basket
     // lines are staged to a temp dir, read back as a bounded file-source
     // text STREAM run to completion (availableNow trigger), window-
-    // flatMapped and counted by Structured Streaming in complete mode
+    // scanned and counted by Structured Streaming in complete mode
     // into a memory sink, and the materialized sink table is returned.
     // Same oracle text as cooccur_counts — batch/stream parity, finally
     // visible to the driver's hash gate (StreamingSpec holds the
@@ -350,7 +351,7 @@ object SparkEntry extends SparkEntryOracleMain
           val baskets = graft.operators.CacheScope.persist(
             BasketSource.fromLineitem(s, dir)
               .withColumn("bkt", Sampling.bucket100(col("customer"))))
-          val backfill = CoOccurrence.countsFused(
+          val backfill = CoOccurrence.counts(
               baskets.filter(col("bkt") < 50))
             .groupBy(col("product"))
             .agg(sum(col("cnt")).as("total"))
@@ -739,7 +740,7 @@ object SparkEntry extends SparkEntryOracleMain
     // path): same result as the window formulation, benched side-by-side
     "crystalball_totals" -> ((s, dir) =>
       CrystalBall.normalizeViaTotalsJoin(
-          CoOccurrence.countsFused(BasketSource.fromLineitem(s, dir)))
+          CoOccurrence.counts(BasketSource.fromLineitem(s, dir)))
         .select(col("product"), col("neighbor"), col("cnt"), col("prob"))
         .orderBy(col("product"), col("neighbor"))),
     // O8/O14: stripe shape. The stripe aggregation (sorted struct array)
@@ -749,7 +750,7 @@ object SparkEntry extends SparkEntryOracleMain
     // without array-typed output columns (driver compare limitation).
     "crystalball_stripes" -> ((s, dir) =>
       CrystalBall.stripeShape(CrystalBall.normalize(
-          CoOccurrence.countsFused(BasketSource.fromLineitem(s, dir))))
+          CoOccurrence.counts(BasketSource.fromLineitem(s, dir))))
         .select(col("product"), size(col("stripe")).cast("long").as("n_neighbors"),
           posexplode(col("stripe")))
         .select(col("product"), col("n_neighbors"),
@@ -761,7 +762,7 @@ object SparkEntry extends SparkEntryOracleMain
     // element_at — null when the neighbor is absent — plus map_keys size)
     "stripe_lookup" -> ((s, dir) =>
       CrystalBall.stripeMapShape(CrystalBall.normalize(
-          CoOccurrence.countsFused(BasketSource.fromLineitem(s, dir))))
+          CoOccurrence.counts(BasketSource.fromLineitem(s, dir))))
         .select(col("product"),
           size(map_keys(col("stripe"))).cast("long").as("n_neighbors"),
           element_at(col("stripe"), "34").as("p34"))
@@ -771,7 +772,7 @@ object SparkEntry extends SparkEntryOracleMain
     // same iterations and hash-matches, which float ranks never could)
     "page_rank" -> ((s, dir) =>
       Graph.pageRank(
-        CoOccurrence.countsFused(BasketSource.fromLineitem(s, dir))
+        CoOccurrence.counts(BasketSource.fromLineitem(s, dir))
           .select(col("product").as("src"), col("neighbor").as("dst")))),
     // the CONVERGENCE-TERMINATED fixpoint pageRank's guard rail defers
     // to (r14): same exact integer recurrence, run until NO rank_e9
@@ -795,7 +796,7 @@ object SparkEntry extends SparkEntryOracleMain
     "pagerank_converged" -> ((s, dir) => {
       graft.sources.TableSink.saveTable(
         Graph.pageRankConverged(
-          CoOccurrence.countsFused(BasketSource.fromLineitem(s, dir))
+          CoOccurrence.counts(BasketSource.fromLineitem(s, dir))
             .filter(col("cnt") >= 2)
             .select(col("product").as("src"), col("neighbor").as("dst")),
           maxRounds = 80),
@@ -812,7 +813,7 @@ object SparkEntry extends SparkEntryOracleMain
     // see ppr_seeded's note)
     "ppmi_rank" -> ((s, dir) => {
       graft.sources.TableSink.saveTable(
-        CoOccurrence.countsFused(BasketSource.fromLineitem(s, dir)),
+        CoOccurrence.counts(BasketSource.fromLineitem(s, dir)),
         "graft_ppmi_counts")
       CrystalBall.ppmiRank(s.table("graft_ppmi_counts"))
     }),
@@ -824,14 +825,14 @@ object SparkEntry extends SparkEntryOracleMain
     // path is exercised against brute force in PipelineSpec.
     "triangle_count" -> ((s, dir) =>
       Graph.triangleCounts(
-        CoOccurrence.countsFused(BasketSource.fromLineitem(s, dir))
+        CoOccurrence.counts(BasketSource.fromLineitem(s, dir))
           .filter(col("cnt") >= 2)
           .select(col("product").as("src"), col("neighbor").as("dst")))
         .orderBy(col("node"))),
     // bounded multi-source BFS over the same significant-edge graph:
     // seeds are the round-hundred products, 3 hops, minimal hop labels
     "khop_reach" -> ((s, dir) => {
-      val edges = CoOccurrence.countsFused(BasketSource.fromLineitem(s, dir))
+      val edges = CoOccurrence.counts(BasketSource.fromLineitem(s, dir))
         .filter(col("cnt") >= 2)
         .select(col("product").as("src"), col("neighbor").as("dst"))
       val seeds = edges.filter(col("src").cast("long") % 100 === 0)
@@ -862,7 +863,7 @@ object SparkEntry extends SparkEntryOracleMain
       // keeps the soak's warehouse-steady gate meaningful, and the
       // engine's mains run serially by contract (ONE sbt/JVM at a time).
       graft.sources.TableSink.saveTable(
-        CoOccurrence.countsFused(BasketSource.fromLineitem(s, dir))
+        CoOccurrence.counts(BasketSource.fromLineitem(s, dir))
           .filter(col("cnt") >= 2)
           .select(col("product").as("src"), col("neighbor").as("dst")),
         "graft_ppr_edges")
@@ -879,7 +880,7 @@ object SparkEntry extends SparkEntryOracleMain
     // DECIMAL(38,0) estimate floor), so the oracle replays every row.
     "hyperanf" -> ((s, dir) =>
       Graph.hyperAnf(
-        CoOccurrence.countsFused(BasketSource.fromLineitem(s, dir))
+        CoOccurrence.counts(BasketSource.fromLineitem(s, dir))
           .filter(col("cnt") >= 2)
           .select(col("product").as("src"), col("neighbor").as("dst")))),
     // the neighborhood function + effective-diameter flag over those
@@ -887,7 +888,7 @@ object SparkEntry extends SparkEntryOracleMain
     // cross-multiplication — one tiny broadcast join, window-free)
     "anf_function" -> ((s, dir) =>
       Graph.anfFunction(
-        CoOccurrence.countsFused(BasketSource.fromLineitem(s, dir))
+        CoOccurrence.counts(BasketSource.fromLineitem(s, dir))
           .filter(col("cnt") >= 2)
           .select(col("product").as("src"), col("neighbor").as("dst")))),
     // the PRODUCTION register count (r14 verdict item 4): 256 registers
@@ -899,13 +900,13 @@ object SparkEntry extends SparkEntryOracleMain
     // tightening vs the 16-register miniature.
     "hyperanf_256" -> ((s, dir) =>
       Graph.hyperAnf(
-        CoOccurrence.countsFused(BasketSource.fromLineitem(s, dir))
+        CoOccurrence.counts(BasketSource.fromLineitem(s, dir))
           .filter(col("cnt") >= 2)
           .select(col("product").as("src"), col("neighbor").as("dst")),
         registers = 256)),
     "anf_function_256" -> ((s, dir) =>
       Graph.anfFunction(
-        CoOccurrence.countsFused(BasketSource.fromLineitem(s, dir))
+        CoOccurrence.counts(BasketSource.fromLineitem(s, dir))
           .filter(col("cnt") >= 2)
           .select(col("product").as("src"), col("neighbor").as("dst")),
         registers = 256)),
@@ -915,7 +916,7 @@ object SparkEntry extends SparkEntryOracleMain
     // over constant 4-row per-node partitions, the safe window shape
     "harmonic_centrality" -> ((s, dir) =>
       Graph.harmonicCentrality(
-        CoOccurrence.countsFused(BasketSource.fromLineitem(s, dir))
+        CoOccurrence.counts(BasketSource.fromLineitem(s, dir))
           .filter(col("cnt") >= 2)
           .select(col("product").as("src"), col("neighbor").as("dst")))),
     // DETERMINISTIC random walks (r14 — DeepWalk/node2vec corpus prep):
@@ -925,7 +926,7 @@ object SparkEntry extends SparkEntryOracleMain
     // fan-out never single-tasks the step (the LPA argmax discipline);
     // the oracle replays the walk verbatim.
     "random_walks" -> ((s, dir) => {
-      val edges = CoOccurrence.countsFused(BasketSource.fromLineitem(s, dir))
+      val edges = CoOccurrence.counts(BasketSource.fromLineitem(s, dir))
         .filter(col("cnt") >= 2)
         .select(col("product").as("src"), col("neighbor").as("dst"))
       val seeds = edges.filter(col("src").cast("long") % 100 === 0)
@@ -940,7 +941,7 @@ object SparkEntry extends SparkEntryOracleMain
     // of the edge set. One candidates join + one adjacency-flag join +
     // a ≤4-way row-local explode per step.
     "node2vec_walks" -> ((s, dir) => {
-      val edges = CoOccurrence.countsFused(BasketSource.fromLineitem(s, dir))
+      val edges = CoOccurrence.counts(BasketSource.fromLineitem(s, dir))
         .filter(col("cnt") >= 2)
         .select(col("product").as("src"), col("neighbor").as("dst"))
       val seeds = edges.filter(col("src").cast("long") % 100 === 0)
@@ -952,7 +953,7 @@ object SparkEntry extends SparkEntryOracleMain
     // positions — the bounded per-walk self-join, output linear in the
     // walk corpus. The relation a graph-embedding trainer consumes.
     "walk_skipgram" -> ((s, dir) => {
-      val edges = CoOccurrence.countsFused(BasketSource.fromLineitem(s, dir))
+      val edges = CoOccurrence.counts(BasketSource.fromLineitem(s, dir))
         .filter(col("cnt") >= 2)
         .select(col("product").as("src"), col("neighbor").as("dst"))
       val seeds = edges.filter(col("src").cast("long") % 100 === 0)
@@ -964,7 +965,7 @@ object SparkEntry extends SparkEntryOracleMain
     // context distribution (sqrt-composed — IEEE-exact), md5 uniforms
     // inverted through the exact CDF ladder as a bucketized EQUI-join
     "skipgram_negatives" -> ((s, dir) => {
-      val edges = CoOccurrence.countsFused(BasketSource.fromLineitem(s, dir))
+      val edges = CoOccurrence.counts(BasketSource.fromLineitem(s, dir))
         .filter(col("cnt") >= 2)
         .select(col("product").as("src"), col("neighbor").as("dst"))
       val seeds = edges.filter(col("src").cast("long") % 100 === 0)
@@ -1057,7 +1058,7 @@ object SparkEntry extends SparkEntryOracleMain
     // recursion bounded at the shared 60-round cap (engine throws
     // beyond it rather than serving a truncated closure)
     "reach_converged" -> ((s, dir) => {
-      val edges = CoOccurrence.countsFused(BasketSource.fromLineitem(s, dir))
+      val edges = CoOccurrence.counts(BasketSource.fromLineitem(s, dir))
         .filter(col("cnt") >= 2)
         .select(col("product").as("src"), col("neighbor").as("dst"))
       val seeds = edges.filter(col("src").cast("long") % 100 === 0)
@@ -1070,7 +1071,7 @@ object SparkEntry extends SparkEntryOracleMain
     // oracle unrolls the identical rounds with a QUALIFY argmax
     "communities_lpa" -> ((s, dir) =>
       Graph.labelPropagation(
-        CoOccurrence.countsFused(BasketSource.fromLineitem(s, dir))
+        CoOccurrence.counts(BasketSource.fromLineitem(s, dir))
           .filter(col("cnt") >= 2)
           .select(col("product").as("src"), col("neighbor").as("dst")),
         iterations = 3)),
@@ -1080,7 +1081,7 @@ object SparkEntry extends SparkEntryOracleMain
     // unroll (post-convergence rounds are no-ops under monotonicity)
     "lpa_converged" -> ((s, dir) =>
       Graph.lpaConverged(
-        CoOccurrence.countsFused(BasketSource.fromLineitem(s, dir))
+        CoOccurrence.counts(BasketSource.fromLineitem(s, dir))
           .filter(col("cnt") >= 2)
           .select(col("product").as("src"), col("neighbor").as("dst")))),
     // Newman modularity of those converged communities (r14 — the
@@ -1105,7 +1106,7 @@ object SparkEntry extends SparkEntryOracleMain
       // recompute reuses the first's shuffle files (skipped stages), so
       // the DISK_ONLY persist write costs more than it saves. Left
       // un-persisted on measurement.
-      val edges = CoOccurrence.countsFused(BasketSource.fromLineitem(s, dir))
+      val edges = CoOccurrence.counts(BasketSource.fromLineitem(s, dir))
         .filter(col("cnt") >= 2)
         .select(col("product").as("src"), col("neighbor").as("dst"))
       graft.sources.TableSink.saveTable(
@@ -1120,7 +1121,7 @@ object SparkEntry extends SparkEntryOracleMain
     // discipline), existing edges anti-joined out.
     "link_predict" -> ((s, dir) =>
       Graph.linkPredict(
-        CoOccurrence.countsFused(BasketSource.fromLineitem(s, dir))
+        CoOccurrence.counts(BasketSource.fromLineitem(s, dir))
           .filter(col("cnt") >= 2)
           .select(col("product").as("src"), col("neighbor").as("dst")))),
     // K-CORE decomposition (r14): peel nodes with in-survivor degree < 2
@@ -1133,7 +1134,7 @@ object SparkEntry extends SparkEntryOracleMain
     // post-convergence rounds are no-ops
     "kcore_decompose" -> ((s, dir) =>
       Graph.kcoreDecompose(
-        CoOccurrence.countsFused(BasketSource.fromLineitem(s, dir))
+        CoOccurrence.counts(BasketSource.fromLineitem(s, dir))
           .filter(col("cnt") >= 2)
           .select(col("product").as("src"), col("neighbor").as("dst")),
         k = 2)),
@@ -1150,7 +1151,7 @@ object SparkEntry extends SparkEntryOracleMain
     // receipt x10 6.04 vs 8.93 s, x100 36.5 vs 46.4 s (BENCH_NOTES r17)
     "ktruss_edges" -> ((s, dir) =>
       Graph.ktrussDecomposeInc(
-        CoOccurrence.countsFused(BasketSource.fromLineitem(s, dir))
+        CoOccurrence.counts(BasketSource.fromLineitem(s, dir))
           .filter(col("cnt") >= 2)
           .select(col("product").as("src"), col("neighbor").as("dst")),
         k = 3)),
@@ -1160,7 +1161,7 @@ object SparkEntry extends SparkEntryOracleMain
     // triangles id-ordered (a<b<c) — different join order, same set
     "local_clustering" -> ((s, dir) =>
       Graph.localClustering(
-        CoOccurrence.countsFused(BasketSource.fromLineitem(s, dir))
+        CoOccurrence.counts(BasketSource.fromLineitem(s, dir))
           .filter(col("cnt") >= 2)
           .select(col("product").as("src"), col("neighbor").as("dst")))),
     // Newman degree-mixing coefficient over the same graph (r17):
@@ -1168,14 +1169,14 @@ object SparkEntry extends SparkEntryOracleMain
     // oracle, NULL on degree-regular degeneracy
     "assortativity" -> ((s, dir) =>
       Graph.assortativity(
-        CoOccurrence.countsFused(BasketSource.fromLineitem(s, dir))
+        CoOccurrence.counts(BasketSource.fromLineitem(s, dir))
           .filter(col("cnt") >= 2)
           .select(col("product").as("src"), col("neighbor").as("dst")))),
     // hub-interconnection density at doubling degree thresholds (r17):
     // one conditional aggregation against a ≤63-row broadcast spine
     "rich_club" -> ((s, dir) =>
       Graph.richClub(
-        CoOccurrence.countsFused(BasketSource.fromLineitem(s, dir))
+        CoOccurrence.counts(BasketSource.fromLineitem(s, dir))
           .filter(col("cnt") >= 2)
           .select(col("product").as("src"), col("neighbor").as("dst")))),
     // ---- relational breadth (SURVEY.md §2.1 — absent from the reference) --

@@ -121,7 +121,7 @@ private[graft] trait SparkEntryOracleBuilders {
       |)""".stripMargin
 
   /** [[cooccurCte]] with the maxWindow cap expressed as a position-delta
-    * predicate: CoOccurrence.windowPairs scans j in (i, i+cap], so the SQL
+    * predicate: the CoOccurWindow node scans j in (i, i+cap], so the SQL
     * twin keeps exactly the pairs with b.pos - a.pos <= cap (before the
     * first-repeat termination, which is cap-independent).
     */

@@ -654,13 +654,12 @@ private[graft] trait SparkEntryQueriesText extends SparkEntryStaging {
       // DISK_ONLY so the corpus-proportional shingle+minhash pipeline runs
       // once and feeds BOTH table writes (bands + sigs), not twice — the
       // same house rule minhashIncremental itself follows.
-      val sigs = Dedup.minhashSignatures(docs.filter(col("doc_id") % 10 =!= 0))
-        .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
+      val sigs = CacheScope.persist(
+        Dedup.minhashSignatures(docs.filter(col("doc_id") % 10 =!= 0)))
       graft.sources.TableSink.writeBucketed(
         Dedup.minhashBandIndex(sigs), "graft_dedup_bands", "b0", 8)
       graft.sources.TableSink.writeBucketed(sigs, "graft_dedup_sigs",
         "doc_id", 8)
-      sigs.unpersist()
       Dedup.minhashProbeIndex(docs.filter(col("doc_id") % 10 === 0),
         s.table("graft_dedup_bands"), s.table("graft_dedup_sigs"))
     }),
@@ -672,20 +671,18 @@ private[graft] trait SparkEntryQueriesText extends SparkEntryStaging {
     "dedup_appended" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
       val rest = docs.filter(col("doc_id") % 10 =!= 0)
-      val sigsA = Dedup.minhashSignatures(rest.filter(col("doc_id") % 2 === 1))
-        .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
+      val sigsA = CacheScope.persist(
+        Dedup.minhashSignatures(rest.filter(col("doc_id") % 2 === 1)))
       graft.sources.TableSink.writeBucketed(
         Dedup.minhashBandIndex(sigsA), "graft_dedup_bands_app", "b0", 8)
       graft.sources.TableSink.writeBucketed(sigsA, "graft_dedup_sigs_app",
         "doc_id", 8)
-      sigsA.unpersist()
-      val sigsB = Dedup.minhashSignatures(rest.filter(col("doc_id") % 2 === 0))
-        .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
+      val sigsB = CacheScope.persist(
+        Dedup.minhashSignatures(rest.filter(col("doc_id") % 2 === 0)))
       graft.sources.TableSink.appendBucketed(
         Dedup.minhashBandIndex(sigsB), "graft_dedup_bands_app", "b0", 8)
       graft.sources.TableSink.appendBucketed(sigsB, "graft_dedup_sigs_app",
         "doc_id", 8)
-      sigsB.unpersist()
       Dedup.minhashProbeIndex(docs.filter(col("doc_id") % 10 === 0),
         s.table("graft_dedup_bands_app"), s.table("graft_dedup_sigs_app"))
     }),
@@ -707,13 +704,12 @@ private[graft] trait SparkEntryQueriesText extends SparkEntryStaging {
       val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
       // base index built once, served from the catalog (never rebuilt
       // per batch — the entire point of the composition)
-      val sigs = Dedup.minhashSignatures(docs.filter(col("doc_id") % 10 =!= 0))
-        .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
+      val sigs = CacheScope.persist(
+        Dedup.minhashSignatures(docs.filter(col("doc_id") % 10 =!= 0)))
       graft.sources.TableSink.writeBucketed(
         Dedup.minhashBandIndex(sigs), "graft_dedup_bands_strm", "b0", 8)
       graft.sources.TableSink.writeBucketed(sigs, "graft_dedup_sigs_strm",
         "doc_id", 8)
-      sigs.unpersist()
       val batch = docs.filter(col("doc_id") % 10 === 0)
       def run(): Unit = {
         val stream = s.readStream.schema(

@@ -49,7 +49,7 @@ case class CoOccurGenerator(child: Expression)
         x += 1
       }
       // lazy emission: a pathological w-wide basket must not buffer
-      // O(w^2) rows — mirror the flatMap twin's streaming iterators
+      // O(w^2) rows — mirror windowPairs' streaming iterators
       (0 until n - 1).iterator.flatMap { i =>
         val cur = items(i)
         new Iterator[InternalRow] {

@@ -1,8 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import graft.{Basket, CoPair}
+import graft.CoPair
 
 /** The engine's one genuinely custom operator (SURVEY.md §2 O4/O5): the
   * **repeat-terminated co-occurrence window**.
@@ -16,14 +16,15 @@ import graft.{Basket, CoPair}
   * The last position is never a "current" product (its window is empty, so
   * this is observationally a no-op).
   *
-  * Two implementations, same relation:
-  *  - [[pairs]]: typed `flatMap` — row-at-a-time, per-basket O(w²) worst
-  *    case bounded by `maxWindow`. Distributed: runs inside whole-stage
-  *    codegen's object path per input partition, no shuffle of its own.
-  *  - [[pairsSql]]: pure DataFrame composition (posexplode + min-over window
-  *    to find the first-repeat boundary) — keeps everything inside Catalyst
-  *    expressions and proves the operator is SQL-expressible (this is also
-  *    the shape of the DuckDB oracle twin).
+  * One kernel: [[counts]] runs the scan on the whole-stage-codegen plan
+  * node [[graft.plans.CoOccurWindow]], which reads each basket's array in
+  * place and fuses scan → window-pairs → partial aggregate into one
+  * generated stage. [[windowPairs]] is the pure reference model the node
+  * is property-checked against. [[pairsSql]] is the same relation as a
+  * pure DataFrame composition (posexplode + min-over window to find the
+  * first-repeat boundary), registered as `cooccur_counts_sql`; it proves
+  * the operator is SQL-expressible and is the shape of the DuckDB
+  * oracle twin.
   *
   * Scale note (100 TB design point): per-basket cost is quadratic in basket
   * width. Baskets here are order line sequences (bounded ~7 items TPC-H-like;
@@ -33,8 +34,9 @@ import graft.{Basket, CoPair}
   */
 object CoOccurrence {
 
-  /** Window-scan one basket. Pure function — also used by tests/property
-    * checks. `maxWindow` caps the forward scan per occurrence.
+  /** Window-scan one basket: the pure reference model of the plan node,
+    * used by the property checks. `maxWindow` caps the forward scan per
+    * occurrence.
     */
   private[graft] def windowPairs(products: Seq[String],
       maxWindow: Int = Int.MaxValue): Iterator[CoPair] = {
@@ -50,12 +52,6 @@ object CoOccurrence {
         def next(): CoPair = { val p = CoPair(cur, arr(j)); j += 1; p }
       }
     }
-  }
-
-  /** Typed flatMap implementation → DataFrame(product, neighbor). */
-  def pairs(baskets: Dataset[Basket], maxWindow: Int = Int.MaxValue): DataFrame = {
-    import baskets.sparkSession.implicits._
-    baskets.flatMap(b => windowPairs(b.products, maxWindow)).toDF()
   }
 
   /** Pure-Catalyst implementation over a DataFrame with an array column
@@ -79,27 +75,19 @@ object CoOccurrence {
       .select(col("product"), col("neighbor"))
   }
 
-  /** Aggregated co-occurrence counts: DataFrame(product, neighbor, cnt). */
-  def counts(baskets: Dataset[Basket], maxWindow: Int = Int.MaxValue): DataFrame =
-    pairs(baskets, maxWindow).groupBy(col("product"), col("neighbor"))
-      .agg(count(lit(1)).as("cnt"))
-
-  /** [[counts]] computed through the whole-stage-codegen custom plan node
-    * ([[graft.plans.CoOccurWindow]]) instead of the typed flatMap — the
-    * SAME relation (the plan node is held to cooccur_counts' oracle hash
-    * via the registered cooccur_counts_plan twin), with no encoder round
-    * trip: scan → window-pairs → partial aggregate fuse into one codegen
-    * stage. It is the default pair source for DOWNSTREAM consumers
-    * (graph edge builders, PPMI, stripe/totals normalizations). The four
-    * registered O4 forms (flatMap / SQL / UDTF / plan) keep their own
-    * implementations; uncapped window only (the capped twin stays on
-    * [[counts]], whose maxWindow the plan node deliberately doesn't
-    * carry).
+  /** Aggregated co-occurrence counts: DataFrame(product, neighbor, cnt)
+    * over any baskets frame with an `array<string>` column `products`.
+    * `maxWindow` caps the forward scan per occurrence.
     */
-  def countsFused(basketsDf: DataFrame): DataFrame =
-    graft.plans.CoOccurWindow.pairs(basketsDf.select(col("products")))
+  def counts(baskets: Dataset[_], maxWindow: Int = Int.MaxValue): DataFrame =
+    graft.plans.CoOccurWindow.pairs(baskets.select(col("products")), maxWindow)
       .groupBy(col("product"), col("neighbor"))
       .agg(count(lit(1)).as("cnt"))
+
+  /** [[counts]] under its former name, kept for callers outside the
+    * engine sources (the perfbench workloads call it).
+    */
+  def countsFused(basketsDf: DataFrame): DataFrame = counts(basketsDf)
 
   /** Incremental-view-maintenance merge: persisted partial counts (a
     * prior session's [[counts]] output, e.g. read back from a bucketed

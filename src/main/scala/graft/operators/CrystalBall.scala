@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Basket
 
 /** Relative-frequency normalization — the "crystal ball" (SURVEY.md §2
   * O6/O9/O12/O13): P(neighbor|product) = cnt(product, neighbor) /
@@ -51,7 +50,7 @@ object CrystalBall {
     * deterministically ordered (string sort, matching the reference's
     * lexicographic `Pair.compareTo`, `src/CrystalBallPair.java:215-224`).
     */
-  def pairProbabilities(baskets: Dataset[Basket]): DataFrame =
+  def pairProbabilities(baskets: Dataset[_]): DataFrame =
     normalize(CoOccurrence.counts(baskets))
       .orderBy(col("product"), col("neighbor"))
 
@@ -61,13 +60,12 @@ object CrystalBall {
     * rather than MapType so output comparison is deterministic (the
     * reference's map iteration order is Java HashMap order — SURVEY.md §5).
     */
-  def stripeProbabilities(baskets: Dataset[Basket]): DataFrame =
+  def stripeProbabilities(baskets: Dataset[_]): DataFrame =
     stripeShape(normalize(CoOccurrence.counts(baskets)))
 
   /** The stripe aggregation over an already-normalized (product,
     * neighbor, cnt, prob) relation, so the registered stripe queries can
-    * feed it from [[CoOccurrence.countsFused]] without re-stating the
-    * shape.
+    * feed it from [[CoOccurrence.counts]] without re-stating the shape.
     */
   def stripeShape(probs: DataFrame): DataFrame =
     probs
@@ -79,7 +77,7 @@ object CrystalBall {
   /** Map-typed stripes — the engine-native presentation (MapType column),
     * for users who want `stripe['34']` lookups.
     */
-  def stripeMap(baskets: Dataset[Basket]): DataFrame =
+  def stripeMap(baskets: Dataset[_]): DataFrame =
     stripeMapShape(normalize(CoOccurrence.counts(baskets)))
 
   /** MapType twin of [[stripeShape]]. */

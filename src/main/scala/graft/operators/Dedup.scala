@@ -28,8 +28,7 @@ object Dedup {
   /** Distinct token-trigram shingles per document: (doc_id, shingle).
     * Docs shorter than 3 tokens emit nothing.
     *
-    * Implemented as a typed flatMap (the same discipline as the flagship
-    * CoOccurrence.pairs): the equivalent Catalyst form —
+    * Implemented as a typed flatMap: the equivalent Catalyst form —
     * explode(array_distinct(transform(sequence(...), concat_ws(
     * element_at...)))) — runs on the INTERPRETED higher-order-function
     * path (HOF lambdas are not whole-stage-codegen'd) and measured 10×

@@ -952,18 +952,11 @@ object TextAnalysis {
     * sequences instead of purchase sequences — top co-occurring term
     * pairs across the corpus.
     */
-  def tokenCoOccurrence(documents: DataFrame, k: Int = 50): DataFrame = {
-    val spark = documents.sparkSession
-    import spark.implicits._
-    val baskets = documents
-      .select(col("doc_id").cast("string").as("customer"),
-        split(col("text"), " ").as("products"))
-      .as[graft.Basket]
-    CoOccurrence.counts(baskets)
+  def tokenCoOccurrence(documents: DataFrame, k: Int = 50): DataFrame =
+    CoOccurrence.counts(documents.select(split(col("text"), " ").as("products")))
       .select(col("product").as("term"), col("neighbor").as("coterm"), col("cnt"))
       .orderBy(col("cnt").desc, col("term"), col("coterm"))
       .limit(k)
-  }
 
   /** End-to-end training-data cleaning pipeline: quality-score → filter →
     * bag-fingerprint dedup (keep lowest doc_id) → per-language corpus

@@ -30,19 +30,20 @@ import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
   *  - [[CoOccurWindowExec]] — the physical node: a partition-preserving
   *    `mapPartitions` over the child's `InternalRow`s, scanning
   *    each basket's `ArrayData` IN PLACE (`getUTF8String` — no
-  *    deserialization to JVM objects, unlike the typed-flatMap form,
-  *    which pays an encoder round trip per basket) and emitting pairs
-  *    through one reused `UnsafeProjection` — the Tungsten emission
-  *    contract (downstream operators copy what they retain).
+  *    deserialization to JVM objects) and emitting pairs through one
+  *    reused `UnsafeProjection` — the Tungsten emission contract
+  *    (downstream operators copy what they retain).
   *
-  * Semantics are EXACTLY [[graft.operators.CoOccurrence.windowPairs]]:
-  * for each position i, emit (arr(i), arr(j)) for j > i until the first
-  * j with arr(j) == arr(i) (the repeat terminates the window; the
-  * repeat itself is not emitted). The registered `cooccur_counts_plan`
-  * query shares cooccur_counts' oracle text, so the custom node is held
-  * to the same hash gate as the flatMap, pure-SQL, and UDTF forms.
+  * It is the engine's one pair-count kernel: every co-occurrence count
+  * ([[graft.operators.CoOccurrence.counts]], capped or not) runs on it.
+  * Semantics are EXACTLY [[graft.operators.CoOccurrence.windowPairs]],
+  * the pure reference model: for each position i, emit (arr(i), arr(j))
+  * for i < j < min(n, i + 1 + maxWindow) until the first j with
+  * arr(j) == arr(i) (the repeat terminates the window; the repeat itself
+  * is not emitted). The bound is computed in long arithmetic, so a cap
+  * near Int.MaxValue cannot wrap.
   */
-case class CoOccurWindow(child: LogicalPlan,
+case class CoOccurWindow(child: LogicalPlan, maxWindow: Int,
     // output attributes live in the CONSTRUCTOR, not a body val: Catalyst
     // copies nodes freely during optimization (withNewChildInternal →
     // copy), and a body val would mint fresh exprIds on every copy,
@@ -83,11 +84,12 @@ object CoOccurWindow {
     AttributeReference("neighbor", StringType, nullable = false)())
 
   /** DataFrame-level entry: `df`'s single column must be
-    * `array<string>` (the basket's ordered products). Builds the
-    * logical node over the analyzed child and installs the strategy in
-    * the session (idempotent), so callers need no session pre-config.
+    * `array<string>` (the basket's ordered products). `maxWindow` caps
+    * the forward scan per occurrence. Builds the logical node over the
+    * analyzed child and installs the strategy in the session
+    * (idempotent), so callers need no session pre-config.
     */
-  def pairs(df: DataFrame): DataFrame = {
+  def pairs(df: DataFrame, maxWindow: Int = Int.MaxValue): DataFrame = {
     // containsNull=true schemas are accepted (collect_list marks its
     // array nullable even over a non-null child), but null ELEMENTS are
     // a runtime fail-fast in the exec, never data: the output attributes
@@ -103,7 +105,7 @@ object CoOccurWindow {
     val spark = df.sparkSession
     install(spark)
     org.apache.spark.sql.graft.PlanBridge.ofRows(spark,
-      CoOccurWindow(df.queryExecution.analyzed))
+      CoOccurWindow(df.queryExecution.analyzed, maxWindow))
   }
 
   /** Per-session strategy install (the public `experimental` surface;
@@ -119,13 +121,17 @@ object CoOccurWindow {
 object CoOccurWindowStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case w: CoOccurWindow =>
-      CoOccurWindowExec(w.output, planLater(w.child)) :: Nil
+      CoOccurWindowExec(w.output, w.maxWindow, planLater(w.child)) :: Nil
     case _ => Nil
   }
 }
 
-case class CoOccurWindowExec(output: Seq[Attribute], child: SparkPlan)
-    extends UnaryExecNode with CodegenSupport {
+case class CoOccurWindowExec(output: Seq[Attribute], maxWindow: Int,
+    child: SparkPlan) extends UnaryExecNode with CodegenSupport {
+
+  // an uncapped window prints as it always has; a cap shows as an argument
+  override protected def stringArgs: Iterator[Any] =
+    if (maxWindow == Int.MaxValue) Iterator(output) else Iterator(output, maxWindow)
 
   // ---- whole-stage codegen (the last rung of the custom-operator
   // ladder): the i/j window scan is emitted INLINE between the child's
@@ -153,6 +159,7 @@ case class CoOccurWindowExec(output: Seq[Attribute], child: SparkPlan)
     val n = ctx.freshName("n")
     val i = ctx.freshName("i")
     val j = ctx.freshName("j")
+    val bound = ctx.freshName("bound")
     val cur = ctx.freshName("product")
     val nb = ctx.freshName("neighbor")
     val utf8 = classOf[org.apache.spark.unsafe.types.UTF8String].getName
@@ -177,7 +184,8 @@ case class CoOccurWindowExec(output: Seq[Attribute], child: SparkPlan)
        |  for (int $i = 0; $i + 1 < $n; $i++) {
        |    if ($arr.isNullAt($i)) throw new IllegalArgumentException("$nullElem");
        |    $utf8 $cur = $arr.getUTF8String($i);
-       |    for (int $j = $i + 1; $j < $n; $j++) {
+       |    int $bound = (int) Math.min((long) $n, $i + 1L + ${maxWindow}L);
+       |    for (int $j = $i + 1; $j < $bound; $j++) {
        |      if ($arr.isNullAt($j)) throw new IllegalArgumentException("$nullElem");
        |      $utf8 $nb = $arr.getUTF8String($j);
        |      if ($nb.equals($cur)) break;
@@ -209,9 +217,10 @@ case class CoOccurWindowExec(output: Seq[Attribute], child: SparkPlan)
             "CoOccurWindow: null basket element at position " + i +
               " — the window scan is defined over non-null products only;" +
               " array_compact the basket column first")
+          val bound = math.min(n.toLong, i + 1L + maxWindow).toInt
           new Iterator[InternalRow] {
             private var j = i + 1
-            def hasNext: Boolean = j < n && {
+            def hasNext: Boolean = j < bound && {
               val nb = arr.getUTF8String(j)
               if (nb == null) throw new IllegalArgumentException(
                 "CoOccurWindow: null basket element at position " + j +

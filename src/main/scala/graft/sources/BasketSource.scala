@@ -102,10 +102,4 @@ object BasketSource {
       .select(col("l_orderkey").cast("string").as("customer"),
         col("seq.pk").as("products"))
   }
-
-  /** Typed view of [[fromLineitem]] for the flatMap-based window operator. */
-  def basketsFromLineitem(spark: SparkSession, sfDir: String): Dataset[Basket] = {
-    import spark.implicits._
-    fromLineitem(spark, sfDir).as[Basket]
-  }
 }

@@ -157,21 +157,15 @@ object StreamingOps {
         col("n_events"), col("sum_value"))
 
   /** The flagship crystal-ball dataflow over a text stream of basket
-    * lines: parse → repeat-terminated window flatMap → running pair
-    * counts. Normalization happens at read time (probabilities need the
-    * per-product total, which keeps updating on a stream — emit counts,
+    * lines: parse → [[graft.operators.CoOccurrence.counts]] → running
+    * pair counts. Normalization happens at read time (probabilities need
+    * the per-product total, which keeps updating on a stream — emit counts,
     * derive P(b|a) in the sink query, exactly as the batch
     * CrystalBall.normalize does over the final counts).
     */
   def coOccurrenceCounts(spark: SparkSession, textDir: String,
       maxWindow: Int = Int.MaxValue): DataFrame = {
     import spark.implicits._
-    // r18: routing this through the codegen CoOccurWindow node (Catalyst
-    // split/filter/slice parse instead of the typed flatMaps) was built
-    // and MEASURED — it runs fine under IncrementalExecution, but the
-    // per-batch map stage only moved 645 -> 592 ms while the state-store
-    // commit stage (2.3 s of the query's ~5 s) dominates and is
-    // untouched. Reverted as not-worth-the-surface (guide §1.3).
     val baskets = spark.readStream.textFile(textDir)
       .flatMap(graft.sources.BasketSource.parseLine _)
     graft.operators.CoOccurrence.counts(baskets, maxWindow)
@@ -521,9 +515,23 @@ object StreamingOps {
     }
   }
 
+  /** The window pairs of a basket-line text stream, read
+    * `maxFilesPerTrigger` files per micro-batch. */
+  private def pairStream(spark: SparkSession, textDir: String,
+      maxFilesPerTrigger: Int): Dataset[graft.CoPair] = {
+    import spark.implicits._
+    val baskets = spark.readStream
+      .option("maxFilesPerTrigger", maxFilesPerTrigger)
+      .textFile(textDir)
+      .flatMap(graft.sources.BasketSource.parseLine _)
+    graft.plans.CoOccurWindow.pairs(baskets.select(col("products")))
+      .as[graft.CoPair]
+  }
+
   /** The flagship's marginal totals over a basket-line text stream via
     * [[CoOccurTotalsProcessor]]: parse → repeat-terminated window
-    * flatMap → groupByKey(product) → transformWithState.
+    * (the [[graft.plans.CoOccurWindow]] node) → groupByKey(product) →
+    * transformWithState.
     * `maxFilesPerTrigger` splits the bounded run into real
     * micro-batches so the state genuinely accumulates across triggers.
     *
@@ -542,12 +550,7 @@ object StreamingOps {
       ttl: Option[java.time.Duration] = None,
       maxFilesPerTrigger: Int = 1): Dataset[ProductTotal] = {
     import spark.implicits._
-    val pairs = spark.readStream
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .textFile(textDir)
-      .flatMap(graft.sources.BasketSource.parseLine _)
-      .flatMap(b =>
-        graft.operators.CoOccurrence.windowPairs(b.products))
+    val pairs = pairStream(spark, textDir, maxFilesPerTrigger)
     val timeMode =
       if (ttl.isDefined) org.apache.spark.sql.streaming.TimeMode.ProcessingTime()
       else org.apache.spark.sql.streaming.TimeMode.None()
@@ -712,13 +715,7 @@ object StreamingOps {
       initial: Dataset[ProductTotal],
       maxFilesPerTrigger: Int = 1): Dataset[ProductTotal] = {
     import spark.implicits._
-    val pairs = spark.readStream
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .textFile(textDir)
-      .flatMap(graft.sources.BasketSource.parseLine _)
-      .flatMap(b =>
-        graft.operators.CoOccurrence.windowPairs(b.products))
-    pairs.groupByKey(_.product)
+    pairStream(spark, textDir, maxFilesPerTrigger).groupByKey(_.product)
       .transformWithState(new CoOccurTotalsBootProcessor,
         org.apache.spark.sql.streaming.TimeMode.None(),
         org.apache.spark.sql.streaming.OutputMode.Update(),

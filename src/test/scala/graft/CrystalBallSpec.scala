@@ -1,7 +1,7 @@
 package graft
 
 import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM,
   ShuffleExchangeExec}
@@ -27,6 +27,12 @@ class CrystalBallSpec extends AnyFunSuite with CacheScoped {
       .collect()
       .map(r => (r.getString(0), r.getString(1)) -> r.getDouble(3))
       .toMap
+
+  /** Pair counts of the pure reference model, [[CoOccurrence.windowPairs]],
+    * over the collected baskets. */
+  private def referenceCounts(ds: Dataset[Basket]): Map[(String, String), Long] =
+    ds.collect().toSeq.flatMap(b => CoOccurrence.windowPairs(b.products))
+      .groupBy(p => (p.product, p.neighbor)).map { case (k, v) => k -> v.size.toLong }
 
   test("pair probabilities exactly match CrystalBallPair goldens") {
     val golden = Golden.pairs
@@ -75,8 +81,7 @@ class CrystalBallSpec extends AnyFunSuite with CacheScoped {
 
   test("SQL-composed window (pairsSql) equals flatMap window on fixture") {
     val ds = BasketSource.fromLines(spark, fixtureLines)
-    val a = CoOccurrence.pairs(ds).groupBy("product", "neighbor").count()
-      .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
+    val a = referenceCounts(ds)
     val df = ds.toDF()
     val b = CoOccurrence.pairsSql(df).groupBy("product", "neighbor").count()
       .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
@@ -89,9 +94,8 @@ class CrystalBallSpec extends AnyFunSuite with CacheScoped {
     val viaGen = ds.toDF().selectExpr("co_occur_pairs(products)")
       .groupBy("product", "neighbor").count()
       .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
-    val viaFlatMap = CoOccurrence.pairs(ds).groupBy("product", "neighbor").count()
-      .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
-    assert(viaGen == viaFlatMap)
+    val reference = referenceCounts(ds)
+    assert(viaGen == reference)
     // and through a SQL LATERAL VIEW
     ds.toDF().createOrReplaceTempView("fixture_baskets")
     val viaSql = spark.sql(
@@ -100,7 +104,7 @@ class CrystalBallSpec extends AnyFunSuite with CacheScoped {
         |LATERAL VIEW co_occur_pairs(products) c AS product, neighbor
         |GROUP BY 1, 2""".stripMargin)
       .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
-    assert(viaSql == viaFlatMap)
+    assert(viaSql == reference)
   }
 
   // -- edge-case micro-fixtures (FIXTURES.md §1) --------------------------
@@ -140,9 +144,7 @@ class CrystalBallSpec extends AnyFunSuite with CacheScoped {
     val viaGen = ds.toDF().selectExpr("co_occur_pairs(products)")
       .groupBy("product", "neighbor").count()
       .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
-    val viaFlatMap = CoOccurrence.pairs(ds).groupBy("product", "neighbor").count()
-      .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
-    assert(viaGen == viaFlatMap)
+    assert(viaGen == referenceCounts(ds))
   }
 
   test("driver entry point returns rows (smoke)") {

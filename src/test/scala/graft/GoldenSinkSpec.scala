@@ -192,27 +192,4 @@ class GoldenSinkSpec extends AnyFunSuite with CacheScoped {
       .collect().map(b => b.customer -> b.products).toMap
     assert(fromCsv == fromText && fromJson == fromText && fromXml == fromText)
   }
-
-  test("StripeAggregator UDAF equals groupBy+map_from_entries composition") {
-    import org.apache.spark.sql.functions._
-    import spark.implicits._
-    val counts = CoOccurrence.counts(BasketSource.fromLines(spark, fixtureLines))
-    val viaUdaf = counts.as[(String, String, Long)]
-      .groupByKey(_._1)
-      .mapValues(r => (r._2, r._3))
-      .agg(graft.functions.StripeAggregator.toColumn.name("stripe"))
-      .collect().toMap
-    val viaComposition = CrystalBall.stripeMap(
-        BasketSource.fromLines(spark, fixtureLines))
-      .collect()
-      .map(r => r.getString(0) -> r.getMap[String, Double](1))
-      .toMap
-    assert(viaUdaf.keySet == viaComposition.keySet)
-    viaUdaf.foreach { case (product, stripe) =>
-      val total = stripe.values.sum.toDouble
-      val probs = stripe.map { case (k, v) => k -> v / total }
-      assert(probs == viaComposition(product).toMap.map {
-        case (k, v) => k -> v }, s"stripe for $product")
-    }
-  }
 }

@@ -2684,7 +2684,7 @@ class PipelineSpec extends AnyFunSuite with CacheScoped {
     // self-join class (r17 crystalball_totals): one shared CoOccurWindow
     // node on both sides of a join — DeduplicateRelations must be able to
     // re-instance the node (MultiInstanceRelation.newInstance)
-    val counts = operators.CoOccurrence.countsFused(baskets)
+    val counts = operators.CoOccurrence.counts(baskets)
     val normalized = operators.CrystalBall.normalizeViaTotalsJoin(counts)
       .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2))).sorted
     val direct = counts.collect()
@@ -2694,7 +2694,7 @@ class PipelineSpec extends AnyFunSuite with CacheScoped {
     // pruning class (r17 stripe_lookup): a count() action prunes every
     // column — the node's references contract must keep the basket column
     // alive under it (an expression-free node looks prunable to Catalyst)
-    assert(operators.CoOccurrence.countsFused(baskets).count() == direct.length)
+    assert(operators.CoOccurrence.counts(baskets).count() == direct.length)
   }
 
   test("CoOccurWindow skips null baskets and fails fast on null elements") {
@@ -3602,7 +3602,7 @@ class PipelineSpec extends AnyFunSuite with CacheScoped {
     import org.apache.spark.sql.functions.col
     val dir = "/root/testdata/sf0.01"
     val edges = operators.CoOccurrence.counts(
-        graft.sources.BasketSource.basketsFromLineitem(spark, dir))
+        graft.sources.BasketSource.fromLineitem(spark, dir))
       .filter(col("cnt") >= 2)
       .select(col("product").as("src"), col("neighbor").as("dst"))
     assert(Graph.lpaConverged(edges, maxRounds = 16).count() > 0)
@@ -3665,7 +3665,7 @@ class PipelineSpec extends AnyFunSuite with CacheScoped {
     // (measured: 55) — raise both together after a fixture change
     val dir = "/root/testdata/sf0.01"
     val real = operators.CoOccurrence.counts(
-        graft.sources.BasketSource.basketsFromLineitem(spark, dir))
+        graft.sources.BasketSource.fromLineitem(spark, dir))
       .filter(col("cnt") >= 2)
       .select(col("product").as("src"), col("neighbor").as("dst"))
     assert(Graph.pageRankConverged(real, maxRounds = 80).count() > 0)
@@ -4056,7 +4056,7 @@ class PipelineSpec extends AnyFunSuite with CacheScoped {
     // at this scale, while k=2 cascades 1632 → 837 nodes over 8 rounds
     val dir = "/root/testdata/sf0.01"
     val edges = operators.CoOccurrence.counts(
-        graft.sources.BasketSource.basketsFromLineitem(spark, dir))
+        graft.sources.BasketSource.fromLineitem(spark, dir))
       .filter(col("cnt") >= 2)
       .select(col("product").as("src"), col("neighbor").as("dst"))
     val core = Graph.kcoreDecompose(edges, k = 2, maxRounds = 16)
@@ -4104,7 +4104,7 @@ class PipelineSpec extends AnyFunSuite with CacheScoped {
     // k = 3 matches the registration (the 4-truss is empty there)
     val dir = "/root/testdata/sf0.01"
     val edges = operators.CoOccurrence.counts(
-        graft.sources.BasketSource.basketsFromLineitem(spark, dir))
+        graft.sources.BasketSource.fromLineitem(spark, dir))
       .filter(col("cnt") >= 2)
       .select(col("product").as("src"), col("neighbor").as("dst"))
     val truss = Graph.ktrussDecompose(edges, k = 3, maxRounds = 12)
@@ -4146,7 +4146,7 @@ class PipelineSpec extends AnyFunSuite with CacheScoped {
     // claim is IDENTICAL output, so demand map equality incl. support
     val dir = "/root/testdata/sf0.01"
     val edges = operators.CoOccurrence.counts(
-        graft.sources.BasketSource.basketsFromLineitem(spark, dir))
+        graft.sources.BasketSource.fromLineitem(spark, dir))
       .filter(col("cnt") >= 2)
       .select(col("product").as("src"), col("neighbor").as("dst"))
     assert(dump(Graph.ktrussDecomposeInc(edges, k = 3, maxRounds = 12)) ==
@@ -4182,7 +4182,7 @@ class PipelineSpec extends AnyFunSuite with CacheScoped {
     // that relation has a row (it omits triangle-free nodes)
     val dir = "/root/testdata/sf0.01"
     val edges = operators.CoOccurrence.counts(
-        graft.sources.BasketSource.basketsFromLineitem(spark, dir))
+        graft.sources.BasketSource.fromLineitem(spark, dir))
       .filter(col("cnt") >= 2)
       .select(col("product").as("src"), col("neighbor").as("dst"))
     val cc = Graph.localClustering(edges).collect()

@@ -244,6 +244,47 @@ class PlanSpec extends AnyFunSuite with CacheScoped {
       s"CoOccurWindowExec not inside a codegen stage:\n$p")
   }
 
+  test("cooccur_counts, its capped twin and crystalball_pairs count on CoOccurWindow in the partial aggregate's codegen stage") {
+    import org.apache.spark.sql.catalyst.expressions.aggregate.Partial
+    import org.apache.spark.sql.execution.{DeserializeToObjectExec, InputAdapter,
+      MapPartitionsExec, SparkPlan, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.aggregate.{HashAggregateExec,
+      ObjectHashAggregateExec}
+    object Plans extends AdaptiveSparkPlanHelper
+    // the nodes of one generated stage, down to its input boundaries
+    def stageNodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case _: InputAdapter => Seq(p)
+      case _ => p +: p.children.flatMap(stageNodes)
+    }
+    // the nodes from an aggregate down to the basket build's list aggregate
+    def toBasketBuild(p: SparkPlan): Seq[SparkPlan] = p match {
+      case _: ObjectHashAggregateExec => Nil
+      case _ => p +: p.children.flatMap(toBasketBuild)
+    }
+    for (name <- Seq("cooccur_counts", "cooccur_counts_capped", "crystalball_pairs")) {
+      val df = SparkEntry.queries(name)(spark, sf)
+      df.collect()
+      val plan = df.queryExecution.executedPlan
+      val partials = Plans.collect(plan) { case w: WholeStageCodegenExec => w }
+        .flatMap { w =>
+          val nodes = stageNodes(w.child)
+          nodes.collect { case a: HashAggregateExec
+              if a.aggregateExpressions.nonEmpty &&
+                a.aggregateExpressions.forall(_.mode == Partial) => a }
+            .filter(_ => nodes.exists(_.isInstanceOf[graft.plans.CoOccurWindowExec]))
+        }
+      assert(partials.nonEmpty,
+        s"$name: no codegen stage holds CoOccurWindow under a partial aggregate:\n$plan")
+      val objectOps = partials.flatMap(toBasketBuild).filter {
+        case _: DeserializeToObjectExec | _: MapPartitionsExec => true
+        case _ => false
+      }
+      assert(objectOps.isEmpty,
+        s"$name: object operators between the basket build and the pair aggregate:\n$plan")
+    }
+  }
+
   test("minhash_lsh band buckets are capped via map-side WindowGroupLimit") {
     // the hot-bucket cap is the scale bound that keeps the band self-join
     // at Σ min(n,cap)² on duplicate-heavy corpora (the r11 x100 OOM
@@ -521,7 +562,7 @@ class PlanSpec extends AnyFunSuite with CacheScoped {
     import graft.sources.BasketSource
     // session A: build generation 0 as the bucketed base, INSERT
     // generation 1 into it (appendBucketed — same bucket spec)
-    val b = BasketSource.basketsFromLineitem(spark, sf)
+    val b = BasketSource.fromLineitem(spark, sf)
     val gen = crc32(col("customer").cast("binary")) % 3
     val tbl = "graft_cooccur_append_spec"
     graft.sources.TableSink.writeBucketed(
@@ -532,7 +573,7 @@ class PlanSpec extends AnyFunSuite with CacheScoped {
     // must serve the combined table with NO base rebuild — its merge
     // plan touches lineitem exactly once (the generation-2 delta)
     val s2 = spark.newSession()
-    val b2 = BasketSource.basketsFromLineitem(s2, sf)
+    val b2 = BasketSource.fromLineitem(s2, sf)
     val delta2 = CoOccurrence.counts(
       b2.filter(crc32(col("customer").cast("binary")) % 3 === 2))
     val merged = CoOccurrence.mergeCounts(s2.table(tbl), delta2)

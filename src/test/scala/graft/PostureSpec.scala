@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 import scala.util.matching.Regex
 import org.apache.spark.sql.functions.col
@@ -15,22 +15,35 @@ import graft.operators.Width
   */
 class PostureSpec extends AnyFunSuite with CacheScoped {
 
+  private val root = Paths.get("src/main/scala/graft")
+
+  /** The `SparkEntry*` query registry sources. */
+  private def registry: Seq[Path] = {
+    val files = Files.list(root).iterator().asScala.toSeq
+      .filter(_.getFileName.toString.startsWith("SparkEntry"))
+    assert(files.nonEmpty, s"no SparkEntry*.scala under $root")
+    files
+  }
+
   /** Every line matching `pattern` in the engine sources — the six engine
     * packages and the `SparkEntry*` query registry — outside the files
     * named in `allowed`, as `path:line: text`.
     */
   private def engineLines(pattern: Regex, allowed: Set[String]): Seq[String] = {
-    val root = Paths.get("src/main/scala/graft")
     val packages = Seq("operators", "functions", "optimizer", "plans",
         "sources", "streaming").flatMap { pkg =>
       val dir = root.resolve(pkg)
       assert(Files.isDirectory(dir), s"$dir missing")
       Files.walk(dir).iterator().asScala.toSeq
     }
-    val registry = Files.list(root).iterator().asScala.toSeq
-      .filter(_.getFileName.toString.startsWith("SparkEntry"))
-    assert(registry.nonEmpty, s"no SparkEntry*.scala under $root")
-    (packages ++ registry)
+    linesIn(packages ++ registry, pattern, allowed)
+  }
+
+  /** Every line matching `pattern` in the Scala `files` outside those
+    * named in `allowed`, as `path:line: text`. */
+  private def linesIn(files: Seq[Path], pattern: Regex,
+      allowed: Set[String] = Set.empty): Seq[String] =
+    files
       .filter(_.toString.endsWith(".scala"))
       .filterNot(f => allowed(f.getFileName.toString))
       .sortBy(_.toString)
@@ -40,7 +53,6 @@ class PostureSpec extends AnyFunSuite with CacheScoped {
             s"$f:${i + 1}: ${line.trim}"
         }
       }
-  }
 
   test("the test session carries the posture's recursion row limit") {
     // 350k anchor rows x 3 levels = 1.05M rows, past Spark's 1M default
@@ -69,6 +81,14 @@ class PostureSpec extends AnyFunSuite with CacheScoped {
   test("no query listener in the engine: persists live in a CacheScope") {
     val offenders = engineLines(
       """QueryExecutionListener|listenerManager""".r, Set.empty)
+    assert(offenders.isEmpty, offenders.mkString("\n", "\n", ""))
+  }
+
+  test("registry queries persist only through CacheScope.persist") {
+    // a raw persist whose unpersist is not in a finally leaks when a
+    // write between them throws
+    val offenders = linesIn(registry,
+      """(?<!CacheScope)\.persist\(|\.unpersist\(""".r)
     assert(offenders.isEmpty, offenders.mkString("\n", "\n", ""))
   }
 

@@ -81,20 +81,37 @@ class PropertySpec extends AnyFunSuite with CacheScoped {
     }
   }
 
+  /** The plan node's and the pure model's pairs over the 300 samples at
+    * `cap`, each as a multiset. */
+  private def nodeAndModelPairs(cap: Int)
+      : (Map[(String, String), Int], Map[(String, String), Int]) = {
+    val spark = Specs.spark
+    import spark.implicits._
+    val baskets = samples(300).map(_.toSeq)
+    val got = graft.plans.CoOccurWindow.pairs(baskets.toDF("products"), cap)
+      .collect().map(r => (r.getString(0), r.getString(1))).toSeq
+      .groupBy(identity).view.mapValues(_.size).toMap
+    val want = baskets.flatMap(b =>
+        CoOccurrence.windowPairs(b, cap).map(p => (p.product, p.neighbor)))
+      .groupBy(identity).view.mapValues(_.size).toMap
+    (got, want)
+  }
+
   test("CoOccurWindow plan node == windowPairs on 300 random baskets (Spark)") {
     // the custom physical node re-implements the scan over InternalRow
     // ArrayData; its multiset of pairs must equal the pure function's on
     // arbitrary baskets, not just the handpicked PipelineSpec fixtures
-    val spark = Specs.spark
-    import spark.implicits._
-    val baskets = samples(300).map(_.toSeq)
-    val got = graft.plans.CoOccurWindow.pairs(baskets.toDF("products"))
-      .collect().map(r => (r.getString(0), r.getString(1))).toSeq
-      .groupBy(identity).view.mapValues(_.size).toMap
-    val want = baskets.flatMap(b =>
-        CoOccurrence.windowPairs(b).map(p => (p.product, p.neighbor)))
-      .groupBy(identity).view.mapValues(_.size).toMap
+    val (got, want) = nodeAndModelPairs(Int.MaxValue)
     assert(got == want, "custom plan node diverged from windowPairs")
+  }
+
+  test("capped CoOccurWindow plan node == capped windowPairs on 300 random baskets (Spark)") {
+    // caps 1-4 truncate real windows of the 0-12 item samples; the
+    // near-Int.MaxValue cap must not wrap the node's long bound
+    for (cap <- (1 to 4) :+ (Int.MaxValue - 1)) {
+      val (got, want) = nodeAndModelPairs(cap)
+      assert(got == want, s"plan node diverged from windowPairs at cap $cap")
+    }
   }
 
   test("sorted_intersect_n == size(array_intersect) on random sorted-distinct sets (Spark)") {

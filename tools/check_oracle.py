@@ -8,7 +8,7 @@ oracle SQL from oracle_sql.json in DuckDB (tables registered as views over
 the sf parquet files), sort columns by name, and compare values.
 This is a local dev tool only — the engine itself never depends on it.
 """
-import sys, json, glob, math
+import sys, os, json, glob, math
 import duckdb
 
 def norm(v):
@@ -29,8 +29,17 @@ def table(rel):
     return ([cols[i] for i in order], [types[i] for i in order],
             [tuple(norm(r[i]) for i in order) for r in rows])
 
+def host_limits():
+    """DuckDB's defaults (80% of RAM, every core) let one pass take the
+    whole host; cap it at half the memory available now and half the
+    cores this process may run on."""
+    with open("/proc/meminfo") as f:
+        kb = next(int(l.split()[1]) for l in f if l.startswith("MemAvailable:"))
+    return {"memory_limit": f"{kb // 2 // 1024}MB",
+            "threads": max(1, len(os.sched_getaffinity(0)) // 2)}
+
 def main(out_dir, sf_dir, only=()):
-    con = duckdb.connect()
+    con = duckdb.connect(config=host_limits())
     for t in ["region","nation","customer","supplier","part","orders",
               "lineitem","events","documents","embeddings"]:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
