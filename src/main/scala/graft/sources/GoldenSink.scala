@@ -1,35 +1,54 @@
 package graft.sources
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+import org.apache.spark.sql.catalyst.expressions.Cast
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.PlanBridge
+import org.apache.spark.sql.types.StringType
+import graft.functions.{PairLine, StripeLine}
 
 /** Reference-format text sinks (SURVEY.md §2 O15/O16/O17) and the
   * reference's range-partitioned file layout (O11) — test/compat-only
   * concerns; engine-native output is parquet.
   *
-  * Formats (reference `src/CrystalBallPair.java:210-212`,
+  * Formats (O15; reference `src/CrystalBallPair.java:210-212`,
   * `src/CrystalBallStripe.java:188-201`):
   *   pair line:   `[a, b]\tprob`
   *   stripe line: `a\t{(b, prob), (b2, prob2), }`   (note trailing ", }")
+  *
+  * Each line is one engine expression ([[PairLine]], [[StripeLine]]) that
+  * writes the line's UTF-8 bytes in one pass over the row. A probability
+  * is printed by `java.lang.Double.toString`, the one formatter (it is
+  * also `cast(double AS STRING)`'s), through a per-task memo keyed by the
+  * double's bits, so each distinct probability is printed about once per
+  * task. The columns are built through `PlanBridge.column`, so the sinks
+  * need no function registration in the session.
   */
 object GoldenSink {
 
-  /** (product, neighbor, …, prob) → `[a, b]\tprob` lines. */
+  private def attr(name: String) = UnresolvedAttribute.quoted(name)
+
+  /** An id column as text, cast as `concat` casts a non-string input (the
+    * optimizer drops the cast from a string column). */
+  private def text(name: String) = Cast(attr(name), StringType)
+
+  /** (product, neighbor, …, prob) → `[a, b]\tprob` lines; a null
+    * product, neighbor or prob gives a null line. */
   def pairLines(pairs: DataFrame): DataFrame =
-    pairs.select(concat(lit("["), col("product"), lit(", "), col("neighbor"),
-      lit("]\t"), col("prob").cast("string")).as("value"))
+    pairs.select(PlanBridge.column(
+      PairLine(text("product"), text("neighbor"), attr("prob"))).as("value"))
 
   /** Stripe rows (product, stripe: array<struct<neighbor,prob>>) →
-    * `a\t{(b, p), …, }` lines (deterministic neighbor order — the
-    * reference's HashMap order is nondeterministic, so byte-diffing
-    * against goldens must compare parsed maps, SURVEY.md §5).
+    * `a\t{(b, p), …, }` lines in the stripe's own entry order
+    * (deterministic neighbor order — the reference's HashMap order is
+    * nondeterministic, so byte-diffing against goldens must compare parsed
+    * maps, SURVEY.md §5). A null product or stripe gives a null line; null
+    * entries and entries with a null field are skipped.
     */
   def stripeLines(stripes: DataFrame): DataFrame =
-    stripes.select(concat(col("product"), lit("\t{"),
-      array_join(transform(col("stripe"),
-        e => concat(lit("("), e.getField("neighbor"), lit(", "),
-          e.getField("prob").cast("string"), lit("), "))), ""),
-      lit("}")).as("value"))
+    stripes.select(PlanBridge.column(
+      StripeLine(text("product"), attr("stripe"))).as("value"))
 
   /** O16/O17: write text lines, overwriting the target (the reference's
     * `fs.delete` + TextOutputFormat).

@@ -1,12 +1,15 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.{array_join, col, concat, lit, transform}
+import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.{CoOccurrence, CrystalBall}
 import graft.sources.{BasketSource, GoldenSink}
 
-/** Reference-format output + UDAF stripe equivalence (SURVEY.md §2
-  * O8/O11/O15/O16/O17).
+/** Reference-format output (SURVEY.md §2 O11/O15/O16/O17): the line
+  * kernels against the golden files and against the Catalyst composition
+  * they replace, the fixed-cut file layout, and the basket sources.
   */
 class GoldenSinkSpec extends AnyFunSuite with CacheScoped {
 
@@ -22,12 +25,124 @@ class GoldenSinkSpec extends AnyFunSuite with CacheScoped {
     assert(got == Golden.pairLines)
   }
 
-  test("stripe text lines parse back to the golden probabilities") {
+  test("stripe text lines byte-match the golden Stripes output") {
     val stripes = CrystalBall.stripeProbabilities(
       BasketSource.fromLines(spark, fixtureLines))
-    val lines = GoldenSink.stripeLines(stripes).collect().map(_.getString(0))
-    assert(lines.forall(l => l.contains("\t{") && l.endsWith("), }")))
-    assert(lines.length == 6) // product 18 is only ever last -> empty window, no stripe
+    val lines = GoldenSink.stripeLines(stripes).collect().map(_.getString(0)).toSeq
+    // product 18 is only ever last -> empty window, no stripe; the 3-way
+    // parts in partition order are the products in sorted order
+    assert(lines == Golden.stripeParts("CrystalBallStripe").flatten)
+  }
+
+  /** The Catalyst composition the line kernels replace, kept as their
+    * reference model: `concat` + `cast(prob AS STRING)` for pair lines,
+    * `array_join(transform(…))` for stripe lines. */
+  private def pairModel(df: DataFrame): DataFrame =
+    df.select(concat(lit("["), col("product"), lit(", "), col("neighbor"),
+      lit("]\t"), col("prob").cast("string")).as("value"))
+
+  private def stripeModel(df: DataFrame): DataFrame =
+    df.select(concat(col("product"), lit("\t{"),
+      array_join(transform(col("stripe"),
+        e => concat(lit("("), e.getField("neighbor"), lit(", "),
+          e.getField("prob").cast("string"), lit("), "))), ""),
+      lit("}")).as("value"))
+
+  /** Probabilities the formatter must print exactly as the cast does. */
+  private val edgeProbs: Seq[java.lang.Double] = Seq[java.lang.Double](
+    0.0, -0.0, 0.5, 1.0, Double.NaN, Double.PositiveInfinity,
+    Double.NegativeInfinity, Double.MinPositiveValue,
+    java.lang.Double.MIN_NORMAL / 3, java.lang.Double.MIN_NORMAL,
+    Double.MaxValue, 1.0 / 3, 2.0 / 3, 0.1, 1.0 / 7, 1e-3, 1e-4, 1e7,
+    123456789.125, 4.0 / 11, null)
+
+  private val ids = Seq("12", "", "é", "製品", "🛒x", "a b", null)
+
+  /** More distinct values than the memo has slots, each seen twice a few
+    * thousand rows apart, so slots are hit, evicted and collided. */
+  private val manyProbs: Seq[java.lang.Double] = {
+    val distinct = (1 to 6000).map(i => i.toDouble / 6007)
+    (distinct ++ distinct.reverse ++ distinct).map(java.lang.Double.valueOf)
+  }
+
+  private val pairSchema = StructType(Seq(StructField("product", StringType),
+    StructField("neighbor", StringType), StructField("prob", DoubleType)))
+
+  private val entryType = StructType(Seq(StructField("neighbor", StringType),
+    StructField("prob", DoubleType)))
+
+  private val stripeSchema = StructType(Seq(StructField("product", StringType),
+    StructField("stripe", ArrayType(entryType))))
+
+  /** `rows` as one partition of an RDD-backed frame, so the projection
+    * runs in one task (not folded into a local relation on the driver). */
+  private def frame(s: SparkSession, rows: Seq[Row], schema: StructType) =
+    s.createDataFrame(s.sparkContext.parallelize(rows, 1), schema)
+
+  private def pairRows: Seq[Row] =
+    (for (a <- ids; b <- ids.take(3) :+ null) yield Row(a, b, 0.25)) ++
+      edgeProbs.map(p => Row("7", "8", p)) ++
+      manyProbs.zipWithIndex.map { case (p, i) => Row(s"p$i", "製品", p) }
+
+  private def stripeRows: Seq[Row] = {
+    def e(n: String, p: java.lang.Double) = Row(n, p)
+    Seq(
+      Row("a", Seq(e("b", 0.5), e("c", 0.25))),
+      Row(null, Seq(e("b", 0.5))),
+      Row("a", null),
+      Row("a", Seq()),
+      Row("a", Seq(null, e("b", 0.5), null)),
+      Row("a", Seq(null)),
+      Row("a", Seq(e("b", null), e(null, 0.5), e("c", 1.0), e(null, null))),
+      Row("🛒", Seq(e("é", 0.5), e("製品", 1.0 / 3), e("", 0.1))),
+      Row("x", edgeProbs.zipWithIndex.map { case (p, i) => e(s"n$i", p) })) ++
+      manyProbs.grouped(250).zipWithIndex.map { case (ps, i) =>
+        Row(s"s$i", ps.zipWithIndex.map { case (p, j) => e(ids(j % 6), p) })
+      }
+  }
+
+  /** A session with whole-stage codegen off, sharing the test SparkContext. */
+  private lazy val noWholeStage: SparkSession = {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.codegen.wholeStage", "false")
+    s
+  }
+
+  private def lines(df: DataFrame): Seq[String] =
+    df.collect().map(_.getString(0)).toSeq
+
+  for ((name, session) <- Seq[(String, () => SparkSession)](
+      "whole-stage codegen on" -> (() => spark),
+      "whole-stage codegen off" -> (() => noWholeStage))) {
+    test(s"pair line kernel prints what the concat/cast composition prints ($name)") {
+      val s = session()
+      val df = frame(s, pairRows, pairSchema)
+      val got = lines(GoldenSink.pairLines(df))
+      val want = lines(pairModel(df))
+      assert(got.size == pairRows.size)
+      assert(got == want)
+      assert(got.count(_ == null) == 11) // 6 + 4 null ids, 1 null prob
+      assert(got.contains("[7, 8]\t-0.0") && got.contains("[7, 8]\tNaN"))
+    }
+
+    test(s"stripe line kernel prints what the array_join/transform composition prints ($name)") {
+      val s = session()
+      val df = frame(s, stripeRows, stripeSchema)
+      val got = lines(GoldenSink.stripeLines(df))
+      val want = lines(stripeModel(df))
+      assert(got == want)
+      assert(got.take(7) == Seq("a\t{(b, 0.5), (c, 0.25), }", null, null,
+        "a\t{}", "a\t{(b, 0.5), }", "a\t{}", "a\t{(c, 1.0), }"))
+    }
+  }
+
+  test("line kernels cast non-string ids as concat does") {
+    import Specs.spark.implicits._
+    val pairs = Seq((10, 20L, 0.5), (-3, 4L, 0.25)).toDF("product", "neighbor", "prob")
+    assert(lines(GoldenSink.pairLines(pairs)) == lines(pairModel(pairs)))
+    val stripes = Seq((7, Seq(("8", 0.5)))).toDF("product", "stripe")
+      .selectExpr("product", "transform(stripe, e -> named_struct('neighbor', e._1, 'prob', e._2)) AS stripe")
+    assert(lines(GoldenSink.stripeLines(stripes)) == Seq("7\t{(8, 0.5), }"))
   }
 
   test("range partitioning reproduces the reference fixed cuts exactly") {

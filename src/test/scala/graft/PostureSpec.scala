@@ -11,7 +11,8 @@ import graft.operators.Width
 /** The one session posture ([[Bench.sessionBuilder]]) and the harness
   * rules around it: the test session carries the posture, engine code
   * reads no environment, one helper ([[Width.spread]]) reads the session's
-  * shuffle width, and failures report their cause.
+  * shuffle width, only [[org.apache.spark.sql.graft.PlanBridge]] reaches
+  * into Spark's classic internals, and failures report their cause.
   */
 class PostureSpec extends AnyFunSuite with CacheScoped {
 
@@ -75,6 +76,13 @@ class PostureSpec extends AnyFunSuite with CacheScoped {
     val offenders = engineLines(
       Regex.quote("\"spark.sql.shuffle.partitions\"").r,
       Set("Width.scala", "StreamingOps.scala"))
+    assert(offenders.isEmpty, offenders.mkString("\n", "\n", ""))
+  }
+
+  test("only PlanBridge reaches into org.apache.spark.sql.classic") {
+    val main = Paths.get("src/main/scala")
+    val offenders = linesIn(Files.walk(main).iterator().asScala.toSeq,
+      Regex.quote("org.apache.spark.sql.classic").r, Set("PlanBridge.scala"))
     assert(offenders.isEmpty, offenders.mkString("\n", "\n", ""))
   }
 
